@@ -161,7 +161,9 @@ def query_layer(
     qp = parse_geoservices_params(
         params, max_record_count=schema.max_record_count or max_record_count
     )
-    result = query_features(df, qp)
+    # geometry shaping (ref feature_server.py:183,259) happens in the
+    # engine: reproject to outSR, then thin with maxAllowableOffset
+    result = query_features(df, qp, src_srid=schema.srid or 4326)
 
     # extent-only short-circuit: envelope (reprojected to outSR when
     # requested) + count, no feature payload
@@ -220,30 +222,15 @@ def query_layer(
         }
         return payload, "application/json"
 
-    # post-query geometry shaping (ref feature_server.py:183,259): first
-    # reproject to outSR, then thin vertices with maxAllowableOffset —
-    # the tolerance is in output-SR units per the GeoServices spec
-    gcol = result.geometry_column
-    if result.features is not None and gcol and gcol in result.features.columns:
-        from pyspark.sql import functions as F
-
-        from iceberg_geospatial_api_server_spark.geo import functions as G
-
-        src_srid = schema.srid or 4326
-        if qp.out_sr is not None and qp.out_sr != src_srid:
-            # arbitrary supported pair (inverse(src)→4326→forward(dst) —
-            # the pyproj-hub route); raises ValueError on codes with no
-            # closed form (the reference rejects unknown EPSG via pyproj
-            # the same way)
-            result.features = result.features.withColumn(
-                gcol,
-                G.st_reproject_wkb(qp.out_sr, src_wkid=src_srid)(F.col(gcol)),
-            )
-            schema = replace(schema, srid=qp.out_sr)
-        if qp.max_allowable_offset and qp.max_allowable_offset > 0:
-            result.features = result.features.withColumn(
-                gcol, G.st_simplify(qp.max_allowable_offset)(F.col(gcol))
-            )
+    if (
+        qp.out_sr is not None
+        and result.features is not None
+        and result.geometry_column in result.features.columns
+    ):
+        schema = replace(schema, srid=qp.out_sr)
+    # execute: the page's one collect happens here, and the serializers
+    # only format the collected rows
+    result.rows  # noqa: B018
 
     if fmt == "pbf":
         return esri_pbf.serialize(result, schema), "application/x-protobuf"

@@ -13,7 +13,9 @@ from __future__ import annotations
 
 import os
 import re
+from collections.abc import Callable
 from dataclasses import dataclass, field
+from functools import cached_property
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -26,6 +28,10 @@ _VALID_NAME = re.compile(r"^[a-zA-Z_][a-zA-Z0-9_]*$")
 _GEOM_NAMES = {"geometry", "geom", "wkb_geometry", "shape", "location"}
 _ID_NAMES = {"objectid", "id", "fid", "gid", "ogc_fid"}
 
+# engine-owned columns a persisted layer may carry: the stable OID and the
+# bbox pre-filter doubles. They are never attribute fields of a layer.
+INTERNAL_COLS = {"__oid", "__bbox_xmin", "__bbox_ymin", "__bbox_xmax", "__bbox_ymax"}
+
 
 @dataclass
 class FeatureSchema:
@@ -36,9 +42,17 @@ class FeatureSchema:
     geometry_type: str = "Polygon"
     srid: int = 4326
     fields: list[dict] = field(default_factory=list)
-    extent: dict | None = None
     id_field: str = "objectid"
     max_record_count: int = 10000
+    # computes `extent` on its first read: a full-table aggregate that the
+    # query and tile handlers never need
+    extent_fn: Callable[[], dict | None] | None = field(
+        default=None, repr=False, compare=False
+    )
+
+    @cached_property
+    def extent(self) -> dict | None:
+        return self.extent_fn() if self.extent_fn is not None else None
 
 
 _TYPE_MAP = {
@@ -257,14 +271,16 @@ def detect_id_field(schema: T.StructType) -> str:
 def feature_schema(df: DataFrame, table_identifier: str = "table") -> FeatureSchema:
     """Build a FeatureSchema from a DataFrame (ref get_table_schema).
 
-    Extent/geometry-type detection is lazy (only when a geometry column
-    exists) and uses the same adaptive max_record_count policy as the
-    reference (engine.py:172-174: 500 for polygons else 10000).
+    The only Spark job is the geometry-type probe (one non-null geometry);
+    the extent is an aggregate over the whole table, computed on the first
+    read of `FeatureSchema.extent`. Fields omit the geometry and the
+    engine's internal columns. max_record_count follows the reference's
+    adaptive policy (engine.py:172-174: 500 for polygons else 10000).
     """
     geom_col = detect_geometry_column(df.schema)
     fields = []
     for f in df.schema.fields:
-        if f.name == geom_col:
+        if f.name == geom_col or f.name in INTERNAL_COLS:
             continue
         simple = "string"
         for cls, name in _TYPE_MAP.items():
@@ -274,7 +290,7 @@ def feature_schema(df: DataFrame, table_identifier: str = "table") -> FeatureSch
         fields.append({"name": f.name, "type": simple, "alias": f.name})
 
     geometry_type = "Polygon"
-    extent = None
+    extent_fn = None
     max_records = 10000
     if geom_col is not None:
         from iceberg_geospatial_api_server_spark.geo import functions as geo_f
@@ -283,9 +299,13 @@ def feature_schema(df: DataFrame, table_identifier: str = "table") -> FeatureSch
         sample = df.select(geom_col).filter(F.col(geom_col).isNotNull()).head(1)
         if sample:
             geometry_type = wkb_mod.geometry_type_name(sample[0][0])
-        ext_row = geo_f.extent(df, geom_col).head(1)
-        if ext_row and ext_row[0]["xmin"] is not None:
-            extent = ext_row[0].asDict()
+
+        def extent_fn() -> dict | None:
+            row = geo_f.extent(df, geom_col).head(1)
+            if row and row[0]["xmin"] is not None:
+                return row[0].asDict()
+            return None
+
         max_records = 500 if geometry_type in ("Polygon", "MultiPolygon") else 10000
 
     return FeatureSchema(
@@ -293,7 +313,7 @@ def feature_schema(df: DataFrame, table_identifier: str = "table") -> FeatureSch
         geometry_column=geom_col,
         geometry_type=geometry_type,
         fields=fields,
-        extent=extent,
         id_field=detect_id_field(df.schema),
         max_record_count=max_records,
+        extent_fn=extent_fn,
     )

@@ -17,10 +17,15 @@ from __future__ import annotations
 
 import re
 
-from pyspark.sql import DataFrame, Window
+import pandas as pd
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from iceberg_geospatial_api_server_spark.catalog import detect_geometry_column
+from iceberg_geospatial_api_server_spark.catalog import (
+    INTERNAL_COLS,
+    detect_geometry_column,
+)
 from iceberg_geospatial_api_server_spark.geo import functions as G
 from iceberg_geospatial_api_server_spark.geo import wkb as W
 from iceberg_geospatial_api_server_spark.models import QueryParams, QueryResult
@@ -70,8 +75,6 @@ _WHERE_DENY = {
     "NOW", "CURRENT_CATALOG", "CURRENT_DATABASE", "CURRENT_SCHEMA",
     "CURRENT_TIMEZONE",
 }
-
-_INTERNAL_COLS = {"__oid", "__bbox_xmin", "__bbox_ymin", "__bbox_xmax", "__bbox_ymax"}
 
 
 def sanitize_where(where: str) -> str:
@@ -225,8 +228,11 @@ def with_oid(df: DataFrame, order_cols: list[str] | None = None) -> DataFrame:
     deterministic hash sample of key values (both driver-bounded: never
     rows, only ≤ ``_OID_BUCKETS`` cut values). The global window remains
     only as the small-frame fallback when the sample is too thin to cut.
-    Production tables should still persist ``__oid`` at ingest; the
-    engine skips this step when it exists.
+
+    A frame that already carries ``__oid`` is returned unchanged and runs
+    no job: persisted layers store it at ingest
+    (``sources.geo_layer.lineitem_bbox_layer`` ranks by this function's
+    default order before writing), so served requests never rank.
     """
     if "__oid" in df.columns:
         return df
@@ -304,10 +310,10 @@ def with_oid(df: DataFrame, order_cols: list[str] | None = None) -> DataFrame:
 
 def _build_select(df: DataFrame, params: QueryParams, geom_col: str | None) -> list[str]:
     """Ref engine.py:648-683 _build_select."""
-    cols = [c for c in df.columns if c not in _INTERNAL_COLS]
+    cols = [c for c in df.columns if c not in INTERNAL_COLS]
     if params.out_fields and params.out_fields != "*":
         wanted = [f.strip() for f in params.out_fields.split(",")]
-        cols = [c for c in wanted if c in df.columns and c not in _INTERNAL_COLS]
+        cols = [c for c in wanted if c in df.columns and c not in INTERNAL_COLS]
         if geom_col and params.return_geometry and geom_col not in cols:
             cols.append(geom_col)
     if geom_col and not params.return_geometry:
@@ -315,11 +321,66 @@ def _build_select(df: DataFrame, params: QueryParams, geom_col: str | None) -> l
     return ["__oid"] + cols
 
 
+def _one_pass(df: DataFrame, *aggs) -> dict:
+    """Aggregates over `df` in ONE Spark job: they ride the scan as
+    observed metrics (per-task accumulators merged on the driver) while
+    the rows drain into the no-op sink. A DataFrame aggregate instead
+    shuffles, and adaptive execution submits the shuffle as a job of its
+    own. Select only the columns the aggregates need: the sink reads every
+    column of `df`."""
+    obs = Observation()
+    df.observe(obs, *aggs).write.format("noop").mode("overwrite").save()
+    return obs.get
+
+
+def _geometry_shaper(params: QueryParams, src_srid: int):
+    """outSR reprojection, then maxAllowableOffset thinning (the tolerance
+    is in output-SR units per the GeoServices spec), as one per-WKB
+    function — None when the request asks for neither."""
+    steps = []
+    if params.out_sr is not None and params.out_sr != src_srid:
+        steps.append(G.reproject_wkb_fn(params.out_sr, src_wkid=src_srid))
+    tol = params.max_allowable_offset
+    if tol and tol > 0:
+        steps.append(lambda buf: G.simplify_wkb(buf, tol))
+    if not steps:
+        return None
+
+    def shape(buf):
+        for step in steps:
+            buf = step(buf)
+        return buf
+
+    return shape
+
+
+def _shaped(df: DataFrame, geom_col: str, shape) -> DataFrame:
+    """`df` with the shaper applied to its geometry column in the plan."""
+    if shape is None:
+        return df
+
+    @F.pandas_udf(T.BinaryType())
+    def _shape(geom: pd.Series) -> pd.Series:
+        return pd.Series([None if b is None else shape(b) for b in geom])
+
+    return df.withColumn(geom_col, _shape(F.col(geom_col)))
+
+
+def _shape_rows(rows: list[dict], geom_col: str, shape) -> list[dict]:
+    """The same shaping over collected rows, on the driver."""
+    if shape is not None:
+        for r in rows:
+            if r[geom_col] is not None:
+                r[geom_col] = shape(bytes(r[geom_col]))
+    return rows
+
+
 def query_features(
     df: DataFrame,
     params: QueryParams,
     geom_col: str | None = None,
     oid_order: list[str] | None = None,
+    src_srid: int = 4326,
 ) -> QueryResult:
     """Execute the unified feature query (ref engine.py:282-463).
 
@@ -327,6 +388,14 @@ def query_features(
     attribute and bbox predicates into the parquet scan when __bbox_* are
     persisted, and the WKB exact predicate (pandas UDF) only runs on rows
     that survive the numeric pre-filters.
+
+    Count and extent run now, each as one job. Feature results stay lazy:
+    `features` is the plan of exactly the page, with outSR/
+    maxAllowableOffset shaping (geometries in `src_srid`). A bounded page
+    is answered by one collect of the same page plus one row (count,
+    exceededTransferLimit and the rows together), made on first access;
+    the shaping then runs on the driver over the collected page instead of
+    as a Python stage above the sort.
     """
     geom_col = geom_col or detect_geometry_column(df.schema)
     numbered = with_oid(df, oid_order)
@@ -335,7 +404,6 @@ def query_features(
 
     # spatial: bbox envelope (engine.py:318-339)
     if params.bbox is not None:
-        src = numbered
         if "__bbox_xmin" not in numbered.columns and geom_col:
             numbered = G.with_bbox(numbered, geom_col)
         xmin, ymin, xmax, ymax = params.bbox
@@ -407,50 +475,66 @@ def query_features(
 
     # count-only (engine.py:374-387)
     if params.return_count_only:
-        return QueryResult(features=None, count=filtered.count())
+        m = _one_pass(filtered.select(), F.count(F.lit(1)).alias("n"))
+        return QueryResult(features=None, count=int(m["n"]))
 
     # extent-only (GeoServices returnExtentOnly): envelope + count of the
-    # filtered set in ONE aggregation job — no features materialized
+    # filtered set in ONE pass — no features materialized
     if params.return_extent_only:
         if not geom_col:
-            return QueryResult(features=None, count=filtered.count())
+            m = _one_pass(filtered.select(), F.count(F.lit(1)).alias("n"))
+            return QueryResult(features=None, count=int(m["n"]))
         if "__bbox_xmin" not in filtered.columns:
             filtered = G.with_bbox(filtered, geom_col)
-        row = filtered.agg(
+        m = _one_pass(
+            filtered.select(*G.BBOX_COLS),
             F.min("__bbox_xmin").alias("xmin"),
             F.min("__bbox_ymin").alias("ymin"),
             F.max("__bbox_xmax").alias("xmax"),
             F.max("__bbox_ymax").alias("ymax"),
             F.count(F.lit(1)).alias("n"),
-        ).first()
+        )
         # rows may match while every geometry is NULL → aggregates come
         # back None; that's a null extent, not a crash
         ext = (
             None
-            if row["n"] == 0 or row["xmin"] is None
-            else {k: float(row[k]) for k in ("xmin", "ymin", "xmax", "ymax")}
+            if m["n"] == 0 or m["xmin"] is None
+            else {k: float(m[k]) for k in ("xmin", "ymin", "xmax", "ymax")}
         )
         return QueryResult(
             features=None,
             geometry_column=geom_col,
-            count=int(row["n"]),
+            count=int(m["n"]),
             extent=ext,
         )
 
-    # ids-only (engine.py:389-398)
+    def by_oid(rows: list[dict]) -> list[dict]:
+        return sorted(rows, key=lambda r: r["__oid"])
+
+    # ids-only (engine.py:389-398): collected unsorted (a distributed sort
+    # costs a sampling job and a shuffle) and sorted on the driver
     if params.return_ids_only:
-        ids = filtered.select("__oid").orderBy("__oid")
-        return QueryResult(features=ids, geometry_column=geom_col, count=ids.count())
+        ids = filtered.select("__oid")
+        return QueryResult(
+            features=ids.orderBy("__oid"),
+            geometry_column=geom_col,
+            probe=ids,
+            finish=by_oid,
+        )
 
     # objectIds fetch (engine.py:400-416)
     if params.object_ids is not None:
-        out = numbered.filter(F.col("__oid").isin([int(i) for i in params.object_ids]))
-        out = out.select(*_build_select(out, params, geom_col))
+        out = numbered.filter(
+            F.col("__oid").isin([int(i) for i in params.object_ids])
+        )
+        cols = _build_select(out, params, geom_col)
+        out = out.select(*cols)
+        shape = _geometry_shaper(params, src_srid) if geom_col in cols else None
         return QueryResult(
-            features=out,
+            features=_shaped(out, geom_col, shape),
             geometry_column=geom_col,
-            count=out.count(),
-            exceeded_transfer_limit=False,
+            probe=out,
+            finish=lambda rows: _shape_rows(by_oid(rows), geom_col, shape),
         )
 
     # order / pagination (engine.py:418-438). __oid is always appended as a
@@ -458,28 +542,28 @@ def query_features(
     # reference inherits DuckDB's stable sort; a distributed sort has no
     # such guarantee without an explicit total order).
     order = sanitize_order(params.order_by) if params.order_by else []
-    out = filtered.orderBy(*order, F.col("__oid"))
-
+    ordered = filtered.orderBy(*order, F.col("__oid"))
     offset = params.offset or 0
     if offset:
-        out = out.offset(offset)
-    if params.limit:
-        out = out.limit(int(params.limit))
+        ordered = ordered.offset(offset)
+    cols = _build_select(ordered, params, geom_col)
+    shape = _geometry_shaper(params, src_srid) if geom_col in cols else None
 
-    out = out.select(*_build_select(out, params, geom_col))
-
-    # exceededTransferLimit (engine.py:448-456)
-    exceeded = False
-    n = out.count()
-    if params.limit:
-        total = filtered.count()
-        exceeded = total > offset + int(params.limit)
-
+    if not params.limit:
+        # unbounded export: never collected here; count() counts it
+        return QueryResult(
+            features=_shaped(ordered.select(*cols), geom_col, shape),
+            geometry_column=geom_col,
+        )
+    # exceededTransferLimit (engine.py:448-456): one row past the page
+    # exists iff the filtered set holds more than offset + limit rows
+    limit = int(params.limit)
     return QueryResult(
-        features=out,
+        features=_shaped(ordered.limit(limit).select(*cols), geom_col, shape),
         geometry_column=geom_col,
-        count=n,
-        exceeded_transfer_limit=exceeded,
+        probe=ordered.limit(limit + 1).select(*cols),
+        limit=limit,
+        finish=lambda rows: _shape_rows(rows, geom_col, shape),
     )
 
 

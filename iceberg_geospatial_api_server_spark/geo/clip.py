@@ -315,7 +315,9 @@ def clip_features(
 
     Plan: the JVM bbox pre-filter on __bbox_* columns runs before the
     Arrow-batched clip UDF, so Python sees only intersecting candidates;
-    no shuffle anywhere.
+    no shuffle anywhere. Persisted __bbox_* columns are used as they are,
+    so the envelope reaches the parquet scan as pushed filters; otherwise
+    they are decoded from the WKB.
     """
     from iceberg_geospatial_api_server_spark.geo.functions import (
         bbox_intersects,
@@ -347,7 +349,8 @@ def clip_features(
             out["clip_ymax"].append(bx[3])
         return pd.DataFrame(out)
 
-    pre = with_bbox(df, geom_col).filter(bbox_intersects(xmin, ymin, xmax, ymax))
+    boxed = df if "__bbox_xmin" in df.columns else with_bbox(df, geom_col)
+    pre = boxed.filter(bbox_intersects(xmin, ymin, xmax, ymax))
     clipped = pre.withColumn("__clip", _clip(F.col(geom_col)))
     return (
         clipped.filter(F.col("__clip.geometry").isNotNull())

@@ -111,28 +111,25 @@ def st_geometrytype(geom: pd.Series) -> pd.Series:
     )
 
 
+def simplify_wkb(buf: bytes, tolerance: float) -> bytes:
+    """Douglas-Peucker thinning of one WKB line or polygon; other
+    geometry types pass through."""
+    code, payload = W.decode(buf)
+    if code == W.LINESTRING:
+        return W.encode_linestring(W.simplify_dp(payload, tolerance))
+    if code == W.POLYGON:
+        return W.encode_polygon([W.simplify_dp(r, tolerance) for r in payload])
+    return buf
+
+
 def st_simplify(tolerance: float):
     """ST_Simplify(geom, tol) — Douglas-Peucker (ref main.py:368-378)."""
 
     @pandas_udf(T.BinaryType())
     def _simplify(geom: pd.Series) -> pd.Series:
-        out = []
-        for buf in geom:
-            if buf is None:
-                out.append(None)
-                continue
-            code, payload = W.decode(buf)
-            if code == W.LINESTRING:
-                out.append(W.encode_linestring(W.simplify_dp(payload, tolerance)))
-            elif code == W.POLYGON:
-                out.append(
-                    W.encode_polygon(
-                        [W.simplify_dp(r, tolerance) for r in payload]
-                    )
-                )
-            else:
-                out.append(buf)
-        return pd.Series(out)
+        return pd.Series(
+            [None if b is None else simplify_wkb(b, tolerance) for b in geom]
+        )
 
     return _simplify
 
@@ -873,8 +870,8 @@ def pair_reproject_fn(src_wkid: int, dst_wkid: int):
     return _pair
 
 
-def st_reproject_wkb(wkid: int, src_wkid: int = 4326):
-    """Pandas-UDF factory: WKB in `src_wkid` → WKB in `wkid` for any
+def reproject_wkb_fn(wkid: int, src_wkid: int = 4326):
+    """Per-geometry transform: WKB in `src_wkid` → WKB in `wkid` for any
     supported pair (see pair_reproject_fn). Raises ValueError on
     unsupported codes so the API layer can reject bad outSR requests up
     front."""
@@ -883,15 +880,16 @@ def st_reproject_wkb(wkid: int, src_wkid: int = 4326):
         raise ValueError(
             f"unsupported outSR: no closed form for {src_wkid} -> {wkid}"
         )
+    return lambda buf: _transform_wkb(bytes(buf), fn)
+
+
+def st_reproject_wkb(wkid: int, src_wkid: int = 4326):
+    """Pandas-UDF factory over `reproject_wkb_fn`."""
+    reproject = reproject_wkb_fn(wkid, src_wkid)
 
     @pandas_udf(T.BinaryType())
     def _reproject(geom: pd.Series) -> pd.Series:
-        out = []
-        for buf in geom:
-            out.append(
-                None if buf is None else _transform_wkb(bytes(buf), fn)
-            )
-        return pd.Series(out)
+        return pd.Series([None if b is None else reproject(b) for b in geom])
 
     return _reproject
 

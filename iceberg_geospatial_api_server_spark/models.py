@@ -1,10 +1,10 @@
-"""Query parameter / result models (ref ``query/models.py``), as plain
-dataclasses — API-agnostic query semantics, not wire formats."""
+"""Query parameter / result models (ref ``query/models.py``) —
+API-agnostic query semantics, not wire formats."""
 
 from __future__ import annotations
 
 from dataclasses import dataclass
-from typing import Optional
+from typing import Callable, Optional
 
 from pyspark.sql import Column, DataFrame
 
@@ -48,17 +48,70 @@ class QueryParams:
     max_allowable_offset: Optional[float] = None
 
 
-@dataclass
 class QueryResult:
-    """Ref query/models.py:48-60 — features as a (lazy) DataFrame here."""
+    """Ref query/models.py:48-60 — features as a (lazy) DataFrame here.
 
-    features: Optional[DataFrame] = None
-    geometry_column: str = "geometry"
-    count: int = 0
-    exceeded_transfer_limit: bool = False
-    # filled only for returnExtentOnly: {xmin, ymin, xmax, ymax} or None
-    # when the filtered set is empty
-    extent: Optional[dict] = None
+    `features` is the lazy plan of exactly the result page. The rows a
+    serializer formats come from ONE collect, made on the first read of
+    `rows`, `count` or `exceeded_transfer_limit` and cached: of `probe`
+    (default: `features`), cut to `limit` rows when set — the engine
+    over-fetches one row past the page so that the collect also answers
+    exceededTransferLimit — then passed through `finish` (driver-side
+    geometry shaping, id sorting). An explicit `count` is used as is; a
+    result with neither `count` nor `probe` counts `features` without
+    collecting it (unbounded pages)."""
+
+    def __init__(
+        self,
+        features: Optional[DataFrame] = None,
+        geometry_column: str = "geometry",
+        count: Optional[int] = None,
+        exceeded_transfer_limit: bool = False,
+        extent: Optional[dict] = None,
+        probe: Optional[DataFrame] = None,
+        limit: Optional[int] = None,
+        finish: Optional[Callable[[list[dict]], list[dict]]] = None,
+    ):
+        self.features = features
+        self.geometry_column = geometry_column
+        # filled only for returnExtentOnly: {xmin, ymin, xmax, ymax} or
+        # None when the filtered set is empty
+        self.extent = extent
+        self._count = count
+        self._exceeded = exceeded_transfer_limit
+        self._probe = probe
+        self._limit = limit
+        self._finish = finish
+        self._rows: Optional[list[dict]] = None
+
+    @property
+    def rows(self) -> list[dict]:
+        """The page as one dict per feature, collected once."""
+        if self._rows is None:
+            plan = self._probe if self._probe is not None else self.features
+            rows = [] if plan is None else [r.asDict() for r in plan.collect()]
+            if self._limit is not None:
+                self._exceeded = len(rows) > self._limit
+                rows = rows[: self._limit]
+            self._rows = self._finish(rows) if self._finish else rows
+        return self._rows
+
+    @property
+    def count(self) -> int:
+        if self._count is None:
+            if self._probe is None and self._rows is None:
+                self._count = (
+                    0 if self.features is None else self.features.count()
+                )
+            else:
+                self._count = len(self.rows)
+        return self._count
+
+    @property
+    def exceeded_transfer_limit(self) -> bool:
+        if self._limit is not None:
+            self.rows  # noqa: B018 - the over-fetched collect sets it
+        return self._exceeded
 
     @classmethod
     def empty(cls) -> "QueryResult":

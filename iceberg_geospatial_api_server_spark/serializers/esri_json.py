@@ -1,23 +1,16 @@
 """QueryResult → Esri JSON FeatureSet (ref serializers/esri_json.py).
 
 Esri JSON differs from GeoJSON in geometry shape: points are {"x","y"},
-polygons {"rings":[...]}, polylines {"paths":[...]}. Geometry fragments
-are produced by an Arrow-batched kernel; attributes via JVM to_json.
+polygons {"rings":[...]}, polylines {"paths":[...]}. The page's collected
+rows are formatted on the driver, one feature per row.
 """
 
 from __future__ import annotations
 
-import json
-
-import pandas as pd
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
-
 from iceberg_geospatial_api_server_spark.catalog import FeatureSchema
 from iceberg_geospatial_api_server_spark.geo import wkb as W
 from iceberg_geospatial_api_server_spark.models import QueryResult
+from iceberg_geospatial_api_server_spark.serializers import json_attributes
 
 ESRI_GEOMETRY_TYPE_MAP = {
     "Point": "esriGeometryPoint",
@@ -61,33 +54,6 @@ def wkb_to_esri_geometry(buf: bytes) -> dict | None:
     return None
 
 
-@pandas_udf(T.StringType())
-def st_as_esri_json(geom: pd.Series) -> pd.Series:
-    return pd.Series(
-        [
-            json.dumps(wkb_to_esri_geometry(b)) if b is not None else None
-            for b in geom
-        ]
-    )
-
-
-def feature_lines(df: DataFrame, geom_col: str = "geometry") -> DataFrame:
-    props = [c for c in df.columns if c != geom_col and not c.startswith("__bbox_")]
-    feature = F.concat(
-        F.lit('{"attributes": '),
-        F.to_json(
-            F.struct(*[F.col(c) for c in props]),
-            # Esri/GeoJSON clients expect every declared field present —
-            # NULL attributes serialize as null, not as a missing key
-            {"ignoreNullFields": "false"},
-        ),
-        F.lit(', "geometry": '),
-        F.coalesce(st_as_esri_json(F.col(geom_col)), F.lit("null")),
-        F.lit("}"),
-    )
-    return df.select(feature.alias("feature_json"))
-
-
 def build_field_definitions(schema: FeatureSchema) -> list[dict]:
     return [
         {
@@ -105,27 +71,24 @@ def serialize(result: QueryResult, schema: FeatureSchema) -> dict:
         return {"count": result.count}
 
     cols = result.features.columns
+    rows = result.rows
     if cols == ["__oid"]:
-        oids = [r[0] for r in result.features.collect()]
-        return {"objectIdFieldName": "__oid", "objectIds": oids}
+        return {
+            "objectIdFieldName": "__oid",
+            "objectIds": [r["__oid"] for r in rows],
+        }
 
     geom_col = result.geometry_column
-    has_geom = geom_col in cols
-    if has_geom:
-        feats = [
-            json.loads(r[0])
-            for r in feature_lines(result.features, geom_col).collect()
-        ]
-    else:
-        feats = [
-            {"attributes": json.loads(r[0]), "geometry": None}
-            for r in result.features.select(
-                F.to_json(
-                    F.struct(*[F.col(c) for c in cols]),
-                    {"ignoreNullFields": "false"},
-                )
-            ).collect()
-        ]
+    props = [c for c in cols if c != geom_col and not c.startswith("__bbox_")]
+    feats = [
+        {
+            "attributes": json_attributes(r, props),
+            "geometry": None
+            if r.get(geom_col) is None
+            else wkb_to_esri_geometry(bytes(r[geom_col])),
+        }
+        for r in rows
+    ]
 
     fields = [
         {"name": "__oid", "type": "esriFieldTypeOID", "alias": "OID"}

@@ -7,18 +7,15 @@ ArcGIS clients read — quantized delta-encoded coordinates (Transform +
 packed sint64 coords + lengths), typed attribute Values, Fields,
 FeatureResult / CountResult / ObjectIdsResult envelopes.
 
-Per-feature encoding runs DISTRIBUTED (Arrow-batched kernel produces one
-serialized Feature message per row); the driver concatenates length-
-delimited fragments — it never holds decoded geometries.
+Each collected row of the bounded page encodes to one Feature message on
+the driver (`encode_row`), and the messages are concatenated as length-
+delimited fields of the FeatureResult.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
 
 from iceberg_geospatial_api_server_spark.catalog import FeatureSchema
 from iceberg_geospatial_api_server_spark.geo import wkb as W
@@ -186,30 +183,17 @@ def encode_transform() -> bytes:
     return ld(2, scale) + ld(3, translate)
 
 
-def _feature_kernel(attr_cols: list[tuple[str, str]], geom_col: str | None):
-    @pandas_udf(T.BinaryType())
-    def _encode(*cols: pd.Series) -> pd.Series:
-        n = len(cols[0]) if cols else 0
-        out = []
-        geom_series = cols[-1] if geom_col is not None else None
-        nattr = len(attr_cols)
-        for i in range(n):
-            vals = [
-                encode_value(cols[j].iloc[i], attr_cols[j][1])
-                for j in range(nattr)
-            ]
-            g = geom_series.iloc[i] if geom_series is not None else None
-            out.append(encode_feature(vals, bytes(g) if g is not None else None))
-        return pd.Series(out)
-
-    return _encode
-
-
-def serialize(
-    result: QueryResult,
-    schema: FeatureSchema,
-    max_allowable_offset: float | None = None,
+def encode_row(
+    row: dict, attr_cols: list[tuple[str, str]], geom_col: str | None
 ) -> bytes:
+    """One Feature message from a collected row: attribute Values in
+    `attr_cols` order (name, simple type), then the geometry."""
+    vals = [encode_value(row[c], t) for c, t in attr_cols]
+    g = row[geom_col] if geom_col is not None else None
+    return encode_feature(vals, bytes(g) if g is not None else None)
+
+
+def serialize(result: QueryResult, schema: FeatureSchema) -> bytes:
     """FeatureCollectionPBuffer bytes (ref esri_pbf.py:44-116).
 
     version=1 (string), queryResult=2 → featureResult=1 with
@@ -222,28 +206,16 @@ def serialize(
         return ld(1, b"") + ld(2, qr)
 
     cols = result.features.columns
+    rows = result.rows
     if cols == ["__oid"]:
-        oids = [int(r[0]) for r in result.features.collect()]
+        oids = [int(r["__oid"]) for r in rows]
         ids_result = ld(1, b"__oid") + packed_varints(3, oids)
         return ld(1, b"") + ld(2, ld(3, ids_result))
 
     geom_col = result.geometry_column if result.geometry_column in cols else None
-    if max_allowable_offset and geom_col:
-        from iceberg_geospatial_api_server_spark.geo.functions import st_simplify
-
-        result.features = result.features.withColumn(
-            geom_col, st_simplify(max_allowable_offset)(F.col(geom_col))
-        )
-
     type_by_name = {f["name"]: f["type"] for f in schema.fields}
     type_by_name["__oid"] = "int32"
     attr_cols = [(c, type_by_name.get(c, "string")) for c in cols if c != geom_col]
-
-    kernel = _feature_kernel(attr_cols, geom_col)
-    inputs = [F.col(c) for c, _ in attr_cols]
-    if geom_col:
-        inputs.append(F.col(geom_col))
-    frags = result.features.select(kernel(*inputs).alias("f")).collect()
 
     fr = ld(1, b"__oid")  # objectIdFieldName
     fr += vi(7, GEOM_TYPE_CODES.get(schema.geometry_type, 3))
@@ -254,7 +226,6 @@ def serialize(
     for name, ftype in attr_cols:
         if name != "__oid":
             fr += ld(13, encode_field(name, ftype))
-    for row in frags:
-        fr += ld(15, bytes(row[0]))
+    fr += b"".join(ld(15, encode_row(r, attr_cols, geom_col)) for r in rows)
 
     return ld(1, b"") + ld(2, ld(1, fr))

@@ -1,9 +1,10 @@
 """QueryResult → GeoJSON FeatureCollection (ref serializers/geojson.py).
 
-The per-feature JSON is built DISTRIBUTED: geometry decodes to a GeoJSON
-fragment in an Arrow-batched kernel, properties serialize with the JVM
-`to_json`, and the driver only concatenates the streamed fragments into
-the FeatureCollection envelope — so a 10^9-feature export never
+`serialize` formats a bounded page's collected rows on the driver.
+`stream` builds the per-feature JSON DISTRIBUTED: geometry decodes to a
+GeoJSON fragment in an Arrow-batched kernel, properties serialize with the
+JVM `to_json`, and the driver only concatenates the streamed fragments
+into the FeatureCollection envelope — so a 10^9-feature export never
 materializes python objects for the whole result on one node.
 """
 
@@ -15,8 +16,10 @@ from collections.abc import Iterator
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from iceberg_geospatial_api_server_spark.geo import wkb as W
 from iceberg_geospatial_api_server_spark.geo.functions import st_asgeojson
 from iceberg_geospatial_api_server_spark.models import QueryResult
+from iceberg_geospatial_api_server_spark.serializers import json_attributes
 
 
 def feature_lines(df: DataFrame, geom_col: str = "geometry") -> DataFrame:
@@ -45,12 +48,26 @@ def feature_lines(df: DataFrame, geom_col: str = "geometry") -> DataFrame:
 
 
 def serialize(result: QueryResult) -> dict:
-    """Full FeatureCollection dict (driver-side assembly of distributed
-    fragments; for HTTP streaming use `stream()` instead)."""
+    """Full FeatureCollection dict from the collected page (for HTTP
+    streaming of unbounded results use `stream()` instead)."""
     if result.features is None:
         return {"type": "FeatureCollection", "features": []}
-    lines = feature_lines(result.features, result.geometry_column)
-    feats = [json.loads(r[0]) for r in lines.collect()]
+    geom_col = result.geometry_column
+    props = [
+        c
+        for c in result.features.columns
+        if c != geom_col and not c.startswith("__bbox_")
+    ]
+    feats = [
+        {
+            "type": "Feature",
+            "geometry": None
+            if r.get(geom_col) is None
+            else W.to_geojson(bytes(r[geom_col])),
+            "properties": json_attributes(r, props),
+        }
+        for r in result.rows
+    ]
     return {"type": "FeatureCollection", "features": feats}
 
 

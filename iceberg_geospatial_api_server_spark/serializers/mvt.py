@@ -9,13 +9,13 @@ geometry) with the spec's command stream (MoveTo/LineTo/ClosePath,
 zigzag-delta ints in tile-local coords), layer-level key/value tables,
 and v2 winding rules (exterior rings clockwise in screen coords).
 
-Distributed shape (mirrors the Esri PBF serializer): the expensive parts
-— viewport clip to the buffered tile bbox and WKB → command-stream
-geometry encoding — run in Arrow-batched kernels over candidate rows
-selected by the JVM bbox pre-filter; the driver assembles the layer from
-the BOUNDED result page (a tile's feature count is capped exactly like a
-FeatureServer page), building the key/value tables from attribute
-fragments without ever decoding geometry.
+Per-request shape: the viewport clip to the buffered tile bbox runs in
+one Arrow-batched kernel over the candidate rows the bbox pre-filter
+selects (pushed into the scan when the layer persists __bbox_*); the
+BOUNDED clipped page (a tile's feature count is capped exactly like a
+FeatureServer page) is collected once, and the driver encodes each
+geometry's command stream and assembles the layer with its key/value
+tables. `render_tiles` pre-renders every tile of a zoom in one distributed pass.
 """
 
 from __future__ import annotations
@@ -241,14 +241,6 @@ def build_layer(
     return ld(3, layer)
 
 
-_GEOM_FRAGMENT_SCHEMA = T.StructType(
-    [
-        T.StructField("geom_type", T.IntegerType()),
-        T.StructField("commands", T.ArrayType(T.LongType())),
-    ]
-)
-
-
 def serialize_tile(
     df: DataFrame,
     z: int,
@@ -263,10 +255,9 @@ def serialize_tile(
     max_features: int = 10000,
 ) -> bytes:
     """One XYZ tile from a feature DataFrame: JVM bbox pre-filter →
-    distributed clip to the buffered tile envelope → distributed WKB →
-    command-stream encode → driver assembles the bounded page into a
-    Layer. Returns the serialized Tile bytes (b'' when the tile is
-    empty)."""
+    distributed clip to the buffered tile envelope → one collect of the
+    id-ordered page → driver-side command-stream encode into a Layer.
+    Returns the serialized Tile bytes (b'' when the tile is empty)."""
     from iceberg_geospatial_api_server_spark.geo.clip import clip_features
 
     xmin, ymin, xmax, ymax = tile_bbox(z, x, y)
@@ -276,47 +267,36 @@ def serialize_tile(
         df, (xmin - bx, ymin - by, xmax + bx, ymax + by), geom_col=geom_col
     )
 
-    @F.pandas_udf(_GEOM_FRAGMENT_SCHEMA)
-    def _encode(geoms: pd.Series) -> pd.DataFrame:
-        types, cmds = [], []
-        for buf in geoms:
-            res = (
-                encode_geometry_commands(bytes(buf), z, x, y, extent)
-                if buf is not None
-                else None
-            )
-            if res is None:
-                types.append(None)
-                cmds.append(None)
-            else:
-                types.append(res[0])
-                cmds.append(res[1])
-        return pd.DataFrame({"geom_type": types, "commands": cmds})
-
-    cols = list(out_fields or [])
-    if id_col and id_col not in cols:
-        cols = [id_col] + cols
+    fields = list(out_fields or [])
+    cols = [id_col] + fields if id_col and id_col not in fields else fields
     # deterministic page: order before limit (the engine's __oid page
     # convention) — an unordered limit returns a task-order-dependent
     # subset whenever a tile overflows max_features
-    page_order = (
-        [F.col(id_col)] if id_col else [F.md5(F.col(geom_col))]
+    page_order = [F.col(id_col)] if id_col else [F.md5(F.col(geom_col))]
+    ordered = clipped.orderBy(*page_order).select(
+        *dict.fromkeys([*cols, geom_col])
     )
-    page = (
-        clipped.withColumn("__mvt", _encode(F.col(geom_col)))
-        .filter(F.col("__mvt.geom_type").isNotNull())
-        .orderBy(*page_order)
-        .select(*cols, "__mvt.geom_type", "__mvt.commands")
-        .limit(max_features)
-        .collect()
-    )
-    if not page:
-        return b""
     features = []
-    for r in page:
-        attrs = {c: r[c] for c in (out_fields or [])}
-        fid = r[id_col] if id_col else None
-        features.append((fid, attrs, r["geom_type"], list(r["commands"])))
+    offset = 0
+    while len(features) < max_features:
+        chunk = (ordered.offset(offset) if offset else ordered).limit(
+            max_features
+        ).collect()
+        for r in chunk:
+            enc = encode_geometry_commands(bytes(r[geom_col]), z, x, y, extent)
+            if enc is None:
+                continue
+            fid = r[id_col] if id_col else None
+            features.append((fid, {c: r[c] for c in fields}, enc[0], enc[1]))
+            if len(features) == max_features:
+                break
+        if len(chunk) < max_features:
+            break
+        # a geometry collapsed below representability at this zoom: the
+        # page is short, so read on past it (never for point layers)
+        offset += max_features
+    if not features:
+        return b""
     return build_layer(layer_name, features, extent)
 
 

@@ -23,6 +23,24 @@ _ICEBERG_CONFS = {
 }
 
 
+def default_driver_memory(mem_total_kb: int | None = None) -> str:
+    """`spark.driver.memory` for a local session: a quarter of the host's
+    memory, clamped to 1-32 GiB. local[N] runs every executor thread in
+    the driver JVM, so Spark's 1g default means constant GC; a heap sized
+    past the host gets the JVM killed by the kernel instead.
+    `mem_total_kb` defaults to MemTotal from /proc/meminfo (8 GiB assumed
+    where that is unreadable)."""
+    if mem_total_kb is None:
+        try:
+            with open("/proc/meminfo") as f:
+                line = next(x for x in f if x.startswith("MemTotal:"))
+            mem_total_kb = int(line.split()[1])
+        except (OSError, StopIteration, ValueError, IndexError):
+            mem_total_kb = 8 * 1024 * 1024
+    gib = mem_total_kb // (4 * 1024 * 1024)
+    return f"{max(1, min(32, gib))}g"
+
+
 def get_spark(
     app_name: str = "iceberg-geospatial-api-server-spark",
     master: str | None = None,
@@ -45,12 +63,11 @@ def get_spark(
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
-        # --- memory: local[N] runs every executor thread inside the
-        # driver JVM, whose 1g default heap means constant GC with 32
-        # threads; size it to the machine (cluster deploys override) ---
+        # --- memory: sized to the host (cluster deploys override);
+        # SPARK_GRAFT_DRIVER_MEM wins when set ---
         .config(
             "spark.driver.memory",
-            os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"),
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
         )
         # --- planner/runtime ---
         .config("spark.sql.adaptive.enabled", "true")

@@ -57,24 +57,65 @@ def read_geojson(spark: SparkSession, path: str) -> DataFrame:
         geojson_to_wkb(F.col("geometry_json")).alias("geometry"), "props_json"
     )
 
-    # infer property schema from a sample, then extract as typed columns
-    sample = [r[0] for r in parsed.select("props_json").limit(100).collect() if r[0]]
-    keys: dict[str, str] = {}
-    for s in sample:
-        for k, v in json.loads(s).items():
-            t = (
-                "double"
-                if isinstance(v, float)
-                else "bigint"
-                if isinstance(v, bool) is False and isinstance(v, int)
-                else "string"
-            )
-            keys.setdefault(k, t)
+    # infer the property schema over every feature, then extract typed
+    # columns
+    keys = _property_types(parsed.select("props_json"))
     cols = [F.col("geometry")] + [
         F.get_json_object("props_json", f"$.{k}").cast(t).alias(k)
         for k, t in keys.items()
     ]
     return with_geom.select(*cols)
+
+
+# JSON value kinds, OR-ed together per property key
+_INT, _DOUBLE, _OTHER = 1, 2, 4
+
+
+def _property_types(props: DataFrame) -> dict[str, str]:
+    """Property key → SQL type, over EVERY feature in one job: integral
+    everywhere → bigint; numeric with some fractional value → double; any
+    other kind or mix (strings, booleans, objects) → string. Nulls carry
+    no type. Keys come in first-seen order. Each Arrow batch reports its
+    keys once, so the driver merges (distinct keys × batches) rows."""
+
+    def kind(v) -> int:
+        if v is None:
+            return 0
+        if isinstance(v, int) and not isinstance(v, bool):
+            return _INT
+        return _DOUBLE if isinstance(v, float) else _OTHER
+
+    def scan(batches):
+        for pdf in batches:
+            seen: dict[str, list[int]] = {}
+            for pos, s in zip(pdf["pos"], pdf["props_json"]):
+                for k, v in (json.loads(s) if s else {}).items():
+                    e = seen.setdefault(k, [0, int(pos)])
+                    e[0] |= kind(v)
+            yield pd.DataFrame(
+                {
+                    "key": list(seen),
+                    "kinds": [e[0] for e in seen.values()],
+                    "pos": [e[1] for e in seen.values()],
+                }
+            )
+
+    kinds: dict[str, int] = {}
+    first: dict[str, int] = {}
+    for r in (
+        props.withColumn("pos", F.monotonically_increasing_id())
+        .mapInPandas(scan, "key string, kinds int, pos long")
+        .collect()
+    ):
+        kinds[r["key"]] = kinds.get(r["key"], 0) | r["kinds"]
+        first[r["key"]] = min(first.get(r["key"], r["pos"]), r["pos"])
+
+    def sql_type(k: str) -> str:
+        if kinds[k] == _INT:
+            return "bigint"
+        return "double" if kinds[k] in (_DOUBLE, _INT | _DOUBLE) else "string"
+
+    return {k: sql_type(k) for k in sorted(first, key=first.get)}
 
 
 def read_geoparquet(spark: SparkSession, path: str) -> DataFrame:

@@ -342,3 +342,31 @@ def test_extent_out_sr_mercator_polar_clamp(spark):
     # clamped northern edge ≈ mercator(85.05112878) ≈ 20037508.34
     assert ext["ymax"] == pytest.approx(20037508.34, rel=1e-3)
     assert ext["ymin"] == pytest.approx(-20037508.34, rel=1e-3)
+
+
+def test_geojson_property_types_inferred_over_every_feature(spark, tmp_path):
+    """Types come from all 150 features, not a leading sample: a key first
+    seen at feature 130 is kept, an integral property that turns fractional
+    at feature 120 becomes double, and an int/string mix becomes string."""
+    feats = []
+    for i in range(150):
+        props = {"a": i if i < 120 else i + 0.5, "mixed": i if i < 140 else "x"}
+        if i >= 130:
+            props["late"] = f"v{i}"
+        feats.append({
+            "type": "Feature",
+            "geometry": {"type": "Point", "coordinates": [i * 0.1, 1.0]},
+            "properties": props,
+        })
+    p = tmp_path / "sparse.geojson"
+    p.write_text(json.dumps({"type": "FeatureCollection", "features": feats}))
+
+    df = ingest.read_geojson(spark, str(p))
+    assert dict(df.dtypes) == {
+        "geometry": "binary", "a": "double", "mixed": "string", "late": "string",
+    }
+    rows = sorted(df.drop("geometry").collect(), key=lambda r: r["a"])
+    assert len(rows) == 150
+    assert [r["a"] for r in rows[118:122]] == [118.0, 119.0, 120.5, 121.5]
+    assert rows[129]["late"] is None and rows[130]["late"] == "v130"
+    assert rows[0]["mixed"] == "0" and rows[149]["mixed"] == "x"
