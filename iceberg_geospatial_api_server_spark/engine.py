@@ -17,10 +17,8 @@ from __future__ import annotations
 
 import re
 
-import pandas as pd
 from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from iceberg_geospatial_api_server_spark.catalog import (
     INTERNAL_COLS,
@@ -354,20 +352,8 @@ def _geometry_shaper(params: QueryParams, src_srid: int):
     return shape
 
 
-def _shaped(df: DataFrame, geom_col: str, shape) -> DataFrame:
-    """`df` with the shaper applied to its geometry column in the plan."""
-    if shape is None:
-        return df
-
-    @F.pandas_udf(T.BinaryType())
-    def _shape(geom: pd.Series) -> pd.Series:
-        return pd.Series([None if b is None else shape(b) for b in geom])
-
-    return df.withColumn(geom_col, _shape(F.col(geom_col)))
-
-
 def _shape_rows(rows: list[dict], geom_col: str, shape) -> list[dict]:
-    """The same shaping over collected rows, on the driver."""
+    """The shaper applied to collected rows, on the driver."""
     if shape is not None:
         for r in rows:
             if r[geom_col] is not None:
@@ -390,12 +376,12 @@ def query_features(
     that survive the numeric pre-filters.
 
     Count and extent run now, each as one job. Feature results stay lazy:
-    `features` is the plan of exactly the page, with outSR/
-    maxAllowableOffset shaping (geometries in `src_srid`). A bounded page
-    is answered by one collect of the same page plus one row (count,
-    exceededTransferLimit and the rows together), made on first access;
-    the shaping then runs on the driver over the collected page instead of
-    as a Python stage above the sort.
+    `features` is the plan of exactly the page, geometries in `src_srid`.
+    A bounded page is answered by one collect of the same page plus one
+    row (count, exceededTransferLimit and the rows together), made on
+    first access. outSR/maxAllowableOffset shaping runs on the driver over
+    the collected rows (`QueryResult.rows`), not as a Python stage in the
+    plan.
     """
     geom_col = geom_col or detect_geometry_column(df.schema)
     numbered = with_oid(df, oid_order)
@@ -531,7 +517,7 @@ def query_features(
         out = out.select(*cols)
         shape = _geometry_shaper(params, src_srid) if geom_col in cols else None
         return QueryResult(
-            features=_shaped(out, geom_col, shape),
+            features=out,
             geometry_column=geom_col,
             probe=out,
             finish=lambda rows: _shape_rows(by_oid(rows), geom_col, shape),
@@ -552,14 +538,15 @@ def query_features(
     if not params.limit:
         # unbounded export: never collected here; count() counts it
         return QueryResult(
-            features=_shaped(ordered.select(*cols), geom_col, shape),
+            features=ordered.select(*cols),
             geometry_column=geom_col,
+            finish=lambda rows: _shape_rows(rows, geom_col, shape),
         )
     # exceededTransferLimit (engine.py:448-456): one row past the page
     # exists iff the filtered set holds more than offset + limit rows
     limit = int(params.limit)
     return QueryResult(
-        features=_shaped(ordered.limit(limit).select(*cols), geom_col, shape),
+        features=ordered.limit(limit).select(*cols),
         geometry_column=geom_col,
         probe=ordered.limit(limit + 1).select(*cols),
         limit=limit,

@@ -4,9 +4,11 @@ API-agnostic query semantics, not wire formats."""
 from __future__ import annotations
 
 from dataclasses import dataclass
+from datetime import timezone
 from typing import Callable, Optional
 
 from pyspark.sql import Column, DataFrame
+from pyspark.sql.types import TimestampType
 
 
 @dataclass
@@ -48,6 +50,20 @@ class QueryParams:
     max_allowable_offset: Optional[float] = None
 
 
+def _collect_rows(plan: DataFrame) -> list[dict]:
+    """`plan` collected as one dict per row, TIMESTAMP values made
+    UTC-aware (collect hands them back naive in local time)."""
+    ts_cols = [
+        f.name for f in plan.schema.fields if isinstance(f.dataType, TimestampType)
+    ]
+    rows = [r.asDict() for r in plan.collect()]
+    for r in rows:
+        for c in ts_cols:
+            if r[c] is not None:
+                r[c] = r[c].astimezone(timezone.utc)
+    return rows
+
+
 class QueryResult:
     """Ref query/models.py:48-60 — features as a (lazy) DataFrame here.
 
@@ -57,9 +73,15 @@ class QueryResult:
     (default: `features`), cut to `limit` rows when set — the engine
     over-fetches one row past the page so that the collect also answers
     exceededTransferLimit — then passed through `finish` (driver-side
-    geometry shaping, id sorting). An explicit `count` is used as is; a
-    result with neither `count` nor `probe` counts `features` without
-    collecting it (unbounded pages)."""
+    outSR/maxAllowableOffset shaping, id sorting; `features` itself is
+    never shaped). An explicit `count` is used as is; a result with
+    neither `count` nor `probe` counts `features` without collecting it
+    (unbounded pages).
+
+    Timestamp columns come back as UTC-aware datetimes. PySpark's collect
+    turns a TIMESTAMP into a naive datetime in the Python process's local
+    zone, which reads as a different instant wherever that zone is not
+    UTC; TIMESTAMP_NTZ values stay naive wall-clock times."""
 
     def __init__(
         self,
@@ -89,7 +111,7 @@ class QueryResult:
         """The page as one dict per feature, collected once."""
         if self._rows is None:
             plan = self._probe if self._probe is not None else self.features
-            rows = [] if plan is None else [r.asDict() for r in plan.collect()]
+            rows = [] if plan is None else _collect_rows(plan)
             if self._limit is not None:
                 self._exceeded = len(rows) > self._limit
                 rows = rows[: self._limit]

@@ -16,13 +16,18 @@ from pyspark.sql import Row
 
 def json_value(v):
     """One collected attribute value in the form Spark's `to_json` writes
-    it, which is what the JSON documents carried when rows were formatted
-    in the JVM."""
+    it under the UTC session zone, which is what the JSON documents
+    carried when rows were formatted in the JVM."""
     if isinstance(v, float) and not math.isfinite(v):
         return "NaN" if v != v else ("Infinity" if v > 0 else "-Infinity")
     if isinstance(v, Decimal):
         return float(v)
     if isinstance(v, datetime.datetime):
+        # TIMESTAMP (UTC-aware once collected through QueryResult.rows) in
+        # the session zone, UTC, as `...SSSZ`; TIMESTAMP_NTZ (naive) bare
+        if v.tzinfo is not None:
+            v = v.astimezone(datetime.timezone.utc).replace(tzinfo=None)
+            return v.isoformat(timespec="milliseconds") + "Z"
         return v.isoformat(timespec="milliseconds")
     if isinstance(v, datetime.date):
         return v.isoformat()

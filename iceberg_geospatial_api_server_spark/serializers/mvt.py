@@ -241,6 +241,63 @@ def build_layer(
     return ld(3, layer)
 
 
+_GEOM_FRAGMENT_SCHEMA = T.StructType(
+    [
+        T.StructField("geom_type", T.IntegerType()),
+        T.StructField("commands", T.ArrayType(T.LongType())),
+    ]
+)
+
+
+def _encoded_page(
+    clipped: DataFrame,
+    z: int,
+    x: int,
+    y: int,
+    extent: int,
+    page_order: list,
+    cols: list[str],
+    fields: list[str],
+    id_col: str | None,
+    geom_col: str,
+    max_features: int,
+) -> list[tuple[int | None, dict, int, list[int]]]:
+    """The tile's first `max_features` representable features in page
+    order, with command streams encoded by an Arrow-batched kernel ahead
+    of the limit."""
+
+    @F.pandas_udf(_GEOM_FRAGMENT_SCHEMA)
+    def _encode(geoms: pd.Series) -> pd.DataFrame:
+        encs = [
+            None if b is None else encode_geometry_commands(bytes(b), z, x, y, extent)
+            for b in geoms
+        ]
+        return pd.DataFrame(
+            {
+                "geom_type": [None if e is None else e[0] for e in encs],
+                "commands": [None if e is None else e[1] for e in encs],
+            }
+        )
+
+    page = (
+        clipped.withColumn("__mvt", _encode(F.col(geom_col)))
+        .filter(F.col("__mvt.geom_type").isNotNull())
+        .orderBy(*page_order)
+        .select(*cols, "__mvt.geom_type", "__mvt.commands")
+        .limit(max_features)
+        .collect()
+    )
+    return [
+        (
+            r[id_col] if id_col else None,
+            {c: r[c] for c in fields},
+            r["geom_type"],
+            list(r["commands"]),
+        )
+        for r in page
+    ]
+
+
 def serialize_tile(
     df: DataFrame,
     z: int,
@@ -256,8 +313,10 @@ def serialize_tile(
 ) -> bytes:
     """One XYZ tile from a feature DataFrame: JVM bbox pre-filter →
     distributed clip to the buffered tile envelope → one collect of the
-    id-ordered page → driver-side command-stream encode into a Layer.
-    Returns the serialized Tile bytes (b'' when the tile is empty)."""
+    id-ordered page → driver-side command-stream encode into a Layer (a
+    second, in-plan encode only when collapsed geometries short a full
+    page). Returns the serialized Tile bytes (b'' when the tile is
+    empty)."""
     from iceberg_geospatial_api_server_spark.geo.clip import clip_features
 
     xmin, ymin, xmax, ymax = tile_bbox(z, x, y)
@@ -273,28 +332,28 @@ def serialize_tile(
     # convention) — an unordered limit returns a task-order-dependent
     # subset whenever a tile overflows max_features
     page_order = [F.col(id_col)] if id_col else [F.md5(F.col(geom_col))]
-    ordered = clipped.orderBy(*page_order).select(
-        *dict.fromkeys([*cols, geom_col])
+    page = (
+        clipped.orderBy(*page_order)
+        .select(*dict.fromkeys([*cols, geom_col]))
+        .limit(max_features)
+        .collect()
     )
     features = []
-    offset = 0
-    while len(features) < max_features:
-        chunk = (ordered.offset(offset) if offset else ordered).limit(
-            max_features
-        ).collect()
-        for r in chunk:
-            enc = encode_geometry_commands(bytes(r[geom_col]), z, x, y, extent)
-            if enc is None:
-                continue
+    for r in page:
+        g = r[geom_col]
+        enc = None if g is None else encode_geometry_commands(bytes(g), z, x, y, extent)
+        if enc is not None:
             fid = r[id_col] if id_col else None
             features.append((fid, {c: r[c] for c in fields}, enc[0], enc[1]))
-            if len(features) == max_features:
-                break
-        if len(chunk) < max_features:
-            break
-        # a geometry collapsed below representability at this zoom: the
-        # page is short, so read on past it (never for point layers)
-        offset += max_features
+    if len(page) == max_features > len(features):
+        # geometries of a full page collapsed below representability at
+        # this zoom, so features past the cap may belong in the tile: one
+        # more collect encodes in the plan and drops the collapsed ones
+        # before the limit (never for point layers, which always encode)
+        features = _encoded_page(
+            clipped, z, x, y, extent, page_order, cols, fields, id_col,
+            geom_col, max_features,
+        )
     if not features:
         return b""
     return build_layer(layer_name, features, extent)

@@ -280,3 +280,44 @@ def test_render_tiles_matches_serialize_tile(spark):
             serialize_tile(df, z, tx, ty, layer_name="L", out_fields=["kind"], id_col="fid")
             == b""
         )
+
+
+def _square(x: float, y: float, d: float) -> bytes:
+    return W.encode_polygon(
+        [np.array([[x, y], [x + d, y], [x + d, y + d], [x, y + d], [x, y]])]
+    )
+
+
+def test_serialize_tile_fills_cap_past_collapsed_polygons(spark):
+    """Polygons that collapse below a pixel at the tile's zoom do not use
+    up max_features: the tile holds the first max_features representable
+    features by id, and two collects find them however many collapsed
+    polygons lead the page."""
+    tiny = [
+        {"fid": i, "geometry": _square(-170 + i * 0.5, 10.0, 1e-6), "kind": "tiny"}
+        for i in range(60)
+    ]
+    big = [
+        {"fid": 100 + i, "geometry": _square(-100 + 20 * i, -20.0, 5.0), "kind": "big"}
+        for i in range(8)
+    ]
+    df = spark.createDataFrame(pd.DataFrame(tiny + big))
+    kw = {"out_fields": ["kind"], "id_col": "fid"}
+    serialize_tile(df, 0, 0, 0, max_features=3, **kw)  # warm
+    sc = spark.sparkContext
+    sc.setJobGroup("mvt_collapsed_page", "")
+    try:
+        tile = serialize_tile(df, 0, 0, 0, max_features=3, **kw)
+        jobs = sc.statusTracker().getJobIdsForGroup("mvt_collapsed_page")
+    finally:
+        sc.setJobGroup("mvt_collapsed_page_done", "")
+    layer = decode_tile(tile)[0]
+    assert [f["id"] for f in layer["features"]] == [100, 101, 102]
+    assert layer["values"] == ["big"]
+    # one job per collect; reading on in pages of 3 would take 21
+    assert len(jobs) <= 2, len(jobs)
+
+    # a page with nothing collapsed is one collect, and equals the tile
+    # the in-plan encode builds
+    whole = decode_tile(serialize_tile(df, 0, 0, 0, max_features=68, **kw))[0]
+    assert [f["id"] for f in whole["features"]] == [100 + i for i in range(8)]

@@ -4,6 +4,7 @@ and the page/tile edge cases of the one over-fetched collect."""
 
 import json
 import math
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -254,3 +255,60 @@ def test_page_collects_once(spark, layer):
     )
     assert unbounded.count == df.filter(F.col("l_quantity") > 45).count()
     assert unbounded.exceeded_transfer_limit is False
+
+
+@pytest.fixture
+def new_york_tz(monkeypatch):
+    """The Python process in a zone that is not UTC (the JVM's session
+    zone stays UTC)."""
+    monkeypatch.setenv("TZ", "America/New_York")
+    time.tzset()
+    yield
+    monkeypatch.undo()
+    time.tzset()
+
+
+@pytest.mark.parametrize("fmt", ["json", "geojson", "pbf"])
+def test_page_timestamps_keep_their_instant(spark, new_york_tz, fmt):
+    """A TIMESTAMP attribute is served as the instant it stores, whatever
+    the serving process's local zone: Spark's `to_json` form in JSON, epoch
+    milliseconds in PBF. TIMESTAMP_NTZ stays a wall-clock time."""
+    from iceberg_geospatial_api_server_spark.geo import wkb as W
+
+    df = spark.sql(
+        "SELECT 1L AS fid, unhex('{}') AS geometry, "
+        "timestamp'2020-03-08 07:30:00.123' AS ts, "
+        "timestamp_ntz'2020-03-08 07:30:00.5' AS wall".format(
+            W.encode_point(1.0, 2.0).hex()
+        )
+    )
+    want = json.loads(
+        df.select(F.to_json(F.struct("ts", "wall"))).collect()[0][0]
+    )
+    assert want == {"ts": "2020-03-08T07:30:00.123Z", "wall": "2020-03-08T07:30:00.500"}
+    payload, _ = api.query_layer(df, {"f": fmt})
+    if fmt == "pbf":
+        qr = _parse_message(_parse_message(payload)[2][0])
+        fr = _parse_message(qr[1][0])
+        attrs = _parse_message(fr[15][0])[1]
+        ts = _parse_message(attrs[2])[8][0]  # __oid, fid, ts, wall
+        assert (ts >> 1) ^ -(ts & 1) == 1583652600123
+        return
+    key = "properties" if fmt == "geojson" else "attributes"
+    got = payload["features"][0][key]
+    assert {k: got[k] for k in ("ts", "wall")} == want
+
+
+def test_unbounded_page_is_shaped(layer):
+    """outSR and maxAllowableOffset shape the rows of an unbounded page
+    (resultRecordCount=0) exactly as they shape a bounded one."""
+    df = layer()
+    params = {
+        "f": "json", "where": "l_orderkey < 40", "outSR": "3857",
+        "maxAllowableOffset": "10",
+    }
+    bounded, _ = api.query_layer(df, {**params, "resultRecordCount": 1000})
+    unbounded, _ = api.query_layer(df, {**params, "resultRecordCount": 0})
+    assert unbounded["spatialReference"]["wkid"] == 3857
+    assert unbounded["features"] == bounded["features"] != []
+    assert abs(unbounded["features"][0]["geometry"]["x"]) > 180
