@@ -159,7 +159,7 @@ def query_layer(
     fmt = (out_format or params.get("f") or "json").lower()
     schema = feature_schema(df)
     qp = parse_geoservices_params(
-        params, max_record_count=schema.max_record_count or max_record_count
+        params, max_record_count=min(schema.max_record_count, max_record_count)
     )
     # geometry shaping (ref feature_server.py:183,259) happens in the
     # engine: reproject to outSR, then thin with maxAllowableOffset
@@ -283,6 +283,6 @@ def get_tile(
         geom_col=schema.geometry_column or "geometry",
         extent=extent,
         buffer_px=buffer_px,
-        max_features=schema.max_record_count or max_record_count,
+        max_features=min(schema.max_record_count, max_record_count),
     )
     return payload, "application/vnd.mapbox-vector-tile"

@@ -271,11 +271,14 @@ def detect_id_field(schema: T.StructType) -> str:
 def feature_schema(df: DataFrame, table_identifier: str = "table") -> FeatureSchema:
     """Build a FeatureSchema from a DataFrame (ref get_table_schema).
 
-    The only Spark job is the geometry-type probe (one non-null geometry);
-    the extent is an aggregate over the whole table, computed on the first
-    read of `FeatureSchema.extent`. Fields omit the geometry and the
-    engine's internal columns. max_record_count follows the reference's
-    adaptive policy (engine.py:172-174: 500 for polygons else 10000).
+    A geometry column that declares exactly one type in its field metadata
+    (`{"geometry_types": [...]}`, as `sources.geo_layer` writes at ingest)
+    runs no Spark job: the type comes from the schema. Otherwise the only
+    job is the geometry-type probe (one non-null geometry). The extent is
+    an aggregate over the whole table, computed on the first read of
+    `FeatureSchema.extent`. Fields omit the geometry and the engine's
+    internal columns. max_record_count follows the reference's adaptive
+    policy (engine.py:172-174: 500 for polygons else 10000).
     """
     geom_col = detect_geometry_column(df.schema)
     fields = []
@@ -296,9 +299,15 @@ def feature_schema(df: DataFrame, table_identifier: str = "table") -> FeatureSch
         from iceberg_geospatial_api_server_spark.geo import functions as geo_f
         from iceberg_geospatial_api_server_spark.geo import wkb as wkb_mod
 
-        sample = df.select(geom_col).filter(F.col(geom_col).isNotNull()).head(1)
-        if sample:
-            geometry_type = wkb_mod.geometry_type_name(sample[0][0])
+        declared = geo_f.declared_geometry_types(df, geom_col)
+        if len(declared) == 1:
+            geometry_type = declared[0]
+        else:
+            sample = (
+                df.select(geom_col).filter(F.col(geom_col).isNotNull()).head(1)
+            )
+            if sample:
+                geometry_type = wkb_mod.geometry_type_name(sample[0][0])
 
         def extent_fn() -> dict | None:
             row = geo_f.extent(df, geom_col).head(1)

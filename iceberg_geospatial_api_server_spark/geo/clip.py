@@ -318,9 +318,17 @@ def clip_features(
     no shuffle anywhere. Persisted __bbox_* columns are used as they are,
     so the envelope reaches the parquet scan as pushed filters; otherwise
     they are decoded from the WKB.
+
+    A geometry column that declares `["Point"]` in its field metadata
+    (`functions.declared_geometry_types`) runs no clip UDF: the inclusive
+    envelope pre-filter is already the exact clip of a single point
+    (`clip_wkb` keeps it iff it lies in the closed box, and NaN or NULL
+    envelopes fail the filter), so the candidates come back unchanged
+    with clip_area 0 and clip bounds equal to their envelope.
     """
     from iceberg_geospatial_api_server_spark.geo.functions import (
         bbox_intersects,
+        declared_geometry_types,
         with_bbox,
     )
 
@@ -351,7 +359,16 @@ def clip_features(
 
     boxed = df if "__bbox_xmin" in df.columns else with_bbox(df, geom_col)
     pre = boxed.filter(bbox_intersects(xmin, ymin, xmax, ymax))
-    clipped = pre.withColumn("__clip", _clip(F.col(geom_col)))
+    if declared_geometry_types(df, geom_col) == ["Point"]:
+        clip = F.struct(
+            F.col(geom_col).alias("geometry"),
+            F.lit(0.0).alias("clip_area"),
+            *(F.col(f"__bbox_{k}").alias(f"clip_{k}")
+              for k in ("xmin", "ymin", "xmax", "ymax")),
+        )
+    else:
+        clip = _clip(F.col(geom_col))
+    clipped = pre.withColumn("__clip", clip)
     return (
         clipped.filter(F.col("__clip.geometry").isNotNull())
         .withColumn(geom_col, F.col("__clip.geometry"))

@@ -72,8 +72,10 @@ def st_bbox(geom: pd.Series) -> pd.DataFrame:
 # also block pushing unrelated filters past the projection, which the
 # fq_* bbox pre-filter entries rely on. Placement constraint: like all
 # nondeterministic expressions, valid only inside Project/Filter/
-# Aggregate/Window.
-_st_bbox_single_eval = st_bbox.asNondeterministic()
+# Aggregate/Window. Its own UDF instance: asNondeterministic() flips
+# the flag on the UDF it is called on, so calling it on st_bbox would
+# make the default kernel nondeterministic too.
+_st_bbox_single_eval = pandas_udf(st_bbox.func, _BBOX_T).asNondeterministic()
 
 
 @pandas_udf(_XY_T)
@@ -257,6 +259,24 @@ def with_bbox(
         .withColumn("__bbox_ymax", F.col("__b.ymax"))
         .drop("__b")
     )
+
+
+def declare_geometry_types(
+    df: DataFrame, types: list[str], geom_col: str = "geometry"
+) -> DataFrame:
+    """`df` with `geom_col` declaring `types` in its field metadata, under
+    GeoParquet's `geometry_types` key. Parquet writes keep field metadata,
+    so a layer written from `df` declares them when read back."""
+    return df.withColumn(
+        geom_col,
+        F.col(geom_col).alias(geom_col, metadata={"geometry_types": types}),
+    )
+
+
+def declared_geometry_types(df: DataFrame, geom_col: str = "geometry") -> list[str]:
+    """The geometry types `geom_col` declares (`declare_geometry_types`);
+    [] when it declares none."""
+    return list(df.schema[geom_col].metadata.get("geometry_types", []))
 
 
 def extent(df: DataFrame, geom_col: str = "geometry") -> DataFrame:

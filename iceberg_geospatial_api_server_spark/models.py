@@ -50,7 +50,7 @@ class QueryParams:
     max_allowable_offset: Optional[float] = None
 
 
-def _collect_rows(plan: DataFrame) -> list[dict]:
+def collect_rows(plan: DataFrame) -> list[dict]:
     """`plan` collected as one dict per row, TIMESTAMP values made
     UTC-aware (collect hands them back naive in local time)."""
     ts_cols = [
@@ -111,7 +111,7 @@ class QueryResult:
         """The page as one dict per feature, collected once."""
         if self._rows is None:
             plan = self._probe if self._probe is not None else self.features
-            rows = [] if plan is None else _collect_rows(plan)
+            rows = [] if plan is None else collect_rows(plan)
             if self._limit is not None:
                 self._exceeded = len(rows) > self._limit
                 rows = rows[: self._limit]

@@ -21,6 +21,7 @@ tables. `render_tiles` pre-renders every tile of a zoom in one distributed pass.
 from __future__ import annotations
 
 import math
+from datetime import datetime, timezone
 
 import numpy as np
 import pandas as pd
@@ -29,6 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from iceberg_geospatial_api_server_spark.geo import wkb as W
+from iceberg_geospatial_api_server_spark.models import collect_rows
 from iceberg_geospatial_api_server_spark.serializers.esri_pbf import (
     ld,
     packed_varints,
@@ -183,7 +185,9 @@ def encode_geometry_commands(
 
 
 def encode_value(v) -> bytes:
-    """A vector_tile.Value message for one attribute value."""
+    """A vector_tile.Value message for one attribute value. A zone-aware
+    datetime (a collected TIMESTAMP) is written as its UTC wall-clock
+    time, whatever the serving process's local zone."""
     if isinstance(v, (bool, np.bool_)):
         return tag(7, _VARINT) + varint(1 if v else 0)
     if isinstance(v, (int, np.integer)):
@@ -195,6 +199,8 @@ def encode_value(v) -> bytes:
         import struct
 
         return tag(3, 1) + struct.pack("<d", float(v))
+    if isinstance(v, datetime) and v.tzinfo is not None:
+        v = v.astimezone(timezone.utc).replace(tzinfo=None)
     s = str(v).encode("utf-8")
     return tag(1, _LEN) + varint(len(s)) + s
 
@@ -279,13 +285,12 @@ def _encoded_page(
             }
         )
 
-    page = (
+    page = collect_rows(
         clipped.withColumn("__mvt", _encode(F.col(geom_col)))
         .filter(F.col("__mvt.geom_type").isNotNull())
         .orderBy(*page_order)
         .select(*cols, "__mvt.geom_type", "__mvt.commands")
         .limit(max_features)
-        .collect()
     )
     return [
         (
@@ -332,11 +337,10 @@ def serialize_tile(
     # convention) — an unordered limit returns a task-order-dependent
     # subset whenever a tile overflows max_features
     page_order = [F.col(id_col)] if id_col else [F.md5(F.col(geom_col))]
-    page = (
+    page = collect_rows(
         clipped.orderBy(*page_order)
         .select(*dict.fromkeys([*cols, geom_col]))
         .limit(max_features)
-        .collect()
     )
     features = []
     for r in page:

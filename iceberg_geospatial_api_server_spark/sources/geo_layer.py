@@ -16,6 +16,13 @@ over its default order (every sortable column in schema order), so a
 served request finds the column and never ranks the table: the same OIDs
 the engine would assign per request, at no per-request job.
 
+The geometry column declares the layer's geometry types as field
+metadata, `{"geometry_types": [...]}` (GeoParquet's key), gathered from
+the WKB headers in the same aggregate that computes the z-order bounds.
+Spark's parquet writer keeps field metadata in the footer and restores
+it on read, so `catalog.feature_schema` and `geo.clip.clip_features` read
+the types from the schema instead of probing the data on every request.
+
 The layer is built once per (sf_dir) and cached on disk keyed by the
 source path — exactly the persisted-signature-store contract the dedup
 family uses (pay the decode once at ingest, never per query). Writers
@@ -32,10 +39,11 @@ import tempfile
 import threading
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 # bump when the layer's schema/derivation changes — part of the cache key
-_LAYER_VERSION = 3
+_LAYER_VERSION = 4
 
 # layer path → its schema. Parquet schema inference reads a footer in a
 # Spark job on EVERY read; a layer path names immutable content (the
@@ -54,11 +62,16 @@ _V1_FLIP_LOCK = threading.Lock()
 
 
 def lineitem_bbox_layer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The lineitem point layer with PERSISTED __bbox_* and __oid columns,
-    building (and z-order clustering) it on first use per source dir.
-    Returns a DataFrame over the materialized parquet."""
+    """The lineitem point layer with PERSISTED __bbox_* and __oid columns
+    and declared `geometry_types`, building (and z-order clustering) it on
+    first use per source dir. Returns a DataFrame over the materialized
+    parquet."""
     from iceberg_geospatial_api_server_spark.engine import with_oid
-    from iceberg_geospatial_api_server_spark.geo.functions import with_bbox
+    from iceberg_geospatial_api_server_spark.geo.functions import (
+        declare_geometry_types,
+        with_bbox,
+    )
+    from iceberg_geospatial_api_server_spark.geo.wkb import geometry_type_name
     from iceberg_geospatial_api_server_spark.sources.synthetic import (
         lineitem_point_geoms,
     )
@@ -106,13 +119,18 @@ def lineitem_bbox_layer(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).select("geometry", "l_orderkey", "l_linenumber", "l_quantity")
             )
         )
+        # one aggregate answers the z-order bounds and the geometry types
+        # (byte order + type code: the first 5 bytes of each WKB)
+        zcols = ["__bbox_xmin", "__bbox_ymin"]
+        agg = geoms.agg(
+            *(f(c) for c in zcols for f in (F.min, F.max)),
+            F.collect_set(F.substring("geometry", 1, 5)),
+        ).first()
+        bounds = {c: (agg[2 * i], agg[2 * i + 1]) for i, c in enumerate(zcols)}
+        types = sorted({geometry_type_name(bytes(h)) for h in agg[-1]})
+        geoms = declare_geometry_types(geoms, types)
         build = tempfile.mkdtemp(prefix=f"li_bbox_{digest}_", dir=root)
-        zorder_write(
-            geoms,
-            ["__bbox_xmin", "__bbox_ymin"],
-            build,
-            n_files=8,
-        )
+        zorder_write(geoms, zcols, build, n_files=8, bounds=bounds)
         try:
             os.rename(build, path)
         except OSError:

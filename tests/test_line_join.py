@@ -60,3 +60,17 @@ def test_line_join_streaming_path_matches_broadcast(frames):
     )
     pairs = {(r.line_id, r.poly_id) for r in out.select("line_id", "poly_id").collect()}
     assert pairs == {(1, 1), (2, 1), (4, 1)}
+
+
+def test_default_st_bbox_stays_deterministic():
+    """The single-evaluation bbox kernel is its own UDF: marking it
+    nondeterministic leaves the default st_bbox deterministic, so filters
+    still push past its projection."""
+    from iceberg_geospatial_api_server_spark.geo.functions import (
+        _st_bbox_single_eval,
+        st_bbox,
+    )
+
+    assert st_bbox._unwrapped.deterministic is True
+    assert _st_bbox_single_eval._unwrapped.deterministic is False
+    assert _st_bbox_single_eval._unwrapped is not st_bbox._unwrapped

@@ -110,10 +110,11 @@ def test_layer_fields_hide_internal_columns(layer, points):
     assert len(page["features"]) == 3
 
 
-def test_served_requests_run_at_most_two_spark_jobs(spark, layer, points):
+def test_served_requests_run_one_spark_job(spark, layer, points):
     """Every request kind of the map_session mix — the layer resolved per
-    request, as a stateless handler does — runs at most two Spark jobs: the
-    geometry-type probe plus one scan collected once."""
+    request, as a stateless handler does — runs at most one Spark job: one
+    scan collected once. The geometry type comes from the layer's declared
+    `geometry_types`, so no probe runs."""
     sc = spark.sparkContext
     x0, y0 = points[len(points) // 2]
     box = f"{x0 - 30},{y0 - 20},{x0 + 30},{y0 + 20}"
@@ -159,7 +160,7 @@ def test_served_requests_run_at_most_two_spark_jobs(spark, layer, points):
             jobs = sc.statusTracker().getJobIdsForGroup(group)
         finally:
             sc.setJobGroup("served_jobs_done", "")
-        assert len(jobs) <= 2, (kind, len(jobs))
+        assert len(jobs) <= 1, (kind, len(jobs))
         # no vacuous answers
         if kind in tiles:
             assert decode_tile(payload)[0]["features"], kind
@@ -312,3 +313,122 @@ def test_unbounded_page_is_shaped(layer):
     assert unbounded["spatialReference"]["wkid"] == 3857
     assert unbounded["features"] == bounded["features"] != []
     assert abs(unbounded["features"][0]["geometry"]["x"]) > 180
+
+
+def _jobs_of(spark, group, fn):
+    """(fn's result, the Spark job ids it ran)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "")
+    try:
+        out = fn()
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc.setJobGroup(f"{group}_done", "")
+    return out, jobs
+
+
+def test_declared_geometry_types_survive_a_cold_read(spark, sf_dir):
+    """The layer's geometry field declares ["Point"] when it is read from
+    parquet with no remembered schema, and feature_schema then runs no
+    job."""
+    from iceberg_geospatial_api_server_spark.sources import geo_layer
+
+    geo_layer._SCHEMAS.clear()
+    df = geo_layer.lineitem_bbox_layer(spark, sf_dir)
+    assert df.schema["geometry"].metadata == {"geometry_types": ["Point"]}
+    schema, jobs = _jobs_of(spark, "declared_schema", lambda: feature_schema(df))
+    assert schema.geometry_type == "Point"
+    assert schema.max_record_count == 10000
+    assert jobs == []
+
+
+def test_undeclared_layer_still_probes(spark, sf_dir):
+    """A DataFrame whose geometry declares no types (the un-persisted
+    point layer) probes one geometry for its type, as before."""
+    df = _source_layer(spark, sf_dir)
+    assert df.schema["geometry"].metadata == {}
+    schema, jobs = _jobs_of(spark, "probed_schema", lambda: feature_schema(df))
+    assert schema.geometry_type == "Point"
+    assert len(jobs) == 1
+
+
+def _undeclared(df):
+    """`df` with the geometry field's metadata dropped."""
+    from iceberg_geospatial_api_server_spark.geo.functions import (
+        declared_geometry_types,
+    )
+
+    out = df.withColumn("geometry", F.col("geometry").cast("binary"))
+    assert declared_geometry_types(out) == []
+    return out
+
+
+def test_point_clip_shortcut_matches_clip_udf(layer, points):
+    """On a layer declaring ["Point"], clip_features returns the bbox
+    pre-filter's rows unchanged, with no Python stage, and the same rows
+    and clip values as the clip UDF — also for boxes whose edges pass
+    exactly through points, a zero-area box on one point, and a box that
+    holds no point."""
+    from iceberg_geospatial_api_server_spark.geo.clip import clip_features
+
+    (xa, ya), (xb, yb) = points[0], points[len(points) // 3]
+    boxes = [
+        (xa, ya, xa + 7.5, ya + 5.0),  # lower-left corner on a point
+        (xb - 7.5, yb - 5.0, xb, yb),  # upper-right corner on a point
+        (xa - 3.0, ya, xa + 3.0, ya + 2.0),  # lower edge through a point
+        (xa, ya, xa, ya),  # the point itself
+    ]
+    empty = (-180.0, 89.0, -179.0, 89.5)  # north of every point
+    cols = ["__oid", "geometry", "clip_area", "clip_xmin", "clip_ymin",
+            "clip_xmax", "clip_ymax"]
+
+    def rows(df):
+        return [
+            (r[0], bytes(r[1]), *r[2:])
+            for r in df.select(*cols).orderBy("__oid").collect()
+        ]
+
+    for box in [*boxes, empty]:
+        fast = clip_features(layer(), box)
+        plan = fast._jdf.queryExecution().executedPlan().toString()
+        assert "ArrowEvalPython" not in plan, box
+        slow = clip_features(_undeclared(layer()), box)
+        assert "ArrowEvalPython" in slow._jdf.queryExecution().executedPlan().toString()
+        got = rows(fast)
+        assert got == rows(slow), box
+        want = sum(
+            box[0] <= x <= box[2] and box[1] <= y <= box[3] for x, y in points
+        )
+        assert len(got) == want, box
+        assert (want == 0) == (box == empty), box
+
+
+def test_callers_max_record_count_caps_tiles_and_pages(layer, points):
+    """A caller's max_record_count below the layer's own cap applies: a
+    tile returns that many features, and a page without resultRecordCount
+    returns that many rows and reports exceededTransferLimit."""
+    df = layer()
+    z, x, y = _tile_of(*points[0], 5)
+    assert _in_tile(points, z, x, y) > 3
+    payload, _ = api.get_tile(df, z, x, y, out_fields=["l_quantity"],
+                              max_record_count=3)
+    assert len(decode_tile(payload)[0]["features"]) == 3
+
+    page, _ = api.query_layer(df, {"f": "json"}, max_record_count=5)
+    assert [f["attributes"]["__oid"] for f in page["features"]] == list(range(5))
+    assert page["exceededTransferLimit"] is True
+
+
+def test_tile_timestamps_keep_their_instant(spark, new_york_tz):
+    """A TIMESTAMP attribute in a tile is written as its UTC wall-clock
+    time whatever the serving process's local zone."""
+    from iceberg_geospatial_api_server_spark.geo import wkb as W
+
+    df = spark.sql(
+        "SELECT 1L AS fid, unhex('{}') AS geometry, "
+        "timestamp'2020-03-08 07:30:00.123' AS ts".format(
+            W.encode_point(1.0, 2.0).hex()
+        )
+    )
+    tile = decode_tile(serialize_tile(df, 0, 0, 0, out_fields=["ts"], id_col="fid"))
+    assert tile[0]["values"] == ["2020-03-08 07:30:00.123000"]
