@@ -373,7 +373,10 @@ def query_features(
     All filters are declarative Column expressions: Catalyst pushes the
     attribute and bbox predicates into the parquet scan when __bbox_* are
     persisted, and the WKB exact predicate (pandas UDF) only runs on rows
-    that survive the numeric pre-filters.
+    that survive the numeric pre-filters. On a geometry field declaring
+    only points (`geo.functions.declared_geometry_types` == ["Point"]) a
+    polygon filter needs no UDF: `geo.functions.point_in_polygon_sql`
+    tests the point in SQL.
 
     Count and extent run now, each as one job. Feature results stay lazy:
     `features` is the plan of exactly the page, geometries in `src_srid`.
@@ -419,7 +422,26 @@ def query_features(
                 raise ValueError(
                     f"unsupported spatial_rel: {params.spatial_rel}"
                 )
-            if geom_col:
+            points_only = (
+                geom_col is not None
+                and G.declared_geometry_types(df, geom_col) == ["Point"]
+            )
+            if points_only and params.spatial_rel == "contains":
+                # a point contains no polygon
+                cond = cond & F.lit(False)
+            elif points_only and (
+                pip_sql := G.point_in_polygon_sql(
+                    gbuf,
+                    "__bbox_xmin",
+                    "__bbox_ymin",
+                    on_edge=params.spatial_rel == "intersects",
+                )
+            ):
+                # a layer declaring only points: the ray-cast (and edge
+                # test) on the point itself as one SQL expression, in the
+                # scan's codegen stage — no Python worker, O(1) py4j calls
+                cond = cond & F.expr(pip_sql)
+            elif geom_col:
                 # exact per-feature kernel for ALL geometry types (ref
                 # engine.py:599-647 runs shapely exact per feature); the
                 # pandas UDF only sees bbox-surviving candidates. Point

@@ -279,16 +279,30 @@ def declared_geometry_types(df: DataFrame, geom_col: str = "geometry") -> list[s
     return list(df.schema[geom_col].metadata.get("geometry_types", []))
 
 
-def extent(df: DataFrame, geom_col: str = "geometry") -> DataFrame:
+def extent(df: DataFrame, geom_col: str = "geometry", *also: Column) -> DataFrame:
     """Aggregate extent = MIN/MAX over per-geometry bboxes
-    (ref api/main.py:206-222 _compute_bbox)."""
+    (ref api/main.py:206-222 _compute_bbox), plus the aggregates `also`
+    in the same pass."""
     src = df if "__bbox_xmin" in df.columns else with_bbox(df, geom_col)
     return src.agg(
         F.min("__bbox_xmin").alias("xmin"),
         F.min("__bbox_ymin").alias("ymin"),
         F.max("__bbox_xmax").alias("xmax"),
         F.max("__bbox_ymax").alias("ymax"),
+        *also,
     )
+
+
+def wkb_headers(geom_col: str = "geometry") -> Column:
+    """Aggregate: the set of distinct WKB headers in `geom_col` (byte
+    order + type code, the first 5 bytes); `header_types` names them."""
+    return F.collect_set(F.substring(geom_col, 1, 5))
+
+
+def header_types(headers) -> list[str]:
+    """The sorted geometry type names of collected `wkb_headers`, as
+    `declare_geometry_types` takes them."""
+    return sorted({W.geometry_type_name(bytes(h)) for h in headers})
 
 
 def grid_aggregate(
@@ -1020,6 +1034,88 @@ def st_point_on_edge(filter_wkb: bytes):
         return pd.Series(hit)
 
     return _on_edge
+
+
+# polygon filters with more edges than this keep the pandas-UDF kernels.
+# Spark compiles the literals into the generated code, so each new filter
+# pays a Janino compile that grows with its edge count: counting a fresh
+# n-gon over a 60k-point layer (4-CPU VM, 2 task slots) took 0.7-0.9 s in
+# SQL vs 1.0-1.2 s by UDF at n = 32, but 1.1 s vs 0.6-0.8 s at n = 64
+_PIP_SQL_MAX_EDGES = 32
+
+
+def _sql_double(v: float) -> str:
+    """`v` as a Spark SQL DOUBLE literal that parses back to exactly `v`."""
+    return f"({v!r}D)"
+
+
+def _balanced(op: str, terms: list[str]) -> str:
+    """`terms` joined by the associative `op`, nested as a balanced tree
+    so the parsed expression is log(len(terms)) deep."""
+    if len(terms) == 1:
+        return terms[0]
+    mid = len(terms) // 2
+    return f"({_balanced(op, terms[:mid])} {op} {_balanced(op, terms[mid:])})"
+
+
+def point_in_polygon_sql(
+    filter_wkb: bytes, x: str, y: str, on_edge: bool = False
+) -> str | None:
+    """Spark SQL text testing the point (`x`, `y`) (SQL expressions)
+    against the constant filter (multi)polygon: `st_contains_point`'s
+    ray-cast, OR-ed with `st_point_on_edge` when `on_edge`. Codegen runs
+    it in the scan's stage; no Python worker sees the rows.
+
+    The text repeats `_rings_contain` operation for operation, in IEEE
+    doubles on the JVM as numpy does: horizontal edges are skipped, each
+    polygon's rings follow the even-odd rule (XOR, `<>` on booleans),
+    polygons are OR-ed, and every constant numpy computes from the
+    filter alone (an edge's dx and dy, a bbox bound ± `_ON_EPS`) is
+    computed here in Python floats and written as an exact DOUBLE
+    literal. None when a constant is not finite or the filter has more
+    than `_PIP_SQL_MAX_EDGES` edges."""
+    code, payload = W.decode(filter_wkb)
+    polys = [payload] if code == W.POLYGON else list(payload)
+    edges = [
+        (float(a[0]), float(a[1]), float(b[0]), float(b[1]))
+        for rings in polys
+        for ring in rings
+        for a, b in zip(ring[:-1], ring[1:])
+    ]
+    if len(edges) > _PIP_SQL_MAX_EDGES:
+        return None
+    consts: list[float] = []
+
+    def lit(v: float) -> str:
+        consts.append(v)
+        return _sql_double(v)
+
+    inside = []
+    for rings in polys:
+        crossings = [
+            f"((({lit(y0)} > {y}) <> ({lit(y1)} > {y})) AND {x} < "
+            f"{lit(x1 - x0)} * ({y} - {lit(y0)}) / {lit(y1 - y0)} + {lit(x0)})"
+            for ring in rings
+            for (x0, y0), (x1, y1) in zip(ring[:-1].tolist(), ring[1:].tolist())
+            if y0 != y1
+        ]
+        if crossings:
+            inside.append(_balanced("<>", crossings))
+    if on_edge:
+        # _on_segment: |cross(p2 - p1, q - p1)| <= eps inside the edge's
+        # bbox grown by eps
+        for x0, y0, x1, y1 in edges:
+            inside.append(
+                f"(ABS({lit(x1 - x0)} * ({y} - {lit(y0)}) - {lit(y1 - y0)}"
+                f" * ({x} - {lit(x0)})) <= {lit(_ON_EPS)}"
+                f" AND {x} >= {lit(min(x0, x1) - _ON_EPS)}"
+                f" AND {x} <= {lit(max(x0, x1) + _ON_EPS)}"
+                f" AND {y} >= {lit(min(y0, y1) - _ON_EPS)}"
+                f" AND {y} <= {lit(max(y0, y1) + _ON_EPS)})"
+            )
+    if not all(math.isfinite(c) for c in consts):
+        return None
+    return _balanced("OR", inside) if inside else "FALSE"
 
 
 def _verts_on_edges(verts: np.ndarray, polys) -> bool:

@@ -53,6 +53,17 @@ def get_spark(
     ``shuffle_partitions`` defaults to the local core count: at 100 TB on a
     real cluster you would size this to ~2-3x total executor cores (or lean
     on AQE coalescing, which is enabled here and does it at runtime).
+
+    PySpark's DataFrame debugging (``spark.python.sql.dataFrameDebugging.
+    enabled``) is OFF: with it on, every ``F.*``/DataFrame call walks the
+    Python stack and makes about five extra py4j round trips to record its
+    call site, which is most of a served request's plan-building time.
+    The trade-off: an analysis error no longer carries the
+    ``== DataFrame ==`` block naming the Python line that built the failing
+    expression; its error class, SQLSTATE and message are unchanged. The
+    conf is static (fixed when the session starts) and PySpark reads it
+    once per process; pass ``extra_confs={"spark.python.sql.
+    dataFrameDebugging.enabled": "true"}`` to a new session to debug.
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
     if master is None:
@@ -96,6 +107,8 @@ def get_spark(
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         # quieter local runs
         .config("spark.ui.enabled", "false")
+        # no per-call Python call-site capture (see the docstring)
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
 
     if enable_iceberg:

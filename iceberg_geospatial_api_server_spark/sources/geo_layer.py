@@ -27,7 +27,9 @@ The layer is built once per (sf_dir) and cached on disk keyed by the
 source path — exactly the persisted-signature-store contract the dedup
 family uses (pay the decode once at ingest, never per query). Writers
 race safely: the build lands in a unique temp dir and moves into place
-with an atomic rename; a loser discards its copy.
+with an atomic rename; a loser discards its copy. Within a session the
+DataFrame over the built layer is memoized too (`_LAYERS`), so resolving
+the layer per request costs a stat and an 8 KB hash, not a parquet read.
 """
 
 from __future__ import annotations
@@ -40,19 +42,21 @@ import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
 
 # bump when the layer's schema/derivation changes — part of the cache key
 _LAYER_VERSION = 4
 
-# layer path → its schema. Parquet schema inference reads a footer in a
-# Spark job on EVERY read; a layer path names immutable content (the
-# digest), so the schema inferred by the first read serves every later one
-_SCHEMAS: dict[str, StructType] = {}
+# (applicationId, layer path) → (the layer's _SUCCESS stamp, DataFrame).
+# A fresh read costs a Spark job for parquet's schema inference, a file
+# listing and the useV1SourceList flip below; a layer path names immutable
+# content (the digest), so one read per session serves every request, the
+# way `sources.tables._TABLE_CACHE` serves tables. The stamp (inode and
+# mtime of _SUCCESS) makes a directory rebuilt at the same path miss.
+_LAYERS: dict[tuple[str, str], tuple[tuple[int, int], DataFrame]] = {}
 
-# serializes the session-conf useV1SourceList flip below: the flip
-# mutates SHARED SparkSession state, and a concurrent thread planning a
-# parquet read inside the flip window would silently get a DSv2
+# serializes writes to _LAYERS and the session-conf useV1SourceList flip
+# below: the flip mutates SHARED SparkSession state, and a concurrent
+# thread planning a parquet read inside the flip window would get a DSv2
 # relation — exactly the cross-query plan-shape drift the flip's
 # scoping exists to prevent (ADVICE r6). The lock covers the mutation
 # itself; a concurrent read elsewhere in the session is still exposed
@@ -65,13 +69,15 @@ def lineitem_bbox_layer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The lineitem point layer with PERSISTED __bbox_* and __oid columns
     and declared `geometry_types`, building (and z-order clustering) it on
     first use per source dir. Returns a DataFrame over the materialized
-    parquet."""
+    parquet: the same object on every call of one session while the
+    source and the built layer are unchanged (`_LAYERS`)."""
     from iceberg_geospatial_api_server_spark.engine import with_oid
     from iceberg_geospatial_api_server_spark.geo.functions import (
         declare_geometry_types,
+        header_types,
+        wkb_headers,
         with_bbox,
     )
-    from iceberg_geospatial_api_server_spark.geo.wkb import geometry_type_name
     from iceberg_geospatial_api_server_spark.sources.synthetic import (
         lineitem_point_geoms,
     )
@@ -105,7 +111,11 @@ def lineitem_bbox_layer(spark: SparkSession, sf_dir: str) -> DataFrame:
     digest = h.hexdigest()[:16]
     root = os.path.join(tempfile.gettempdir(), "spark_graft_layers")
     path = os.path.join(root, f"li_bbox_{digest}")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+    key = (spark.sparkContext.applicationId, path)
+    hit, stamp = _LAYERS.get(key), _stamp(path)
+    if hit is not None and hit[0] == stamp:
+        return hit[1]
+    if stamp is None:
         # a dest dir WITHOUT _SUCCESS is a crashed/partial build: remove
         # it so (a) the rename below can land and (b) we never read a
         # suspect layer
@@ -120,15 +130,12 @@ def lineitem_bbox_layer(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         # one aggregate answers the z-order bounds and the geometry types
-        # (byte order + type code: the first 5 bytes of each WKB)
         zcols = ["__bbox_xmin", "__bbox_ymin"]
         agg = geoms.agg(
-            *(f(c) for c in zcols for f in (F.min, F.max)),
-            F.collect_set(F.substring("geometry", 1, 5)),
+            *(f(c) for c in zcols for f in (F.min, F.max)), wkb_headers()
         ).first()
         bounds = {c: (agg[2 * i], agg[2 * i + 1]) for i, c in enumerate(zcols)}
-        types = sorted({geometry_type_name(bytes(h)) for h in agg[-1]})
-        geoms = declare_geometry_types(geoms, types)
+        geoms = declare_geometry_types(geoms, header_types(agg[-1]))
         build = tempfile.mkdtemp(prefix=f"li_bbox_{digest}_", dir=root)
         zorder_write(geoms, zcols, build, n_files=8, bounds=bounds)
         try:
@@ -144,20 +151,31 @@ def lineitem_bbox_layer(spark: SparkSession, sf_dir: str) -> DataFrame:
     # load() time, so scoping the flip to this one read keeps every
     # other query's plan shape untouched (tests/test_plans.py asserts
     # the resulting PushedAggregation).
-    key = "spark.sql.sources.useV1SourceList"
+    flip = "spark.sql.sources.useV1SourceList"
     with _V1_FLIP_LOCK:
-        prev = spark.conf.get(key)
+        prev = spark.conf.get(flip)
         try:
             spark.conf.set(
-                key,
+                flip,
                 ",".join(
                     s for s in prev.split(",") if s.strip() != "parquet"
                 ),
             )
-            schema = _SCHEMAS.get(path)
-            reader = spark.read if schema is None else spark.read.schema(schema)
-            df = reader.parquet(path)
-            _SCHEMAS[path] = df.schema
-            return df
+            df = spark.read.parquet(path)
         finally:
-            spark.conf.set(key, prev)
+            spark.conf.set(flip, prev)
+        # plans of stopped sessions are dead weight
+        for k in [k for k in _LAYERS if k[0] != key[0]]:
+            del _LAYERS[k]
+        _LAYERS[key] = (_stamp(path), df)
+    return df
+
+
+def _stamp(path: str) -> tuple[int, int] | None:
+    """(inode, mtime) of the layer's _SUCCESS marker; None while the layer
+    is unbuilt."""
+    try:
+        st = os.stat(os.path.join(path, "_SUCCESS"))
+    except FileNotFoundError:
+        return None
+    return st.st_ino, st.st_mtime_ns

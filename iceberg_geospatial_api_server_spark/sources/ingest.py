@@ -123,8 +123,13 @@ def read_geoparquet(spark: SparkSession, path: str) -> DataFrame:
 
     Geometry column/encoding detected from the `geo` file metadata (ref
     main.py:517-533 _detect_geom_column_geoparquet); WKB passes through,
-    WKT converts."""
-    geom_col, encoding = detect_geoparquet_geometry(path)
+    WKT converts. The column's `geometry_types` become the `geometry`
+    field's declared types (`geo.functions.declare_geometry_types`), so
+    serving the upload probes no row for its type."""
+    from iceberg_geospatial_api_server_spark.geo import functions as G
+
+    geom_col, meta = _geo_column(path)
+    encoding = meta.get("encoding", "WKB")
     df = spark.read.parquet(path)
     if geom_col in df.columns:
         gtype = dict(df.dtypes).get(geom_col, "")
@@ -138,11 +143,20 @@ def read_geoparquet(spark: SparkSession, path: str) -> DataFrame:
             df = df.withColumn(geom_col, wkt_to_wkb(F.col(geom_col)))
         others = [c for c in df.columns if c != geom_col]
         df = df.select(F.col(geom_col).alias("geometry"), *others)
+        if meta.get("geometry_types"):
+            df = G.declare_geometry_types(df, meta["geometry_types"])
     return df
 
 
 def detect_geoparquet_geometry(path: str) -> tuple[str, str]:
     """Read the `geo` key from parquet file metadata (ref main.py:517-533)."""
+    geom_col, meta = _geo_column(path)
+    return geom_col, meta.get("encoding", "WKB")
+
+
+def _geo_column(path: str) -> tuple[str, dict]:
+    """The primary geometry column named by the `geo` file metadata, and
+    that column's entry there ({} when the file has none)."""
     import pyarrow.parquet as pq
 
     target = path
@@ -153,8 +167,7 @@ def detect_geoparquet_geometry(path: str) -> tuple[str, str]:
     meta = pq.ParquetFile(target).schema_arrow.metadata or {}
     geo = json.loads(meta.get(b"geo", b"{}"))
     geom_col = geo.get("primary_column", "geometry")
-    enc = geo.get("columns", {}).get(geom_col, {}).get("encoding", "WKB")
-    return geom_col, enc
+    return geom_col, geo.get("columns", {}).get(geom_col, {})
 
 
 def write_geoparquet(
@@ -162,15 +175,18 @@ def write_geoparquet(
 ) -> None:
     """Write GeoParquet: parquet + standard `geo` metadata (ref
     main.py:455-469 uses DuckDB COPY; we stamp the metadata with pyarrow
-    after a distributed parquet write)."""
+    after a distributed parquet write). The column's `bbox` and
+    `geometry_types` come from one aggregate."""
     from iceberg_geospatial_api_server_spark.geo import functions as G
 
-    ext = None
+    ext, types = None, []
     if geom_col in df.columns:
-        row = G.extent(df, geom_col).head(1)
+        row = G.extent(df, geom_col, G.wkb_headers(geom_col).alias("heads")).head(1)
         if row and row[0]["xmin"] is not None:
             d = row[0].asDict()
             ext = [d["xmin"], d["ymin"], d["xmax"], d["ymax"]]
+        if row:
+            types = G.header_types(row[0]["heads"])
 
     df.write.mode(mode).parquet(path)
 
@@ -180,7 +196,7 @@ def write_geoparquet(
         "columns": {
             geom_col: {
                 "encoding": "WKB",
-                "geometry_types": [],
+                "geometry_types": types,
                 **({"bbox": ext} if ext else {}),
             }
         },

@@ -2,6 +2,7 @@
 translation (mirrors reference test_geoservices_query.py)."""
 
 import json
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -13,6 +14,7 @@ from iceberg_geospatial_api_server_spark.api import (
 )
 from iceberg_geospatial_api_server_spark.geo import wkb as W
 from iceberg_geospatial_api_server_spark.sources import ingest
+from test_served_path import _jobs_of
 
 
 @pytest.fixture(scope="module")
@@ -68,6 +70,77 @@ def test_geoparquet_roundtrip(spark, tables, tmp_path):
     assert back.count() == 200
     buf = bytes(back.select("geometry").first()[0])
     assert W.geometry_type_name(buf) == "Point"
+
+
+def _file_geometry_types(path):
+    import pyarrow.parquet as pq
+
+    part = next(f for f in sorted(os.listdir(path)) if f.endswith(".parquet"))
+    geo = json.loads(pq.ParquetFile(os.path.join(path, part)).schema_arrow.metadata[b"geo"])
+    return geo["columns"]["geometry"]["geometry_types"]
+
+
+def test_point_upload_declares_its_type(spark, tables, tmp_path):
+    """A point-only GeoParquet upload declares ["Point"] in its `geo`
+    metadata and, read back, on its geometry field: feature_schema runs no
+    probe job, and a polygon filter tests points in SQL (no point-in-polygon
+    UDF) with the UDF path's answer."""
+    from iceberg_geospatial_api_server_spark import api
+    from iceberg_geospatial_api_server_spark.catalog import feature_schema
+    from iceberg_geospatial_api_server_spark.engine import query_features
+    from iceberg_geospatial_api_server_spark.geo.functions import (
+        declared_geometry_types,
+    )
+    from iceberg_geospatial_api_server_spark.sources.synthetic import (
+        lineitem_point_geoms,
+    )
+
+    src = lineitem_point_geoms(tables["lineitem"]).select(
+        "geometry", "l_orderkey", "l_quantity"
+    ).limit(500)
+    out = str(tmp_path / "points.parquet")
+    ingest.write_geoparquet(src, out)
+    assert _file_geometry_types(out) == ["Point"]
+
+    back = ingest.read_geoparquet(spark, out)
+    assert declared_geometry_types(back) == ["Point"]
+    schema, jobs = _jobs_of(spark, "upload_schema", lambda: feature_schema(back))
+    assert schema.geometry_type == "Point" and jobs == []
+
+    ring = [[-150, -60], [150, -60], [150, 60], [-150, 60], [-150, -60]]
+    params = {"f": "json", "returnIdsOnly": "true",
+              "geometryType": "esriGeometryPolygon",
+              "geometry": json.dumps({"rings": [ring]})}
+    got = api.query_layer(back, params)[0]["objectIds"]
+    plain = back.withColumn("geometry", F.col("geometry").cast("binary"))
+    assert declared_geometry_types(plain) == []
+    assert got == api.query_layer(plain, params)[0]["objectIds"] != []
+
+    def plan(df):
+        page = query_features(
+            df, parse_geoservices_params({**params, "returnIdsOnly": "false"})
+        )
+        return page.features._jdf.queryExecution().optimizedPlan().toString()
+
+    assert "st_contains_point" in plan(plain)
+    assert "st_contains_point" not in plan(back) and "_relates" not in plan(back)
+
+
+def test_mixed_upload_declares_every_type(spark, geojson_file, tmp_path):
+    """A point-and-polygon upload declares both types; feature_schema
+    then probes a row for the layer's type, as for an undeclared one."""
+    from iceberg_geospatial_api_server_spark.catalog import feature_schema
+    from iceberg_geospatial_api_server_spark.geo.functions import (
+        declared_geometry_types,
+    )
+
+    out = str(tmp_path / "mixed.parquet")
+    ingest.write_geoparquet(ingest.read_geojson(spark, geojson_file), out)
+    assert _file_geometry_types(out) == ["Point", "Polygon"]
+    back = ingest.read_geoparquet(spark, out)
+    assert declared_geometry_types(back) == ["Point", "Polygon"]
+    _, jobs = _jobs_of(spark, "mixed_schema", lambda: feature_schema(back))
+    assert len(jobs) == 1
 
 
 def test_ingest_union_and_append(spark, geojson_file):

@@ -1,10 +1,16 @@
 """The served request path on the persisted lineitem layer: jobs per
 request, persisted OIDs, internal columns kept out of the layer's fields,
-and the page/tile edge cases of the one over-fetched collect."""
+the page/tile edge cases of the one over-fetched collect, the per-session
+layer memo, and the SQL point-in-polygon test of point-only layers."""
 
 import json
 import math
+import os
+import random
+import shutil
+import tempfile
 import time
+from urllib.parse import urlparse
 
 import pytest
 from pyspark.sql import functions as F
@@ -333,7 +339,7 @@ def test_declared_geometry_types_survive_a_cold_read(spark, sf_dir):
     job."""
     from iceberg_geospatial_api_server_spark.sources import geo_layer
 
-    geo_layer._SCHEMAS.clear()
+    geo_layer._LAYERS.clear()
     df = geo_layer.lineitem_bbox_layer(spark, sf_dir)
     assert df.schema["geometry"].metadata == {"geometry_types": ["Point"]}
     schema, jobs = _jobs_of(spark, "declared_schema", lambda: feature_schema(df))
@@ -432,3 +438,252 @@ def test_tile_timestamps_keep_their_instant(spark, new_york_tz):
     )
     tile = decode_tile(serialize_tile(df, 0, 0, 0, out_fields=["ts"], id_col="fid"))
     assert tile[0]["values"] == ["2020-03-08 07:30:00.123000"]
+
+
+# --- the per-session layer memo -------------------------------------------
+
+
+def test_layer_re_resolve_is_memoized(spark, layer):
+    """Resolving the layer again returns the same DataFrame and runs no
+    Spark job."""
+    first = layer()
+    again, jobs = _jobs_of(spark, "layer_memo", layer)
+    assert again is first
+    assert jobs == []
+
+
+def test_layer_memo_misses_on_new_source_or_rebuilt_layer(spark, sf_dir, tmp_path):
+    """A regenerated source (new mtime: a new layer path) and a layer
+    directory rebuilt at the same path each resolve a fresh DataFrame
+    over the same rows; an entry of another (stopped) session's
+    applicationId is evicted by the next miss."""
+    from iceberg_geospatial_api_server_spark.sources import geo_layer
+
+    src_dir = str(tmp_path / "sf")
+    os.makedirs(src_dir)
+    src = os.path.join(src_dir, "lineitem.parquet")
+    shutil.copy(os.path.join(sf_dir, "lineitem.parquet"), src)
+
+    def layer_dir(df):
+        return os.path.dirname(urlparse(df.inputFiles()[0]).path)
+
+    built = []
+    try:
+        first = geo_layer.lineitem_bbox_layer(spark, src_dir)
+        built.append(layer_dir(first))
+        n = first.count()
+
+        st = os.stat(src)
+        os.utime(src, ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
+        regenerated = geo_layer.lineitem_bbox_layer(spark, src_dir)
+        built.append(layer_dir(regenerated))
+        assert regenerated is not first and built[0] != built[1]
+        assert regenerated.count() == n
+
+        live = (spark.sparkContext.applicationId, built[1])
+        stale = ("app-of-a-stopped-session", built[1])
+        geo_layer._LAYERS[stale] = geo_layer._LAYERS[live]
+        shutil.rmtree(built[1])
+        rebuilt = geo_layer.lineitem_bbox_layer(spark, src_dir)
+        assert rebuilt is not regenerated
+        assert layer_dir(rebuilt) == built[1]
+        assert rebuilt.count() == n
+        assert stale not in geo_layer._LAYERS
+        assert geo_layer.lineitem_bbox_layer(spark, src_dir) is rebuilt
+    finally:
+        for d in built:
+            assert d.startswith(tempfile.gettempdir())
+            shutil.rmtree(d, ignore_errors=True)
+
+
+def test_layer_memo_under_concurrent_resolves(spark, sf_dir, layer):
+    """Threads resolving the layer at once, from an empty memo holding
+    other sessions' entries, all get the layer; the stale entries are
+    gone and one live entry remains."""
+    import sys
+    import threading
+
+    from iceberg_geospatial_api_server_spark.sources import geo_layer
+
+    files = sorted(layer().inputFiles())
+    live = (spark.sparkContext.applicationId, os.path.dirname(urlparse(files[0]).path))
+    assert live in geo_layer._LAYERS
+    for i in range(50):
+        geo_layer._LAYERS[(f"stopped-{i}", live[1])] = geo_layer._LAYERS[live]
+    del geo_layer._LAYERS[live]
+    got, errors = [], []
+
+    def resolve():
+        try:
+            for _ in range(3):
+                got.append(sorted(geo_layer.lineitem_bbox_layer(spark, sf_dir).inputFiles()))
+        except Exception as e:  # noqa: BLE001 - reported by the assert below
+            errors.append(e)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=resolve) for _ in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+    assert got == [files] * 24
+    assert [k for k in geo_layer._LAYERS if k[1] == live[1]] == [live]
+
+
+# --- polygon filters on a point-only layer, without Python ------------------
+
+
+_SQUARE = [(0.0, 0.0), (10.0, 0.0), (10.0, 10.0), (0.0, 10.0), (0.0, 0.0)]
+_HOLE = [(3.0, 3.0), (7.0, 3.0), (7.0, 7.0), (3.0, 7.0), (3.0, 3.0)]
+# filter (multi)polygons as lists of polygons (lists of rings): a square
+# with a hole, a multipolygon, a triangle with a near-horizontal edge, and
+# one on binary-inexact decimals
+_PIP_POLYGONS = {
+    "holed": [[_SQUARE, _HOLE]],
+    "multi": [
+        [[(0.0, 0.0), (1.0, 0.0), (1.0, 1.0), (0.0, 0.0)]],
+        [[(2.0, 2.0), (3.0, 2.0), (3.0, 3.0), (2.0, 3.0), (2.0, 2.0)]],
+    ],
+    "near_horizontal": [[[(0.0, 0.0), (10.0, 1e-12), (5.0, 5.0), (0.0, 0.0)]]],
+    "decimals": [[[(0.1, 0.1), (0.7, 0.2), (0.3, 0.9), (0.1, 0.1)]]],
+}
+
+
+def _encode_polys(polys) -> bytes:
+    from iceberg_geospatial_api_server_spark.geo import wkb as W
+
+    if len(polys) == 1:
+        return W.encode_polygon(polys[0])
+    return W.encode_multi(W.MULTIPOLYGON, [W.encode_polygon(p) for p in polys])
+
+
+def _pip_points(polys, seed: int) -> list[tuple[float, float]]:
+    """Every vertex, every edge's midpoint and quarter points, points at
+    each vertex's y left and right of it, and random points around the
+    polygon's box."""
+    verts = [v for rings in polys for ring in rings for v in ring]
+    pts = list(verts)
+    for rings in polys:
+        for ring in rings:
+            for (x0, y0), (x1, y1) in zip(ring[:-1], ring[1:]):
+                for t in (0.25, 0.5, 0.75):
+                    pts.append((x0 + t * (x1 - x0), y0 + t * (y1 - y0)))
+    xs = [v[0] for v in verts]
+    ys = [v[1] for v in verts]
+    for x, y in verts:
+        pts += [(x - 1.0, y), (x - 0.01, y), (x + 0.01, y), (max(xs) + 1, y)]
+    rng = random.Random(seed)
+    w, h = max(xs) - min(xs), max(ys) - min(ys)
+    for _ in range(300):
+        pts.append((rng.uniform(min(xs) - 0.1 * w, max(xs) + 0.1 * w),
+                    rng.uniform(min(ys) - 0.1 * h, max(ys) + 0.1 * h)))
+    pts += [(5.0, 5e-13), (2.0, 1e-13), (9.0, 0.9e-12), (5.0, 0.0), (5.0, 5.0)]
+    return pts
+
+
+@pytest.mark.parametrize("on_edge", [False, True])
+def test_point_in_polygon_sql_matches_udf_kernels(spark, on_edge):
+    """The SQL text gives `st_contains_point` (| `st_point_on_edge`)'s
+    answer for every point: vertices, points on edges, in and on holes,
+    a multipolygon, a near-horizontal edge and points at a vertex's y."""
+    from iceberg_geospatial_api_server_spark.geo import functions as G
+
+    for i, (name, polys) in enumerate(_PIP_POLYGONS.items()):
+        wkb = _encode_polys(polys)
+        pts = spark.createDataFrame(_pip_points(polys, i), "x double, y double")
+        sql = G.point_in_polygon_sql(wkb, "x", "y", on_edge=on_edge)
+        udf = G.st_contains_point(F.lit(bytearray(wkb)), F.col("x"), F.col("y"))
+        if on_edge:
+            udf = udf | G.st_point_on_edge(wkb)(F.col("x"), F.col("y"))
+        rows = pts.select("x", "y", F.expr(sql).alias("sql"), udf.alias("udf")).collect()
+        wrong = [r for r in rows if r["sql"] != r["udf"]]
+        assert wrong == [], (name, wrong[:5])
+        hits = sum(r["sql"] for r in rows)
+        assert 0 < hits < len(rows), name
+
+
+def test_point_in_polygon_sql_gives_way_on_large_or_infinite_filters():
+    """Filters past the edge cap, or whose constants overflow, get None
+    (the caller keeps the UDF kernels)."""
+    from iceberg_geospatial_api_server_spark.geo import functions as G
+    from iceberg_geospatial_api_server_spark.geo import wkb as W
+
+    n = G._PIP_SQL_MAX_EDGES + 1
+    ring = [(math.cos(2 * math.pi * k / n), math.sin(2 * math.pi * k / n))
+            for k in range(n)]
+    assert G.point_in_polygon_sql(W.encode_polygon([ring + ring[:1]]), "x", "y") is None
+    assert G.point_in_polygon_sql(
+        W.encode_polygon([ring[:-1] + ring[:1]]), "x", "y"
+    ) is not None
+    huge = [(-1.5e308, 0.0), (1.5e308, 1.0), (0.0, 2.0), (-1.5e308, 0.0)]
+    assert G.point_in_polygon_sql(W.encode_polygon([huge]), "x", "y") is None
+
+
+def _polygon_through_points(points):
+    """A concave ring, as an Esri rings JSON string, whose upper right
+    vertex is a layer point: on the boundary, and outside by the ray-cast
+    (its edges run below and left of it)."""
+    x0, y0 = points[len(points) // 2]
+    ring = [[x0 - 40, y0 - 30], [x0, y0 - 30], [x0, y0], [x0 - 10, y0],
+            [x0 - 10, y0 - 20], [x0 - 40, y0 - 20], [x0 - 40, y0 - 30]]
+    return json.dumps({"rings": [ring]})
+
+
+@pytest.mark.parametrize("rel", ["intersects", "within", "contains"])
+def test_polygon_filter_on_point_layer_runs_no_python(spark, sf_dir, layer, points, rel):
+    """On the layer declaring ["Point"], a polygon filter runs in SQL: the
+    page's plan has no Python node and a count runs one job. Counts and
+    ids equal the UDF path's on the undeclared source layer; a boundary
+    point intersects but is not within; no point contains a polygon."""
+    geom = _polygon_through_points(points)
+    base = {"f": "json", "geometryType": "esriGeometryPolygon",
+            "geometry": geom, "spatialRel": f"esriSpatialRel{rel.title()}"}
+    df = layer()
+
+    from iceberg_geospatial_api_server_spark.api import parse_geoservices_params
+    from iceberg_geospatial_api_server_spark.engine import query_features
+    from iceberg_geospatial_api_server_spark.geo.functions import (
+        declared_geometry_types,
+    )
+
+    page = query_features(df, parse_geoservices_params({**base, "resultRecordCount": 5}))
+    plan = page.features._jdf.queryExecution().executedPlan().toString()
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+
+    counted, jobs = _jobs_of(
+        spark, f"pip_count_{rel}",
+        lambda: api.query_layer(df, {**base, "returnCountOnly": "true"})[0],
+    )
+    assert len(jobs) <= 1
+
+    ids = api.query_layer(df, {**base, "returnIdsOnly": "true"})[0]["objectIds"]
+    # the persisted layer's columns, so with_oid numbers rows alike
+    src = _source_layer(spark, sf_dir).select(
+        "geometry", "l_orderkey", "l_linenumber", "l_quantity"
+    )
+    assert declared_geometry_types(src) == []
+    want = api.query_layer(src, {**base, "returnIdsOnly": "true"})[0]["objectIds"]
+    assert ids == want
+    assert counted["count"] == len(want)
+    if rel == "contains":
+        assert want == []
+    else:
+        assert want != []
+
+
+def test_polygon_boundary_points_intersect_but_are_not_within(layer, points):
+    """Non-vacuous boundary: a layer point on the polygon's boundary,
+    which `intersects` keeps and `within` drops."""
+    base = {"f": "json", "returnCountOnly": "true",
+            "geometryType": "esriGeometryPolygon",
+            "geometry": _polygon_through_points(points)}
+    df = layer()
+    n = {rel: api.query_layer(df, {**base, "spatialRel": f"esriSpatialRel{rel}"})[0]["count"]
+         for rel in ("Intersects", "Within")}
+    assert n["Intersects"] > n["Within"] > 0
