@@ -266,10 +266,13 @@ def declare_geometry_types(
 ) -> DataFrame:
     """`df` with `geom_col` declaring `types` in its field metadata, under
     GeoParquet's `geometry_types` key. Parquet writes keep field metadata,
-    so a layer written from `df` declares them when read back."""
+    so a layer written from `df` declares them when read back. An empty
+    `types` clears the field's metadata: `geom_col` then declares none."""
     return df.withColumn(
         geom_col,
-        F.col(geom_col).alias(geom_col, metadata={"geometry_types": types}),
+        F.col(geom_col).alias(
+            geom_col, metadata={"geometry_types": types} if types else {}
+        ),
     )
 
 
@@ -1038,24 +1041,18 @@ def st_point_on_edge(filter_wkb: bytes):
 
 # polygon filters with more edges than this keep the pandas-UDF kernels.
 # Spark compiles the literals into the generated code, so each new filter
-# pays a Janino compile that grows with its edge count: counting a fresh
-# n-gon over a 60k-point layer (4-CPU VM, 2 task slots) took 0.7-0.9 s in
-# SQL vs 1.0-1.2 s by UDF at n = 32, but 1.1 s vs 0.6-0.8 s at n = 64
+# pays a Janino compile that grows with its edge count. tools/pip_crossover.py
+# counts fresh n-gons over the sf0.01 layer (60k points; 4-CPU VM, 2 task
+# slots; PERF_r14_requests.json "pip_crossover"), median of 6, SQL vs UDF:
+# n = 32 450 vs 510 ms, n = 40 687 vs 599 ms, n = 64 1566 vs 1071 ms; at
+# n = 128 the generated method passes 64 KB and Spark drops to interpreted
+# evaluation (2763 vs 517 ms)
 _PIP_SQL_MAX_EDGES = 32
 
 
 def _sql_double(v: float) -> str:
     """`v` as a Spark SQL DOUBLE literal that parses back to exactly `v`."""
     return f"({v!r}D)"
-
-
-def _balanced(op: str, terms: list[str]) -> str:
-    """`terms` joined by the associative `op`, nested as a balanced tree
-    so the parsed expression is log(len(terms)) deep."""
-    if len(terms) == 1:
-        return terms[0]
-    mid = len(terms) // 2
-    return f"({_balanced(op, terms[:mid])} {op} {_balanced(op, terms[mid:])})"
 
 
 def point_in_polygon_sql(
@@ -1100,7 +1097,7 @@ def point_in_polygon_sql(
             if y0 != y1
         ]
         if crossings:
-            inside.append(_balanced("<>", crossings))
+            inside.append(f"({' <> '.join(crossings)})")
     if on_edge:
         # _on_segment: |cross(p2 - p1, q - p1)| <= eps inside the edge's
         # bbox grown by eps
@@ -1115,7 +1112,7 @@ def point_in_polygon_sql(
             )
     if not all(math.isfinite(c) for c in consts):
         return None
-    return _balanced("OR", inside) if inside else "FALSE"
+    return " OR ".join(inside) if inside else "FALSE"
 
 
 def _verts_on_edges(verts: np.ndarray, polys) -> bool:

@@ -125,10 +125,13 @@ def read_geoparquet(spark: SparkSession, path: str) -> DataFrame:
     main.py:517-533 _detect_geom_column_geoparquet); WKB passes through,
     WKT converts. The column's `geometry_types` become the `geometry`
     field's declared types (`geo.functions.declare_geometry_types`), so
-    serving the upload probes no row for its type."""
+    serving the upload probes no row for its type. A list naming anything
+    but the 2D types this package decodes (`wkb._TYPE_NAMES`; e.g. GeoPandas'
+    "Point Z", or an unknown name) declares nothing, and serving probes the
+    data as for an undeclared upload."""
     from iceberg_geospatial_api_server_spark.geo import functions as G
 
-    geom_col, meta = _geo_column(path)
+    geom_col, meta = geoparquet_geometry_column(path)
     encoding = meta.get("encoding", "WKB")
     df = spark.read.parquet(path)
     if geom_col in df.columns:
@@ -143,20 +146,16 @@ def read_geoparquet(spark: SparkSession, path: str) -> DataFrame:
             df = df.withColumn(geom_col, wkt_to_wkb(F.col(geom_col)))
         others = [c for c in df.columns if c != geom_col]
         df = df.select(F.col(geom_col).alias("geometry"), *others)
-        if meta.get("geometry_types"):
-            df = G.declare_geometry_types(df, meta["geometry_types"])
+        types, names = meta.get("geometry_types"), list(W._TYPE_NAMES.values())
+        if isinstance(types, list) and types and all(t in names for t in types):
+            df = G.declare_geometry_types(df, sorted(set(types)))
     return df
 
 
-def detect_geoparquet_geometry(path: str) -> tuple[str, str]:
-    """Read the `geo` key from parquet file metadata (ref main.py:517-533)."""
-    geom_col, meta = _geo_column(path)
-    return geom_col, meta.get("encoding", "WKB")
-
-
-def _geo_column(path: str) -> tuple[str, dict]:
-    """The primary geometry column named by the `geo` file metadata, and
-    that column's entry there ({} when the file has none)."""
+def geoparquet_geometry_column(path: str) -> tuple[str, dict]:
+    """The primary geometry column named by the `geo` file metadata (ref
+    main.py:517-533), and that column's entry there ({} when the file has
+    none)."""
     import pyarrow.parquet as pq
 
     target = path
@@ -223,7 +222,14 @@ def ingest(
     append_to: DataFrame | None = None,
 ) -> DataFrame:
     """Multi-file upload normalization (ref main.py:678-817): format by
-    extension, schema-merge union, optional append to an existing table."""
+    extension, schema-merge union, optional append to an existing table.
+
+    A union keeps the field metadata of its first input only, so the
+    result's geometry field is declared afresh: the union of every input's
+    declared types when each input declares some, else nothing (an
+    undeclared input may hold any type)."""
+    from iceberg_geospatial_api_server_spark.geo import functions as G
+
     frames = []
     for p in paths:
         low = p.lower()
@@ -238,4 +244,12 @@ def ingest(
         out = out.unionByName(f, allowMissingColumns=True)
     if append_to is not None:
         out = append_to.unionByName(out, allowMissingColumns=True)
+        frames.append(append_to)
+    if "geometry" in out.columns:
+        declared = [
+            G.declared_geometry_types(f) if "geometry" in f.columns else []
+            for f in frames
+        ]
+        types = sorted(set().union(*declared)) if all(declared) else []
+        out = G.declare_geometry_types(out, types)
     return out

@@ -62,8 +62,8 @@ def test_geoparquet_roundtrip(spark, tables, tmp_path):
     out = str(tmp_path / "geo.parquet")
     ingest.write_geoparquet(src, out)
 
-    col, enc = ingest.detect_geoparquet_geometry(out)
-    assert (col, enc) == ("geometry", "WKB")
+    col, meta = ingest.geoparquet_geometry_column(out)
+    assert (col, meta["encoding"]) == ("geometry", "WKB")
 
     back = ingest.read_geoparquet(spark, out)
     assert back.columns[0] == "geometry"
@@ -141,6 +141,109 @@ def test_mixed_upload_declares_every_type(spark, geojson_file, tmp_path):
     assert declared_geometry_types(back) == ["Point", "Polygon"]
     _, jobs = _jobs_of(spark, "mixed_schema", lambda: feature_schema(back))
     assert len(jobs) == 1
+
+
+def _restamp_geometry_types(path, types):
+    """Rewrite every part's `geo` metadata to declare `types`."""
+    import pyarrow.parquet as pq
+
+    for part in (f for f in os.listdir(path) if f.endswith(".parquet")):
+        fpath = os.path.join(path, part)
+        table = pq.read_table(fpath)
+        meta = dict(table.schema.metadata)
+        geo = json.loads(meta[b"geo"])
+        geo["columns"]["geometry"]["geometry_types"] = types
+        meta[b"geo"] = json.dumps(geo).encode()
+        pq.write_table(table.replace_schema_metadata(meta), fpath)
+        crc = os.path.join(path, f".{part}.crc")
+        if os.path.exists(crc):
+            os.unlink(crc)
+
+
+@pytest.mark.parametrize(
+    "types",
+    [["Point Z"], ["Point", "Curve"], [{"type": "Point"}]],
+    ids=["point_z", "unknown_name", "non_string"],
+)
+def test_undecoded_geometry_type_names_declare_nothing(spark, tmp_path, types):
+    """A file whose `geometry_types` hold anything but names of types this
+    package decodes is read undeclared: feature_schema probes the data
+    for the type, as for an upload whose file declares no types."""
+    from iceberg_geospatial_api_server_spark.catalog import feature_schema
+    from iceberg_geospatial_api_server_spark.geo.functions import (
+        declared_geometry_types,
+    )
+
+    pts = spark.createDataFrame(
+        [(bytearray(W.encode_point(x, y)), i) for i, (x, y) in enumerate(
+            [(1.5, 2.5), (7.0, 7.0)])],
+        "geometry binary, id long",
+    )
+    out = str(tmp_path / "restamped.parquet")
+    ingest.write_geoparquet(pts, out)
+    _restamp_geometry_types(out, types)
+    assert _file_geometry_types(out) == types
+
+    back = ingest.read_geoparquet(spark, out)
+    assert declared_geometry_types(back) == []
+    schema, jobs = _jobs_of(
+        spark, f"restamped_schema_{types}", lambda: feature_schema(back)
+    )
+    assert schema.geometry_type == "Point" and len(jobs) == 1
+
+
+def test_ingest_declares_only_what_every_input_declares(spark, tmp_path):
+    """A union keeps its first input's field metadata, so `ingest`
+    declares the union of its inputs' types only when every input
+    declares some. A point GeoParquet ahead of (or appended with) an
+    undeclared polygon GeoJSON declares nothing, and a polygon filter
+    counts the polygon by its shape, not its bbox corner."""
+    from iceberg_geospatial_api_server_spark import api
+    from iceberg_geospatial_api_server_spark.geo.functions import (
+        declare_geometry_types,
+        declared_geometry_types,
+    )
+
+    def geojson(name, geoms):
+        fc = {"type": "FeatureCollection", "features": [
+            {"type": "Feature", "geometry": g, "properties": {"k": i}}
+            for i, g in enumerate(geoms)]}
+        p = tmp_path / name
+        p.write_text(json.dumps(fc))
+        return str(p)
+
+    square = {"type": "Polygon",
+              "coordinates": [[[0, 0], [10, 0], [10, 10], [0, 10], [0, 0]]]}
+    points = geojson("pts.geojson", [{"type": "Point", "coordinates": c}
+                                     for c in ([1.5, 2.5], [7.0, 7.0])])
+    polygons = geojson("polys.geojson", [square])
+    pts_pq, polys_pq = str(tmp_path / "pts.parquet"), str(tmp_path / "polys.parquet")
+    ingest.write_geoparquet(ingest.read_geojson(spark, points), pts_pq)
+    ingest.write_geoparquet(ingest.read_geojson(spark, polygons), polys_pq)
+
+    # the filter holds (7, 7) and meets the square, but not its (0, 0) corner
+    ring = [[5, 5], [20, 5], [20, 20], [5, 20], [5, 5]]
+    params = {"f": "json", "returnCountOnly": "true",
+              "geometryType": "esriGeometryPolygon",
+              "geometry": json.dumps({"rings": [ring]})}
+
+    def count(df):
+        return api.query_layer(df, params)[0]["count"]
+
+    mixed = {
+        "in_order": ingest.ingest(spark, [pts_pq, polygons]),
+        "appended": ingest.ingest(
+            spark, [polygons], append_to=ingest.ingest(spark, [pts_pq])
+        ),
+    }
+    for df in mixed.values():
+        assert declared_geometry_types(df) == []
+        assert count(df) == count(declare_geometry_types(df, [])) == 2
+
+    both = ingest.ingest(spark, [pts_pq, polys_pq])
+    assert declared_geometry_types(both) == ["Point", "Polygon"]
+    assert count(both) == 2
+    assert declared_geometry_types(ingest.ingest(spark, [pts_pq, pts_pq])) == ["Point"]
 
 
 def test_ingest_union_and_append(spark, geojson_file):
