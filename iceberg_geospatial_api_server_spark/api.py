@@ -145,6 +145,10 @@ def query_layer(
     (json → Esri JSON FeatureSet, pbf → FeatureCollection protobuf,
     geojson → GeoJSON FeatureCollection).
 
+    The request runs in the serving session (`session.served`): `df` is
+    re-bound once per frame to a child session that evaluates interpreted,
+    so a new bbox, offset or polygon compiles no code.
+
     Returns (payload, media_type) — a dict for the JSON formats, bytes
     for pbf — so any web framework (or none) can wrap it.
     """
@@ -155,7 +159,9 @@ def query_layer(
         esri_pbf,
         geojson,
     )
+    from iceberg_geospatial_api_server_spark.session import served
 
+    df = served(df)
     fmt = (out_format or params.get("f") or "json").lower()
     schema = feature_schema(df)
     qp = parse_geoservices_params(
@@ -253,7 +259,9 @@ def get_tile(
     """The /{layer}/tiles/{z}/{x}/{y}.mvt handler, HTTP-free — the tile
     sibling of `query_layer`: feature schema supplies the id/geometry
     columns, the engine's WHERE surface is bypassed (a tile request IS a
-    bbox query), and the serializer is the Mapbox Vector Tile writer.
+    bbox query), and the serializer is the Mapbox Vector Tile writer. Like
+    `query_layer`, it runs in the serving session (`session.served`), so a
+    new tile compiles no code.
 
     Returns (payload bytes, media_type). Empty tiles return b'' so a
     server can 204 them.
@@ -262,7 +270,9 @@ def get_tile(
     from iceberg_geospatial_api_server_spark.serializers.mvt import (
         serialize_tile,
     )
+    from iceberg_geospatial_api_server_spark.session import served
 
+    df = served(df)
     schema = feature_schema(df)
     fields = out_fields
     if fields is None:

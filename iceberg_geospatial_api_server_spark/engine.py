@@ -438,8 +438,8 @@ def query_features(
                 )
             ):
                 # a layer declaring only points: the ray-cast (and edge
-                # test) on the point itself as one SQL expression, in the
-                # scan's codegen stage — no Python worker, O(1) py4j calls
+                # test) on the point itself as one SQL expression beside
+                # the scan — no Python worker, O(1) py4j calls
                 cond = cond & F.expr(pip_sql)
             elif geom_col:
                 # exact per-feature kernel for ALL geometry types (ref

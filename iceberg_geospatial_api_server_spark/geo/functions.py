@@ -1039,15 +1039,16 @@ def st_point_on_edge(filter_wkb: bytes):
     return _on_edge
 
 
-# polygon filters with more edges than this keep the pandas-UDF kernels.
-# Spark compiles the literals into the generated code, so each new filter
-# pays a Janino compile that grows with its edge count. tools/pip_crossover.py
-# counts fresh n-gons over the sf0.01 layer (60k points; 4-CPU VM, 2 task
-# slots; PERF_r14_requests.json "pip_crossover"), median of 6, SQL vs UDF:
-# n = 32 450 vs 510 ms, n = 40 687 vs 599 ms, n = 64 1566 vs 1071 ms; at
-# n = 128 the generated method passes 64 KB and Spark drops to interpreted
-# evaluation (2763 vs 517 ms)
-_PIP_SQL_MAX_EDGES = 32
+# polygon filters with more edges than this keep the pandas-UDF kernels:
+# the interpreted SQL text costs more per row as edges grow. Served requests
+# evaluate interpreted (`session.serving_session`), so a new filter compiles
+# nothing. tools/pip_crossover.py counts fresh n-gons over the sf0.01 layer
+# through `api.query_layer` (60k points; 4-CPU VM, 2 task slots;
+# PERF_r15_requests.json "pip_crossover"), median of 6, SQL vs UDF, two
+# runs: n = 32 403 vs 520 ms, n = 48 379 vs 464 ms, n = 64 415 vs 432 and
+# 461 vs 494 ms, n = 72 380 vs 379 ms, n = 80 384 vs 353 ms, n = 96 554 vs
+# 409 and 496 vs 402 ms, n = 128 608 vs 378 ms
+_PIP_SQL_MAX_EDGES = 64
 
 
 def _sql_double(v: float) -> str:
@@ -1060,8 +1061,8 @@ def point_in_polygon_sql(
 ) -> str | None:
     """Spark SQL text testing the point (`x`, `y`) (SQL expressions)
     against the constant filter (multi)polygon: `st_contains_point`'s
-    ray-cast, OR-ed with `st_point_on_edge` when `on_edge`. Codegen runs
-    it in the scan's stage; no Python worker sees the rows.
+    ray-cast, OR-ed with `st_point_on_edge` when `on_edge`. It runs in
+    the JVM beside the scan; no Python worker sees the rows.
 
     The text repeats `_rings_contain` operation for operation, in IEEE
     doubles on the JVM as numpy does: horizontal edges are skipped, each

@@ -18,10 +18,13 @@ from iceberg_geospatial_api_server_spark.catalog import FeatureSchema, feature_s
 from iceberg_geospatial_api_server_spark.engine import query_features
 from iceberg_geospatial_api_server_spark.models import QueryParams
 from iceberg_geospatial_api_server_spark.serializers import geojson
+from iceberg_geospatial_api_server_spark.session import served
 
 
 class OgcFeaturesProvider:
-    """pygeoapi-BaseProvider-shaped adapter over a DataFrame table."""
+    """pygeoapi-BaseProvider-shaped adapter over a DataFrame table. The
+    table is re-bound to the serving session (`session.served`) once, here,
+    so its requests evaluate interpreted as `api.query_layer`'s do."""
 
     def __init__(
         self,
@@ -30,10 +33,10 @@ class OgcFeaturesProvider:
         geometry_column: str | None = None,
         oid_order: list[str] | None = None,
     ):
-        self.df = df
+        self.df = served(df)
         self.geometry_column = geometry_column
         self.oid_order = oid_order
-        self._schema: FeatureSchema = feature_schema(df, table_identifier)
+        self._schema: FeatureSchema = feature_schema(self.df, table_identifier)
         if geometry_column:
             self._schema.geometry_column = geometry_column
 

@@ -37,9 +37,7 @@ def _as_double(col: Column) -> Column:
     return F.transform(col, lambda v: v.cast("double"))
 
 
-def _seed_vectors(
-    df: DataFrame, id_col: str, vec_col: str, k: int, oversample: int = 32
-) -> np.ndarray:
+def _seed_vectors(df: DataFrame, id_col: str, vec_col: str, k: int) -> np.ndarray:
     """Pick k deterministic, well-spread seed vectors WITHOUT collecting
     ids to the driver (the round-1 version collected every distinct id —
     fatal at 100 TB).

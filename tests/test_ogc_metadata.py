@@ -61,6 +61,20 @@ def test_ogc_get_by_id(provider):
         provider.get(-999999)
 
 
+def test_ogc_items_with_a_fresh_bbox_compile_no_code(spark, provider):
+    """The provider's table is bound to the serving session once, so an
+    items request with a bbox it has not seen adds 0 Janino compiles."""
+    from iceberg_geospatial_api_server_spark.session import serving_session
+
+    assert provider.df.sparkSession is serving_session(spark)
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    provider.query(limit=5, bbox=[-120.5, -40.5, 10.5, 30.5])
+    before = metrics.METRIC_COMPILATION_TIME().getCount()
+    fc = provider.query(limit=5, bbox=[-100.25, -35.25, 20.75, 40.75])
+    assert metrics.METRIC_COMPILATION_TIME().getCount() - before == 0
+    assert fc["numberReturned"] == 5
+
+
 def test_metadata_builders(spark, tables):
     from iceberg_geospatial_api_server_spark.catalog import feature_schema
     from iceberg_geospatial_api_server_spark.sources.synthetic import (

@@ -116,17 +116,17 @@ def test_layer_fields_hide_internal_columns(layer, points):
     assert len(page["features"]) == 3
 
 
-def test_served_requests_run_one_spark_job(spark, layer, points):
-    """Every request kind of the map_session mix — the layer resolved per
-    request, as a stateless handler does — runs at most one Spark job: one
-    scan collected once. The geometry type comes from the layer's declared
-    `geometry_types`, so no probe runs."""
-    sc = spark.sparkContext
-    x0, y0 = points[len(points) // 2]
+def _map_requests(points, at: int) -> dict:
+    """kind → (params of `api.query_layer`, or (tile, out_fields) of
+    `api.get_tile`) for every request kind of the map_session mix, with
+    constants (boxes, rings, offset, ids, tiles) drawn around
+    `points[at]`."""
+    x0, y0 = points[at]
     box = f"{x0 - 30},{y0 - 20},{x0 + 30},{y0 + 20}"
     ring = [[x0 - 20, y0 - 20], [x0 + 20, y0 - 20], [x0 + 20, y0 + 20],
             [x0 - 20, y0 - 20]]
-    pages = {
+    fields = ["l_linenumber", "l_quantity"]
+    return {
         "count_where_polygon": {
             "f": "json", "returnCountOnly": "true", "where": "l_quantity > 5",
             "geometryType": "esriGeometryPolygon",
@@ -134,7 +134,7 @@ def test_served_requests_run_one_spark_job(spark, layer, points):
         },
         "page_pbf_bbox": {"f": "pbf", "resultRecordCount": 50, "geometry": box},
         "page_geojson_offset": {
-            "f": "geojson", "resultRecordCount": 50, "resultOffset": 1000,
+            "f": "geojson", "resultRecordCount": 50, "resultOffset": at,
         },
         "extent_bbox": {"f": "json", "returnExtentOnly": "true", "geometry": box},
         "ids_bbox": {"f": "json", "returnIdsOnly": "true", "geometry": box},
@@ -142,33 +142,39 @@ def test_served_requests_run_one_spark_job(spark, layer, points):
             "f": "json", "resultRecordCount": 50, "outSR": "102100",
             "geometry": box,
         },
-        "object_ids": {"f": "json", "objectIds": "3,17,400,2500"},
-    }
-    tiles = {
-        "tile_z4": (_tile_of(x0, y0, 4), ["l_linenumber", "l_quantity"]),
-        "tile_z9": (_tile_of(x0, y0, 9), ["l_linenumber", "l_quantity"]),
+        "object_ids": {"f": "json", "objectIds": f"3,17,{at},{at + 1}"},
+        "tile_z4": (_tile_of(x0, y0, 4), fields),
+        "tile_z9": (_tile_of(x0, y0, 9), fields),
         "tile_default_fields": (_tile_of(x0, y0, 6), None),
     }
 
-    def run(kind):
-        df = layer()
-        if kind in tiles:
-            (z, x, y), fields = tiles[kind]
-            return api.get_tile(df, z, x, y, out_fields=fields)[0]
-        return api.query_layer(df, dict(pages[kind]))[0]
 
-    for kind in [*pages, *tiles]:
-        run(kind)  # warm
+def _serve(df, req):
+    """The payload of one request of `_map_requests`."""
+    if isinstance(req, tuple):
+        (z, x, y), fields = req
+        return api.get_tile(df, z, x, y, out_fields=fields)[0]
+    return api.query_layer(df, dict(req))[0]
+
+
+def test_served_requests_run_one_spark_job(spark, layer, points):
+    """Every request kind of the map_session mix — the layer resolved per
+    request, as a stateless handler does — runs at most one Spark job: one
+    scan collected once. The geometry type comes from the layer's declared
+    `geometry_types`, so no probe runs."""
+    sc = spark.sparkContext
+    for kind, req in _map_requests(points, len(points) // 2).items():
+        _serve(layer(), req)  # warm
         group = f"served_jobs_{kind}"
         sc.setJobGroup(group, kind)
         try:
-            payload = run(kind)
+            payload = _serve(layer(), req)
             jobs = sc.statusTracker().getJobIdsForGroup(group)
         finally:
             sc.setJobGroup("served_jobs_done", "")
         assert len(jobs) <= 1, (kind, len(jobs))
         # no vacuous answers
-        if kind in tiles:
+        if kind.startswith("tile"):
             assert decode_tile(payload)[0]["features"], kind
         elif kind == "page_pbf_bbox":
             assert _pbf_page(payload)[0] > 0
@@ -178,6 +184,158 @@ def test_served_requests_run_one_spark_job(spark, layer, points):
             assert payload["objectIds"] == sorted(payload["objectIds"]) != []
         else:
             assert payload["features"], kind
+
+
+def _compiles(spark) -> int:
+    """Janino compiles the JVM has run so far."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
+def test_served_requests_compile_no_code(spark, layer, points):
+    """A second request of each map_session kind, with constants it has not
+    seen, adds 0 Janino compiles: served requests evaluate interpreted.
+    The same count request on the shared session, which keeps whole-stage
+    codegen, does compile, so the counter is live."""
+    from iceberg_geospatial_api_server_spark.engine import query_features
+
+    first = _map_requests(points, len(points) // 2)
+    second = _map_requests(points, len(points) // 5)
+    for kind, req in first.items():
+        assert second[kind] != req, kind
+        _serve(layer(), req)
+        before = _compiles(spark)
+        _serve(layer(), second[kind])
+        assert _compiles(spark) - before == 0, kind
+
+    qp = api.parse_geoservices_params(first["count_where_polygon"])
+    query_features(layer(), qp)
+    before = _compiles(spark)
+    qp = api.parse_geoservices_params(second["count_where_polygon"])
+    assert query_features(layer(), qp).count > 0
+    assert _compiles(spark) > before
+
+
+def test_served_plan_has_no_whole_stage_codegen(spark, layer):
+    """The serving session plans a query without WholeStageCodegen; the
+    same query on the shared session, whose conf is unchanged, keeps it."""
+    from iceberg_geospatial_api_server_spark.session import (
+        served,
+        serving_session,
+    )
+
+    def plan(df):
+        """(root node class, plan text); the text marks each codegen stage
+        as `*(n)`."""
+        q = df.filter(F.col("__bbox_xmin") > 10.0).select("__oid", "l_quantity")
+        p = q._jdf.queryExecution().executedPlan()
+        return p.getClass().getSimpleName(), p.toString()
+
+    root, text = plan(layer())
+    assert root == "WholeStageCodegenExec" and "*(1) Filter" in text
+    root, text = plan(served(layer()))
+    assert root == "ProjectExec" and "*(" not in text, text
+    assert spark.conf.get("spark.sql.codegen.wholeStage") == "true"
+    serving = serving_session(spark)
+    assert serving.conf.get("spark.sql.codegen.wholeStage") == "false"
+    assert serving.conf.get("spark.sql.codegen.factoryMode") == "NO_CODEGEN"
+    assert serving.sparkContext is spark.sparkContext
+
+
+def test_served_frame_keeps_declared_types_and_persisted_columns(spark, layer):
+    """The re-bound layer declares ["Point"], carries the persisted __oid
+    and __bbox_* columns and keeps the layer's DSv2 parquet scan, so
+    feature_schema runs no job on it and requests neither rank nor
+    decode."""
+    from iceberg_geospatial_api_server_spark.session import served
+
+    df = served(layer())
+    plan = df.filter(F.col("__bbox_xmin") > 10.0)._jdf.queryExecution()
+    assert "BatchScan parquet" in plan.executedPlan().toString()
+    assert df.schema == layer().schema
+    assert df.schema["geometry"].metadata == {"geometry_types": ["Point"]}
+    assert {"__oid", "__bbox_xmin", "__bbox_ymin", "__bbox_xmax",
+            "__bbox_ymax"} <= set(df.columns)
+    schema, jobs = _jobs_of(spark, "served_schema", lambda: feature_schema(df))
+    assert schema.geometry_type == "Point"
+    assert jobs == []
+
+
+def test_served_memo(spark, layer):
+    """The same frame re-binds to the same object with no Spark job; a
+    served frame is its own re-binding; entries of another (stopped)
+    session's applicationId are evicted by the next miss, and a stale entry
+    for the frame itself is not returned."""
+    from iceberg_geospatial_api_server_spark import session
+
+    first = session.served(layer())
+    again, jobs = _jobs_of(spark, "served_memo", lambda: session.served(layer()))
+    assert again is first
+    assert jobs == []
+    assert session.served(first) is first
+
+    other, fresh = layer().select("*"), layer().select("*")
+    session._SERVED[other] = ("app-of-a-stopped-session", first)
+    session._SERVED[fresh] = ("app-of-a-stopped-session", first)
+    got, jobs = _jobs_of(spark, "served_miss", lambda: session.served(fresh))
+    assert jobs == []
+    assert got is not first
+    assert got.sparkSession is session.serving_session(spark)
+    assert other not in session._SERVED
+    assert session._SERVED[fresh][1] is got
+
+
+def test_serving_session_memo_evicts_a_stopped_application(spark):
+    """A serving session memoized for another applicationId is dropped
+    when this application makes its own."""
+    from iceberg_geospatial_api_server_spark import session
+
+    live = dict(session._SERVING)
+    try:
+        session._SERVING.clear()
+        session._SERVING["app-of-a-stopped-session"] = spark
+        serving = session.serving_session(spark)
+        assert list(session._SERVING) == [spark.sparkContext.applicationId]
+        assert serving is not spark
+        assert session.serving_session(spark) is serving
+    finally:
+        session._SERVING.clear()
+        session._SERVING.update(live)
+
+
+def test_served_under_concurrent_first_requests(spark, layer):
+    """Threads re-binding one new frame at once all get the same re-bound
+    frame, made once."""
+    import sys
+    import threading
+
+    from iceberg_geospatial_api_server_spark import session
+
+    df = layer().select("*")
+    got, errors = [], []
+
+    def bind():
+        try:
+            for _ in range(3):
+                got.append(session.served(df))
+        except Exception as e:  # noqa: BLE001 - reported by the assert below
+            errors.append(e)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=bind) for _ in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+    assert len(got) == 24
+    assert all(g is got[0] for g in got)
+    assert session._SERVED[df][1] is got[0]
 
 
 def _source_layer(spark, sf_dir):

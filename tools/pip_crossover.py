@@ -8,9 +8,11 @@ count, to place `geo.functions._PIP_SQL_MAX_EDGES`.
   through `st_contains_point` | `st_point_on_edge` (pandas UDFs).
 
 Every trial counts a fresh regular n-gon (random centre, radius, rotation),
-so each request carries new constants and pays its code generation as a
-served request does. The two paths run back to back on the same filter,
-in alternating order, and must return the same count.
+so each request carries new constants, as a served request does. Both
+paths go through `api.query_layer`, so both evaluate interpreted in the
+serving session (`session.serving_session`). The two paths run back to
+back on the same filter, in alternating order, and must return the same
+count.
 
 Usage: python tools/pip_crossover.py [--edges 8,16,32,64,128] [--reps 5]
            [--slots 2] [--seed 1] [--out result.json]
