@@ -2,12 +2,17 @@
 
 Re-expresses ``/root/reference/iceberg-geo-api/src/iceberg_geo/query/
 engine.py:282-463 query_features`` — the reference's single SQL-building
-choke point — as declarative DataFrame transforms so Catalyst handles
-pushdown, pruning and ordering strategy:
+choke point — as DataFrame transforms so Catalyst handles pushdown,
+pruning and ordering strategy. Like the reference, the engine writes its
+predicates as SQL text; each becomes a `DataFrame.filter` of that text,
+and each projection one `selectExpr` of quoted names, so a served request
+builds its plan in a few py4j calls rather than one per column, literal
+and operator:
 
 * bbox filter via __bbox_* pre-filter columns (engine.py:318-339)
 * WKT geometry filter with intersects/contains/within (341-357)
-* sanitized attribute WHERE (539-563) compiled with F.expr
+* sanitized attribute WHERE (539-563), a filter of its own that is never
+  spliced into the engine's text
 * stable global OIDs (367-372), count-only / ids-only / objectIds modes
 * field selection (_build_select, 648-683), ORDER BY sanitization
   (566-596), limit/offset pagination, exceededTransferLimit (448-456)
@@ -27,6 +32,7 @@ from iceberg_geospatial_api_server_spark.catalog import (
 from iceberg_geospatial_api_server_spark.geo import functions as G
 from iceberg_geospatial_api_server_spark.geo import wkb as W
 from iceberg_geospatial_api_server_spark.models import QueryParams, QueryResult
+from iceberg_geospatial_api_server_spark.util import sql_name
 
 # WHERE sanitization. The reference blocklists keywords
 # (engine.py:33-45, 539-563) against DuckDB; compiling client text with
@@ -172,7 +178,7 @@ def _string_cutpoints(df: DataFrame, key0: str) -> list | None:
     ordering used to sort the sample.
     """
     samp = (
-        df.select(F.col(key0).alias("k"))
+        df.select(F.col(sql_name(key0)).alias("k"))
         .filter(F.col("k").isNotNull())
         .filter(F.pmod(F.xxhash64(F.col("k")), F.lit(64)) == 0)
         .limit(64 * _OID_BUCKETS)
@@ -190,7 +196,7 @@ def _string_cutpoints(df: DataFrame, key0: str) -> list | None:
     # which is the irreducible skew of ranking by a hot key.
     cap = 4 * _OID_BUCKETS
     distinct = (
-        df.select(F.col(key0).alias("k"))
+        df.select(F.col(sql_name(key0)).alias("k"))
         .filter(F.col("k").isNotNull())
         .distinct()
         .limit(cap + 1)
@@ -246,17 +252,20 @@ def with_oid(df: DataFrame, order_cols: list[str] | None = None) -> DataFrame:
     numeric = key0_type in {
         "integer", "long", "short", "byte", "float", "double", "decimal",
     }
-    sort_exprs = [F.col(c) for c in order_cols]
+    sort_exprs = [F.col(sql_name(c)) for c in order_cols]
 
     if numeric:
         probs = [i / _OID_BUCKETS for i in range(1, _OID_BUCKETS)]
         cuts = sorted(
-            {float(c) for c in df.stat.approxQuantile(key0, probs, 0.001)}
+            {
+                float(c)
+                for c in df.stat.approxQuantile(sql_name(key0), probs, 0.001)
+            }
         )
-        key_cmp = F.col(key0).cast("double")
+        key_cmp = F.col(sql_name(key0)).cast("double")
     else:
         cuts = _string_cutpoints(df, key0)
-        key_cmp = F.col(key0)
+        key_cmp = F.col(sql_name(key0))
         if cuts is None:  # frame too small to sample — one sort fits
             w = Window.orderBy(*sort_exprs)
             out = df.withColumn(
@@ -306,12 +315,14 @@ def with_oid(df: DataFrame, order_cols: list[str] | None = None) -> DataFrame:
     return out
 
 
-def _build_select(df: DataFrame, params: QueryParams, geom_col: str | None) -> list[str]:
-    """Ref engine.py:648-683 _build_select."""
-    cols = [c for c in df.columns if c not in INTERNAL_COLS]
+def _build_select(
+    columns: list[str], params: QueryParams, geom_col: str | None
+) -> list[str]:
+    """Ref engine.py:648-683 _build_select, over the frame's `columns`."""
+    cols = [c for c in columns if c not in INTERNAL_COLS]
     if params.out_fields and params.out_fields != "*":
         wanted = [f.strip() for f in params.out_fields.split(",")]
-        cols = [c for c in wanted if c in df.columns and c not in INTERNAL_COLS]
+        cols = [c for c in wanted if c in columns and c not in INTERNAL_COLS]
         if geom_col and params.return_geometry and geom_col not in cols:
             cols.append(geom_col)
     if geom_col and not params.return_geometry:
@@ -319,15 +330,20 @@ def _build_select(df: DataFrame, params: QueryParams, geom_col: str | None) -> l
     return ["__oid"] + cols
 
 
-def _one_pass(df: DataFrame, *aggs) -> dict:
-    """Aggregates over `df` in ONE Spark job: they ride the scan as
-    observed metrics (per-task accumulators merged on the driver) while
-    the rows drain into the no-op sink. A DataFrame aggregate instead
-    shuffles, and adaptive execution submits the shuffle as a job of its
-    own. Select only the columns the aggregates need: the sink reads every
-    column of `df`."""
+def _project(df: DataFrame, cols: list[str]) -> DataFrame:
+    """`df` narrowed to `cols`, in one py4j call for the whole list."""
+    return df.selectExpr(*map(sql_name, cols))
+
+
+def _one_pass(df: DataFrame, *aggs: str) -> dict:
+    """Aggregates over `df` (SQL text, each aliased) in ONE Spark job: they
+    ride the scan as observed metrics (per-task accumulators merged on the
+    driver) while the rows drain into the no-op sink. A DataFrame aggregate
+    instead shuffles, and adaptive execution submits the shuffle as a job
+    of its own. Select only the columns the aggregates need: the sink reads
+    every column of `df`."""
     obs = Observation()
-    df.observe(obs, *aggs).write.format("noop").mode("overwrite").save()
+    df.observe(obs, *map(F.expr, aggs)).write.format("noop").mode("overwrite").save()
     return obs.get
 
 
@@ -370,13 +386,19 @@ def query_features(
 ) -> QueryResult:
     """Execute the unified feature query (ref engine.py:282-463).
 
-    All filters are declarative Column expressions: Catalyst pushes the
-    attribute and bbox predicates into the parquet scan when __bbox_* are
-    persisted, and the WKB exact predicate (pandas UDF) only runs on rows
-    that survive the numeric pre-filters. On a geometry field declaring
-    only points (`geo.functions.declared_geometry_types` == ["Point"]) a
-    polygon filter needs no UDF: `geo.functions.point_in_polygon_sql`
-    tests the point in SQL.
+    The plan is built from SQL text, a few py4j calls per request: every
+    predicate the engine makes (the bbox envelope, the `contains`
+    envelope, the point-in-polygon test, the objectIds list) is Spark SQL
+    with exact DOUBLE literals (`geo.functions._sql_double`), ANDed into
+    one `DataFrame.filter`, and every projection is one `selectExpr` of
+    quoted column names. The client's sanitized WHERE is a filter of its
+    own, never spliced into the engine's text. Catalyst combines the
+    filters and pushes the attribute and bbox predicates into the parquet
+    scan when __bbox_* are persisted; the WKB exact predicate (pandas UDF)
+    only runs on rows that survive the numeric pre-filters. On a geometry
+    field declaring only points (`geo.functions.declared_geometry_types`
+    == ["Point"]) a polygon filter needs no UDF:
+    `geo.functions.point_in_polygon_sql` tests the point in SQL.
 
     Count and extent run now, each as one job. Feature results stay lazy:
     `features` is the plan of exactly the page, geometries in `src_srid`.
@@ -388,34 +410,36 @@ def query_features(
     """
     geom_col = geom_col or detect_geometry_column(df.schema)
     numbered = with_oid(df, oid_order)
+    columns = numbered.columns
 
-    cond = F.lit(True)
+    def boxed(frame: DataFrame) -> DataFrame:
+        """`frame` with __bbox_* (decoded from the WKB if not persisted)."""
+        nonlocal columns
+        if "__bbox_xmin" in columns or not geom_col:
+            return frame
+        columns = columns + G.BBOX_COLS
+        return G.with_bbox(frame, geom_col)
+
+    conds: list[str] = []  # the engine's predicates, as SQL text
+    exact: list = []  # the per-feature kernel of a non-point layer (Columns)
 
     # spatial: bbox envelope (engine.py:318-339)
     if params.bbox is not None:
-        if "__bbox_xmin" not in numbered.columns and geom_col:
-            numbered = G.with_bbox(numbered, geom_col)
-        xmin, ymin, xmax, ymax = params.bbox
-        cond = cond & G.bbox_intersects(xmin, ymin, xmax, ymax)
+        numbered = boxed(numbered)
+        conds.append(G.bbox_intersects(*params.bbox))
 
     # spatial: WKT geometry filter (engine.py:341-357)
     if params.geometry_filter:
         gbuf = W.from_wkt(params.geometry_filter)
         fxmin, fymin, fxmax, fymax = W.bbox(gbuf)
-        if "__bbox_xmin" not in numbered.columns and geom_col:
-            numbered = G.with_bbox(numbered, geom_col)
+        numbered = boxed(numbered)
         # bbox pre-filter for every relation ('contains' needs the filter
         # inside the feature, so feature bbox must COVER the filter bbox —
         # still a pushable envelope test, just the containment direction)
-        if params.spatial_rel == "contains":
-            cond = cond & (
-                (F.col("__bbox_xmin") <= F.lit(fxmin))
-                & (F.col("__bbox_xmax") >= F.lit(fxmax))
-                & (F.col("__bbox_ymin") <= F.lit(fymin))
-                & (F.col("__bbox_ymax") >= F.lit(fymax))
-            )
-        else:
-            cond = cond & G.bbox_intersects(fxmin, fymin, fxmax, fymax)
+        envelope = (
+            G.bbox_covers if params.spatial_rel == "contains" else G.bbox_intersects
+        )
+        conds.append(envelope(fxmin, fymin, fxmax, fymax))
         code = W.geometry_type_code(gbuf)
         if code in (W.POLYGON, W.MULTIPOLYGON):
             if params.spatial_rel not in ("intersects", "within", "contains"):
@@ -428,7 +452,7 @@ def query_features(
             )
             if points_only and params.spatial_rel == "contains":
                 # a point contains no polygon
-                cond = cond & F.lit(False)
+                conds.append("FALSE")
             elif points_only and (
                 pip_sql := G.point_in_polygon_sql(
                     gbuf,
@@ -439,8 +463,8 @@ def query_features(
             ):
                 # a layer declaring only points: the ray-cast (and edge
                 # test) on the point itself as one SQL expression beside
-                # the scan — no Python worker, O(1) py4j calls
-                cond = cond & F.expr(pip_sql)
+                # the scan — no Python worker
+                conds.append(pip_sql)
             elif geom_col:
                 # exact per-feature kernel for ALL geometry types (ref
                 # engine.py:599-647 runs shapely exact per feature); the
@@ -450,9 +474,9 @@ def query_features(
                 is_pt = (F.col("__bbox_xmin") == F.col("__bbox_xmax")) & (
                     F.col("__bbox_ymin") == F.col("__bbox_ymax")
                 )
+                geom = F.col(sql_name(geom_col))
                 if params.spatial_rel == "contains":
-                    exact = G.st_relates_const(gbuf, "contains")(F.col(geom_col))
-                    cond = cond & (~is_pt) & exact
+                    exact = [~is_pt, G.st_relates_const(gbuf, "contains")(geom)]
                 else:
                     pt_exact = G.st_contains_point(
                         F.lit(bytearray(gbuf)),
@@ -469,38 +493,43 @@ def query_features(
                         )
                     shape_exact = G.st_relates_const(
                         gbuf, params.spatial_rel
-                    )(F.col(geom_col))
-                    cond = cond & F.when(is_pt, pt_exact).otherwise(shape_exact)
+                    )(geom)
+                    exact = [F.when(is_pt, pt_exact).otherwise(shape_exact)]
 
-    # attribute WHERE (engine.py:359-362)
+    filtered = numbered
+    if conds:
+        cond = " AND ".join(f"({c})" for c in conds)
+        if exact:
+            cond = F.expr(cond)
+            for e in exact:
+                cond = cond & e
+        filtered = filtered.filter(cond)
+    # attribute WHERE (engine.py:359-362), a filter of its own
     if params.where:
-        cond = cond & F.expr(sanitize_where(params.where))
+        filtered = filtered.filter(sanitize_where(params.where))
     # typed predicate from programmatic callers — no text round-trip
     if params.where_expr is not None:
-        cond = cond & params.where_expr
-
-    filtered = numbered.filter(cond)
+        filtered = filtered.filter(params.where_expr)
 
     # count-only (engine.py:374-387)
     if params.return_count_only:
-        m = _one_pass(filtered.select(), F.count(F.lit(1)).alias("n"))
+        m = _one_pass(filtered.select(), "count(1) AS n")
         return QueryResult(features=None, count=int(m["n"]))
 
     # extent-only (GeoServices returnExtentOnly): envelope + count of the
     # filtered set in ONE pass — no features materialized
     if params.return_extent_only:
         if not geom_col:
-            m = _one_pass(filtered.select(), F.count(F.lit(1)).alias("n"))
+            m = _one_pass(filtered.select(), "count(1) AS n")
             return QueryResult(features=None, count=int(m["n"]))
-        if "__bbox_xmin" not in filtered.columns:
-            filtered = G.with_bbox(filtered, geom_col)
+        filtered = boxed(filtered)
         m = _one_pass(
-            filtered.select(*G.BBOX_COLS),
-            F.min("__bbox_xmin").alias("xmin"),
-            F.min("__bbox_ymin").alias("ymin"),
-            F.max("__bbox_xmax").alias("xmax"),
-            F.max("__bbox_ymax").alias("ymax"),
-            F.count(F.lit(1)).alias("n"),
+            _project(filtered, G.BBOX_COLS),
+            "min(__bbox_xmin) AS xmin",
+            "min(__bbox_ymin) AS ymin",
+            "max(__bbox_xmax) AS xmax",
+            "max(__bbox_ymax) AS ymax",
+            "count(1) AS n",
         )
         # rows may match while every geometry is NULL → aggregates come
         # back None; that's a null extent, not a crash
@@ -522,7 +551,7 @@ def query_features(
     # ids-only (engine.py:389-398): collected unsorted (a distributed sort
     # costs a sampling job and a shuffle) and sorted on the driver
     if params.return_ids_only:
-        ids = filtered.select("__oid")
+        ids = _project(filtered, ["__oid"])
         return QueryResult(
             features=ids.orderBy("__oid"),
             geometry_column=geom_col,
@@ -530,14 +559,15 @@ def query_features(
             finish=by_oid,
         )
 
+    cols = _build_select(columns, params, geom_col)
+    shape = _geometry_shaper(params, src_srid) if geom_col in cols else None
+
     # objectIds fetch (engine.py:400-416)
     if params.object_ids is not None:
-        out = numbered.filter(
-            F.col("__oid").isin([int(i) for i in params.object_ids])
+        ids = ", ".join(str(int(i)) for i in params.object_ids)
+        out = _project(
+            numbered.filter(f"__oid IN ({ids})" if ids else "FALSE"), cols
         )
-        cols = _build_select(out, params, geom_col)
-        out = out.select(*cols)
-        shape = _geometry_shaper(params, src_srid) if geom_col in cols else None
         return QueryResult(
             features=out,
             geometry_column=geom_col,
@@ -550,17 +580,16 @@ def query_features(
     # reference inherits DuckDB's stable sort; a distributed sort has no
     # such guarantee without an explicit total order).
     order = sanitize_order(params.order_by) if params.order_by else []
-    ordered = filtered.orderBy(*order, F.col("__oid"))
+    ordered = filtered.orderBy(*order, "__oid")
     offset = params.offset or 0
     if offset:
         ordered = ordered.offset(offset)
-    cols = _build_select(ordered, params, geom_col)
-    shape = _geometry_shaper(params, src_srid) if geom_col in cols else None
+    page = _project(ordered, cols)
 
     if not params.limit:
         # unbounded export: never collected here; count() counts it
         return QueryResult(
-            features=ordered.select(*cols),
+            features=page,
             geometry_column=geom_col,
             finish=lambda rows: _shape_rows(rows, geom_col, shape),
         )
@@ -568,9 +597,9 @@ def query_features(
     # exists iff the filtered set holds more than offset + limit rows
     limit = int(params.limit)
     return QueryResult(
-        features=ordered.limit(limit).select(*cols),
+        features=page.limit(limit),
         geometry_column=geom_col,
-        probe=ordered.limit(limit + 1).select(*cols),
+        probe=page.limit(limit + 1),
         limit=limit,
         finish=lambda rows: _shape_rows(rows, geom_col, shape),
     )

@@ -29,6 +29,7 @@ from pyspark.sql.types import (
 )
 
 from iceberg_geospatial_api_server_spark.geo import wkb as W
+from iceberg_geospatial_api_server_spark.util import sql_name
 
 __all__ = [
     "clip_ring",
@@ -317,22 +318,24 @@ def clip_features(
     Arrow-batched clip UDF, so Python sees only intersecting candidates;
     no shuffle anywhere. Persisted __bbox_* columns are used as they are,
     so the envelope reaches the parquet scan as pushed filters; otherwise
-    they are decoded from the WKB.
+    they are decoded from the WKB. The plan is built from SQL text: the
+    pre-filter (`functions.bbox_intersects`) is one filter and the output
+    columns one `selectExpr`, a few py4j calls whatever the column count.
 
     A geometry column that declares `["Point"]` in its field metadata
     (`functions.declared_geometry_types`) runs no clip UDF: the inclusive
     envelope pre-filter is already the exact clip of a single point
     (`clip_wkb` keeps it iff it lies in the closed box, and NaN or NULL
-    envelopes fail the filter), so the candidates come back unchanged
-    with clip_area 0 and clip bounds equal to their envelope.
+    envelopes fail the filter), so the candidates with a geometry come
+    back unchanged with clip_area 0 and clip bounds equal to their
+    envelope: one filter and one `selectExpr` over the scan.
     """
     from iceberg_geospatial_api_server_spark.geo.functions import (
+        BBOX_COLS,
         bbox_intersects,
         declared_geometry_types,
         with_bbox,
     )
-
-    xmin, ymin, xmax, ymax = bbox
 
     @F.pandas_udf(_CLIP_SCHEMA)
     def _clip(geoms: pd.Series) -> pd.DataFrame:
@@ -358,24 +361,24 @@ def clip_features(
         return pd.DataFrame(out)
 
     boxed = df if "__bbox_xmin" in df.columns else with_bbox(df, geom_col)
-    pre = boxed.filter(bbox_intersects(xmin, ymin, xmax, ymax))
+    pre = bbox_intersects(*bbox)
+    geom = sql_name(geom_col)
+    bounds = ("clip_xmin", "clip_ymin", "clip_xmax", "clip_ymax")
     if declared_geometry_types(df, geom_col) == ["Point"]:
-        clip = F.struct(
-            F.col(geom_col).alias("geometry"),
-            F.lit(0.0).alias("clip_area"),
-            *(F.col(f"__bbox_{k}").alias(f"clip_{k}")
-              for k in ("xmin", "ymin", "xmax", "ymax")),
-        )
+        clipped = boxed.filter(f"({pre}) AND {geom} IS NOT NULL")
+        made = {"clip_area": "0.0D", **dict(zip(bounds, BBOX_COLS))}
     else:
-        clip = _clip(F.col(geom_col))
-    clipped = pre.withColumn("__clip", clip)
-    return (
-        clipped.filter(F.col("__clip.geometry").isNotNull())
-        .withColumn(geom_col, F.col("__clip.geometry"))
-        .withColumn("clip_area", F.col("__clip.clip_area"))
-        .withColumn("clip_xmin", F.col("__clip.clip_xmin"))
-        .withColumn("clip_ymin", F.col("__clip.clip_ymin"))
-        .withColumn("clip_xmax", F.col("__clip.clip_xmax"))
-        .withColumn("clip_ymax", F.col("__clip.clip_ymax"))
-        .drop("__clip", "__bbox_xmin", "__bbox_ymin", "__bbox_xmax", "__bbox_ymax")
+        clipped = (
+            boxed.filter(pre)
+            .withColumn("__clip", _clip(F.col(geom)))
+            .filter("__clip.geometry IS NOT NULL")
+        )
+        made = {geom_col: "__clip.geometry"}
+        made.update((k, f"__clip.{k}") for k in ("clip_area", *bounds))
+    # df's columns in place (the geometry and any clip_* replaced), the
+    # new clip_* appended, the envelope dropped
+    names = [c for c in df.columns if c not in BBOX_COLS]
+    names += [k for k in made if k not in names]
+    return clipped.selectExpr(
+        *(f"{made[c]} AS {sql_name(c)}" if c in made else sql_name(c) for c in names)
     )

@@ -165,14 +165,26 @@ def grid_cell(x: Column, y: Column, res: float) -> tuple[Column, Column]:
     return F.floor(x / F.lit(res)), F.floor(y / F.lit(res))
 
 
-def bbox_intersects(xmin: float, ymin: float, xmax: float, ymax: float) -> Column:
+def bbox_intersects(xmin: float, ymin: float, xmax: float, ymax: float) -> str:
     """Envelope intersection over the bbox pre-filter columns
-    (ref engine.py:326-330) — cheap numeric comparisons, pushdown-friendly."""
+    (ref engine.py:326-330) — cheap numeric comparisons, pushdown-friendly.
+    Spark SQL text with exact DOUBLE literals, so `DataFrame.filter` takes
+    it in one py4j call."""
+    d = _sql_double
     return (
-        (F.col("__bbox_xmax") >= xmin)
-        & (F.col("__bbox_xmin") <= xmax)
-        & (F.col("__bbox_ymax") >= ymin)
-        & (F.col("__bbox_ymin") <= ymax)
+        f"__bbox_xmax >= {d(xmin)} AND __bbox_xmin <= {d(xmax)}"
+        f" AND __bbox_ymax >= {d(ymin)} AND __bbox_ymin <= {d(ymax)}"
+    )
+
+
+def bbox_covers(xmin: float, ymin: float, xmax: float, ymax: float) -> str:
+    """Envelope containment over the bbox pre-filter columns: the feature's
+    envelope covers the box, as a feature that contains a filter must.
+    SQL text, like `bbox_intersects`."""
+    d = _sql_double
+    return (
+        f"__bbox_xmin <= {d(xmin)} AND __bbox_xmax >= {d(xmax)}"
+        f" AND __bbox_ymin <= {d(ymin)} AND __bbox_ymax >= {d(ymax)}"
     )
 
 
@@ -1052,7 +1064,12 @@ _PIP_SQL_MAX_EDGES = 64
 
 
 def _sql_double(v: float) -> str:
-    """`v` as a Spark SQL DOUBLE literal that parses back to exactly `v`."""
+    """`v` as a Spark SQL DOUBLE literal that parses back to exactly `v`;
+    infinities and NaN, which have no literal form, as a cast of the
+    string Spark reads them from."""
+    v = float(v)
+    if not math.isfinite(v):
+        return f"CAST('{v!r}' AS DOUBLE)"
     return f"({v!r}D)"
 
 

@@ -11,10 +11,11 @@ and v2 winding rules (exterior rings clockwise in screen coords).
 
 Per-request shape: the viewport clip to the buffered tile bbox runs in
 one Arrow-batched kernel over the candidate rows the bbox pre-filter
-selects (pushed into the scan when the layer persists __bbox_*); the
-BOUNDED clipped page (a tile's feature count is capped exactly like a
-FeatureServer page) is collected once, and the driver encodes each
-geometry's command stream and assembles the layer with its key/value
+selects (pushed into the scan when the layer persists __bbox_*; a layer
+declaring only points needs no kernel); the BOUNDED clipped page (a
+tile's feature count is capped exactly like a FeatureServer page) is
+collected once, and the driver encodes the command streams (a page of
+points in one numpy pass) and assembles the layer with its key/value
 tables. `render_tiles` pre-renders every tile of a zoom in one distributed pass.
 """
 
@@ -41,6 +42,7 @@ from iceberg_geospatial_api_server_spark.serializers.esri_pbf import (
     _LEN,
     _VARINT,
 )
+from iceberg_geospatial_api_server_spark.util import sql_name
 
 MVT_POINT, MVT_LINESTRING, MVT_POLYGON = 1, 2, 3
 
@@ -247,6 +249,18 @@ def build_layer(
     return ld(3, layer)
 
 
+def _point_commands(
+    coords: np.ndarray, z: int, x: int, y: int, extent: int = 4096
+) -> list[list[int]]:
+    """The command stream of each single point of (n, 2) `coords`:
+    `[MoveTo(1), zigzag(px), zigzag(py)]`, what `encode_geometry_commands`
+    gives a POINT, with the pixel math and the zigzag run over all points
+    in one numpy pass."""
+    q = _to_tile_px(coords, z, x, y, extent)
+    zz = (q << 1) ^ (q >> 63)
+    return np.column_stack([np.full(len(q), _cmd(1, 1)), zz]).tolist()
+
+
 _GEOM_FRAGMENT_SCHEMA = T.StructType(
     [
         T.StructField("geom_type", T.IntegerType()),
@@ -286,10 +300,10 @@ def _encoded_page(
         )
 
     page = collect_rows(
-        clipped.withColumn("__mvt", _encode(F.col(geom_col)))
-        .filter(F.col("__mvt.geom_type").isNotNull())
+        clipped.withColumn("__mvt", _encode(F.col(sql_name(geom_col))))
+        .filter("__mvt.geom_type IS NOT NULL")
         .orderBy(*page_order)
-        .select(*cols, "__mvt.geom_type", "__mvt.commands")
+        .selectExpr(*map(sql_name, cols), "__mvt.geom_type", "__mvt.commands")
         .limit(max_features)
     )
     return [
@@ -318,11 +332,21 @@ def serialize_tile(
 ) -> bytes:
     """One XYZ tile from a feature DataFrame: JVM bbox pre-filter →
     distributed clip to the buffered tile envelope → one collect of the
-    id-ordered page → driver-side command-stream encode into a Layer (a
-    second, in-plan encode only when collapsed geometries short a full
-    page). Returns the serialized Tile bytes (b'' when the tile is
-    empty)."""
+    page → driver-side command-stream encode into a Layer (a second,
+    in-plan encode only when collapsed geometries short a full page).
+    Returns the serialized Tile bytes (b'' when the tile is empty).
+
+    The page is ordered by `id_col` (else by the geometry's md5), then by
+    `__oid` when the frame carries it, so the features a `max_features`
+    cap keeps never depend on partitioning; its plan is a few py4j calls
+    of SQL text with quoted column names. A page of 2D little-endian
+    points (`geo.functions._decode_uniform_points`) is encoded in one
+    numpy pass (`_point_commands`); any other page feature by feature
+    (`encode_geometry_commands`)."""
     from iceberg_geospatial_api_server_spark.geo.clip import clip_features
+    from iceberg_geospatial_api_server_spark.geo.functions import (
+        _decode_uniform_points,
+    )
 
     xmin, ymin, xmax, ymax = tile_bbox(z, x, y)
     bx = (xmax - xmin) * buffer_px / extent
@@ -333,22 +357,33 @@ def serialize_tile(
 
     fields = list(out_fields or [])
     cols = [id_col] + fields if id_col and id_col not in fields else fields
-    # deterministic page: order before limit (the engine's __oid page
-    # convention) — an unordered limit returns a task-order-dependent
-    # subset whenever a tile overflows max_features
-    page_order = [F.col(id_col)] if id_col else [F.md5(F.col(geom_col))]
+    # deterministic page: a total order before the limit (the engine's
+    # __oid page convention) — otherwise a tile that overflows
+    # max_features keeps a task-order-dependent subset
+    page_order = [
+        sql_name(id_col) if id_col else F.expr(f"md5({sql_name(geom_col)})")
+    ]
+    if "__oid" in df.columns:
+        page_order.append("__oid")
     page = collect_rows(
         clipped.orderBy(*page_order)
-        .select(*dict.fromkeys([*cols, geom_col]))
+        .selectExpr(*map(sql_name, dict.fromkeys([*cols, geom_col])))
         .limit(max_features)
     )
-    features = []
-    for r in page:
-        g = r[geom_col]
-        enc = None if g is None else encode_geometry_commands(bytes(g), z, x, y, extent)
-        if enc is not None:
-            fid = r[id_col] if id_col else None
-            features.append((fid, {c: r[c] for c in fields}, enc[0], enc[1]))
+    pts = _decode_uniform_points([r[geom_col] for r in page])
+    if pts is not None:
+        encoded = [(MVT_POINT, c) for c in _point_commands(pts, z, x, y, extent)]
+    else:
+        encoded = [
+            None if r[geom_col] is None
+            else encode_geometry_commands(bytes(r[geom_col]), z, x, y, extent)
+            for r in page
+        ]
+    features = [
+        (r[id_col] if id_col else None, {c: r[c] for c in fields}, *enc)
+        for r, enc in zip(page, encoded)
+        if enc is not None
+    ]
     if len(page) == max_features > len(features):
         # geometries of a full page collapsed below representability at
         # this zoom, so features past the cap may belong in the tile: one

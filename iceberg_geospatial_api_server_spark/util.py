@@ -89,3 +89,10 @@ def spread(df: DataFrame, partitions: int | None = None, *cols: str) -> DataFram
     for hot input files."""
     n = partitions or df.sparkSession.sparkContext.defaultParallelism
     return df.repartition(n, *cols) if cols else df.repartition(n)
+
+
+def sql_name(name: str) -> str:
+    """`name` as a quoted Spark SQL identifier: backticks around it, any
+    backtick inside doubled, so a name such as `a.b` or `my name` is read
+    as one column, never as a struct field or a syntax error."""
+    return "`" + name.replace("`", "``") + "`"

@@ -845,3 +845,253 @@ def test_polygon_boundary_points_intersect_but_are_not_within(layer, points):
     n = {rel: api.query_layer(df, {**base, "spatialRel": f"esriSpatialRel{rel}"})[0]["count"]
          for rel in ("Intersects", "Within")}
     assert n["Intersects"] > n["Within"] > 0
+
+
+# --- the served plan in a few py4j calls -----------------------------------
+
+
+def _round_trips(monkeypatch, fn):
+    """(fn's result, the py4j commands this thread sent while it ran).
+    The finalizer thread's object releases are not counted."""
+    import threading
+
+    from py4j.clientserver import ClientServerConnection
+
+    me, calls = threading.get_ident(), [0]
+    send = ClientServerConnection.send_command
+
+    def counting(self, command):
+        if threading.get_ident() == me:
+            calls[0] += 1
+        return send(self, command)
+
+    with monkeypatch.context() as m:
+        m.setattr(ClientServerConnection, "send_command", counting)
+        out = fn()
+    return out, calls[0]
+
+
+def test_served_requests_make_few_py4j_round_trips(monkeypatch, layer, points):
+    """A warm request of each map_session kind, with constants it has not
+    seen, builds and runs its plan in at most 60 py4j round trips: the
+    predicates and projections are SQL text, not one call per column,
+    literal and operator."""
+    first = _map_requests(points, len(points) // 2)
+    second = _map_requests(points, len(points) // 5)
+    trips = {}
+    for kind, req in first.items():
+        _serve(layer(), req)
+        payload, trips[kind] = _round_trips(
+            monkeypatch, lambda: _serve(layer(), second[kind])
+        )
+        assert payload, kind
+    assert max(trips.values()) <= 60, trips
+
+
+def _tile_points(z: int, x: int, y: int, buffer_px: int = 64, extent: int = 4096):
+    """Points of tile (z, x, y): its corners and edges, points a fraction
+    of a pixel inside and outside them, the buffer's outer corners, and
+    random points over the buffered tile (negative pixels included)."""
+    xmin, ymin, xmax, ymax = tile_bbox(z, x, y)
+    bx = (xmax - xmin) * buffer_px / extent
+    by = (ymax - ymin) * buffer_px / extent
+    px, py = (xmax - xmin) / extent, (ymax - ymin) / extent
+    xs = [xmin - bx, xmin - px / 2, xmin, xmin + px / 2, (xmin + xmax) / 2,
+          xmax - px / 2, xmax, xmax + px / 2, xmax + bx]
+    ys = [ymin - by, ymin - py / 2, ymin, ymin + py / 2, (ymin + ymax) / 2,
+          ymax - py / 2, ymax, ymax + py / 2, ymax + by]
+    pts = [(a, b) for a in xs for b in ys]
+    rng = random.Random(z * 1000 + x)
+    pts += [(rng.uniform(xmin - bx, xmax + bx), rng.uniform(ymin - by, ymax + by))
+            for _ in range(500)]
+    return pts
+
+
+@pytest.mark.parametrize("tile", [(0, 0, 0), (4, 3, 5), (9, 300, 200), (14, 9000, 7000)])
+def test_numpy_point_encode_equals_per_feature_encode(tile):
+    """`_point_commands` gives each point the command stream
+    `encode_geometry_commands` gives it alone, on tile edges and corners,
+    in the buffer (negative pixels and pixels past the extent) and within
+    half a pixel of an edge."""
+    import numpy as np
+
+    from iceberg_geospatial_api_server_spark.geo import wkb as W
+    from iceberg_geospatial_api_server_spark.geo.functions import (
+        _decode_uniform_points,
+    )
+    from iceberg_geospatial_api_server_spark.serializers.mvt import (
+        _point_commands,
+        encode_geometry_commands,
+    )
+
+    z, x, y = tile
+    pts = _tile_points(z, x, y)
+    bufs = [W.encode_point(a, b) for a, b in pts]
+    coords = _decode_uniform_points(bufs)
+    assert np.array_equal(coords, np.array(pts))
+    got = _point_commands(coords, z, x, y)
+    want = [encode_geometry_commands(b, z, x, y) for b in bufs]
+    assert [(1, g) for g in got] == want
+    # negative pixels zigzag to odd numbers: both axes have some
+    pixels = [(p[1], p[2]) for p in got]
+    assert any(dx % 2 for dx, _ in pixels) and any(dy % 2 for _, dy in pixels)
+
+
+def test_point_tile_equals_per_feature_tile(layer, points):
+    """A point tile of the layer is byte-identical to the layer built from
+    its collected page with every feature encoded on its own."""
+    from iceberg_geospatial_api_server_spark.serializers.mvt import (
+        build_layer,
+        encode_geometry_commands,
+    )
+
+    z, x, y = _tile_of(*points[len(points) // 3], 4)
+    kw = {"out_fields": ["l_quantity"], "id_col": "l_orderkey"}
+    tile = serialize_tile(layer(), z, x, y, **kw)
+    feats = decode_tile(tile)[0]["features"]
+    assert len(feats) == _in_tile(points, z, x, y) > 10
+
+    xmin, ymin, xmax, ymax = tile_bbox(z, x, y)
+    bx, by = (xmax - xmin) * 64 / 4096, (ymax - ymin) * 64 / 4096
+    rows = (
+        layer().filter(
+            (F.col("__bbox_xmin") >= xmin - bx) & (F.col("__bbox_xmin") <= xmax + bx)
+            & (F.col("__bbox_ymin") >= ymin - by) & (F.col("__bbox_ymin") <= ymax + by)
+        )
+        .orderBy("l_orderkey", "__oid")
+        .collect()
+    )
+    want = build_layer(
+        "layer",
+        [
+            (r["l_orderkey"], {"l_quantity": r["l_quantity"]},
+             *encode_geometry_commands(bytes(r["geometry"]), z, x, y))
+            for r in rows
+        ],
+    )
+    assert tile == want
+
+
+_ODD_NAMES = ["a.b", "my name", "back`tick"]
+
+
+def _odd_frame(spark):
+    """Points with attribute columns whose names need quoting in SQL."""
+    from iceberg_geospatial_api_server_spark.geo import wkb as W
+
+    rows = [
+        (bytearray(W.encode_point(-10.0 + i, 5.0 + (i % 4))), i % 5, f"n{i}", i / 4)
+        for i in range(24)
+    ]
+    return spark.createDataFrame(
+        rows,
+        "geometry binary, `a.b` int, `my name` string, `back``tick` double",
+    )
+
+
+def test_served_path_quotes_column_names(spark):
+    """A frame whose column names hold a dot, a space or a backtick serves a
+    bbox page, an ids-only request, an objectIds fetch and a tile naming
+    those columns (each failed with UNRESOLVED_COLUMN or a parse error)."""
+    df = _odd_frame(spark)
+    box = "-20,0,-0.5,20"
+    page, _ = api.query_layer(df, {"f": "json", "geometry": box})
+    got = [f["attributes"] for f in page["features"]]
+    assert len(got) == 10
+    assert {k for a in got for k in a} == {"__oid", *_ODD_NAMES}
+    assert sorted(a["my name"] for a in got) == sorted(f"n{i}" for i in range(10))
+
+    ids, _ = api.query_layer(df, {"f": "json", "geometry": box, "returnIdsOnly": "true"})
+    assert ids["objectIds"] == sorted(a["__oid"] for a in got)
+    fetched, _ = api.query_layer(
+        df, {"f": "json", "objectIds": ",".join(map(str, ids["objectIds"][:3])),
+             "outFields": "my name,back`tick"}
+    )
+    assert [set(f["attributes"]) for f in fetched["features"]] == [
+        {"__oid", "my name", "back`tick"}
+    ] * 3
+
+    tile = decode_tile(
+        serialize_tile(df, 0, 0, 0, out_fields=["my name", "back`tick"], id_col="a.b")
+    )[0]
+    assert len(tile["features"]) == 24
+    assert set(tile["keys"]) == {"my name", "back`tick"}
+    assert sorted(f["id"] for f in tile["features"]) == sorted(i % 5 for i in range(24))
+
+
+def test_capped_tile_is_independent_of_partitioning(spark):
+    """A tile cut by max_features over ids that tie keeps the same features,
+    byte for byte, whatever the partitioning of the same rows: `__oid`
+    breaks the ties."""
+    from iceberg_geospatial_api_server_spark.geo import wkb as W
+    from iceberg_geospatial_api_server_spark.geo.functions import (
+        declare_geometry_types,
+    )
+
+    rows = [
+        (bytearray(W.encode_point(10.0 + i / 7, 10.0 + (i % 11) / 3)), i // 20, i, i)
+        for i in range(120)
+    ]
+    schema = "geometry binary, fid int, n int, __oid int"
+    tiles = []
+    for order, parts in ((1, 1), (-1, 1), (1, 3), (-1, 4)):
+        df = spark.createDataFrame(rows[::order], schema).repartition(parts)
+        for typed in (df, declare_geometry_types(df, ["Point"])):
+            tiles.append(
+                serialize_tile(typed, 3, 4, 3, out_fields=["n"], id_col="fid",
+                               max_features=30)
+            )
+    assert len(set(tiles)) == 1
+    feats = decode_tile(tiles[0])[0]["features"]
+    assert len(feats) == 30
+    assert sorted(f["id"] for f in feats) == [0] * 20 + [1] * 10
+
+
+@pytest.mark.parametrize(
+    "bounds",
+    [("-inf", -90, 0, 90), (-90, "-inf", "inf", 0), ("nan", -90, 90, 90),
+     (0, -90, "inf", "inf")],
+)
+def test_non_finite_bbox_bounds_keep_column_semantics(layer, bounds):
+    """A bbox with infinite or NaN bounds (which `parse_esri_geometry`
+    accepts) selects the rows the Column predicate over the same doubles
+    selects."""
+    df = layer()
+    xmin, ymin, xmax, ymax = (float(b) for b in bounds)
+    want = sorted(
+        r[0]
+        for r in df.filter(
+            (F.col("__bbox_xmax") >= xmin) & (F.col("__bbox_xmin") <= xmax)
+            & (F.col("__bbox_ymax") >= ymin) & (F.col("__bbox_ymin") <= ymax)
+        )
+        .select("__oid")
+        .collect()
+    )
+    got, _ = api.query_layer(
+        df, {"f": "json", "returnIdsOnly": "true",
+             "geometry": ",".join(map(str, bounds))}
+    )
+    assert got["objectIds"] == want
+    assert (want == []) == ("nan" in bounds)
+
+
+def test_sql_double_round_trips_every_double(spark):
+    """`_sql_double` text parses back to the same double, infinities and
+    NaN included, and an empty objectIds list still returns no feature."""
+    from iceberg_geospatial_api_server_spark.engine import query_features
+    from iceberg_geospatial_api_server_spark.geo.functions import _sql_double
+    from iceberg_geospatial_api_server_spark.models import QueryParams
+
+    vals = [0.0, -0.0, 0.1, -1.5e308, 5e-324, 1e22, math.pi,
+            float("inf"), float("-inf"), float("nan")]
+    got = spark.sql("SELECT " + ", ".join(map(_sql_double, vals))).collect()[0]
+    for v, g in zip(vals, got):
+        assert isinstance(g, float)
+        if math.isnan(v):
+            assert math.isnan(g)
+        else:
+            assert (g, math.copysign(1, g)) == (v, math.copysign(1, v))
+
+    df = _odd_frame(spark)
+    res = query_features(df, QueryParams(object_ids=[]))
+    assert res.rows == [] and res.count == 0
