@@ -5,6 +5,10 @@ Prints ONE JSON line:
    "queries": {...per-query sec...}, "sf": <sf>,
    "duckdb_sec": {...}, "duckdb_ratio": <spark/duckdb over shared>,
    "duckdb_shared_queries": <n>}
+and keeps the full artifact as BENCH_local_c<CPUS>.json next to this file.
+The next run at the same core count and scale factor reads that file back
+and flags, under "ratio_outliers_vs_prev", any query whose DuckDB ratio
+moved 3x or more either way.
 The DuckDB reference comparison runs by default (pass --no-duckdb to
 skip; a missing duckdb module degrades to a Spark-only artifact with a
 "duckdb_skipped" marker): the recorded artifact carries the baseline-bar
@@ -12,7 +16,7 @@ number itself. The DuckDB side executes as TWO full passes bracketing the
 Spark pass with per-query MIN across both, and the artifact carries a
 per-query ratio table ("duckdb_ratio_per_query") — so the recorded ratio
 is reproducible against host-state noise and drifts are attributable.
-The host-noise resampling guard is SYMMETRIC (r7): each engine gets up
+The host-noise resampling guard is SYMMETRIC: each engine gets up
 to 2 extra samples for a query whose min exceeds 3× the other engine's
 timing of the same work (Spark keyed on the DuckDB pre-pass, the DuckDB
 post-pass keyed on the recorded Spark mins) — no knob can move the
@@ -45,7 +49,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+HERE = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, HERE)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
@@ -110,82 +115,35 @@ BENCH_QUERIES = [
     "cross_source_overlap",
     "events_distinct_salted",
     "mm_media_stats",
-    # r4 (cont. 2) additions — each a NEW physical-plan shape: iterative
-    # level-rollup, sliding-frame window + lag run-dedup, stacked
-    # running-sum/min windows (tile/hex/hopping binning shapes are
-    # already represented by geo_grid_aggregate / doc_chunks)
+    # each row below adds a physical-plan shape the rows above lack:
+    # iterative level-rollup, sliding-frame window + lag run-dedup,
+    # stacked running-sum/min windows, the degree-oriented double
+    # self-join triangle census, driver-looped integer k-means, wedge
+    # equi-join link prediction, theta-sketch intersection, per-key skew
+    # profiling, mergeable heavy-hitters, broadcast-probe hard-negative
+    # mining, explode-spine + LOCF gapfill, vocab-collapse + blocked
+    # quadratic entity resolution. Entries that repeat a benched shape
+    # stay out, as do contract oracles, whose cost is their assert
+    # machinery rather than a recurring production query.
     "geo_tile_pyramid",
     "text_winnow_fingerprints",
     "events_cusum",
-    # r5 additions — the two NEW plan shapes: the degree-oriented
-    # double self-join triangle census and the driver-looped integer
-    # k-means (bounded per-iteration collects). The round's other new
-    # entries (mm_decode_parity, embed_label_outliers, text_readability)
-    # stay out: each duplicates a shape already benched (mapInPandas
-    # codec kernels ≡ mm_media_stats/embed_quantize_int8; posexplode →
-    # bounded-key agg ≡ embed_dim_stats; scan-stage regex battery ≡
-    # text_gopher_rules) and at sf0.1 they are sub-0.7s scheduling-floor
-    # rows that add no signal
     "graph_triangles",
     "embed_kmeans_stats",
-    # r8 round-start refresh (VERDICT r7 directive 2, executed BEFORE
-    # any r8 perf work): the five late-r7 plan shapes — wedge equi-join
-    # link prediction, theta-sketch intersection + its exact contract
-    # side, per-key skew profiling, mergeable heavy-hitters, and
-    # broadcast-probe hard-negative mining. The artifact now carries
-    # BOTH denominators: duckdb_ratio over the full refreshed set and
-    # duckdb_ratio_r7_intersection over the 58 queries shared with
-    # BENCH_r07, so r7→r8 compares like-for-like.
     "graph_common_neighbors",
     "events_theta_retention",
     "lineitem_key_skew",
     "events_topk_sketch",
     "embed_hard_negatives",
-    # r9 round-start refresh (the recorded r8 plan, executed BEFORE any
-    # r9 perf work): the three r8-new plan shapes — broadcast anti/semi
-    # pass-through + batch-scoped window (SCD2 merge), single-exchange
-    # explode-spine + LOCF window (gapfill), vocab-collapse + blocked
-    # quadratic (entity resolution). embed_pca_checksums stays OUT (its
-    # plan shape duplicates embed_pca_moments' posexplode+integer-agg,
-    # already represented via embed_dim_stats/pca entries); the r9-new
-    # contract oracles (ann_ivfpq_incremental, versioned_read_asof,
-    # scd2_merge_late) stay out like every grading-apparatus entry —
-    # their cost is the merged≡rebuilt assert machinery, not a
-    # recurring production query shape.
     "events_gapfill_ffill",
     "part_entity_resolution",
-    # r10 (VERDICT r9 directive 6): merge_upsert_scd2 — the one weak
-    # r9 bench row — is RETIRED in favor of timing the PRODUCTION
-    # merge alone: scd2_merge_apply pre-materializes the dimension and
-    # the change batch to parquet OUTSIDE the timer (a stored dim is
-    # not rebuilt per merge in any deployment) and times only the
-    # recurring apply (broadcast pass-through + batch re-window + the
-    # default-on order guard). The DuckDB side runs the equivalent
-    # merge SQL over the same materialized tables (registered as
-    # views), so the ratio compares the apply against the apply.
+    # the production SCD2 merge alone: scd2_merge_apply materializes the
+    # dimension and the change batch to parquet outside the timer (a
+    # stored dimension is not rebuilt per merge) and times only the
+    # recurring apply; DuckDB runs the same merge SQL over the same
+    # tables, so the ratio compares the apply against the apply
     "scd2_merge_apply",
 ]
-
-# the r10 round-start changes, kept as a set so the artifact can
-# report the r9-intersection denominator (= shared queries minus
-# these) — the standing convention: round-over-round trends read on
-# the PREVIOUS round's constant denominator. (The r9 additions —
-# events_gapfill_ffill, part_entity_resolution — are now part of the
-# shared base; merge_upsert_scd2 left the set entirely, so it drops
-# out of "shared" on its own.)
-R10_ADDITIONS = {
-    "scd2_merge_apply",
-}
-
-# r11 bench-set plan (recorded now so the refresh happens at ROUND
-# START): the r10-new graded operators (scd2_delete_cdc,
-# versioned_cow_partitions) are contract oracles — their timed cost
-# is the grading apparatus (dual dimension builds, snapshot writes,
-# manifest identity asserts), not a production plan shape; the
-# production paths they certify (the op-aware scd2_merge,
-# overwrite_partitions) are benched via scd2_merge_apply and the
-# SCALE proxies. r11 therefore re-baselines on THIS set with a
-# trivial r10-intersection (= full set) unless r11 adds operators.
 
 # entries whose CONSTRUCTION runs Spark jobs (driver-looped iterations,
 # eager index builds, bounded dim-side collects) — verified empirically
@@ -204,20 +162,9 @@ EAGER_ENTRIES = {
     # cache, clearCache() would unregister it, and reps 2+ would time a
     # different (uncached, recompute-per-consumer) plan than both rep 1
     # and the documented steady state — rebuild per rep so every rep
-    # pays and uses its own persist, the r5-and-earlier behavior
+    # pays and uses its own persist
     "dedup_minhash_lsh",
     "dedup_simhash",
-    # (the r8 sketch-contract precondition guards ship IN-PLAN as
-    # assert_true over 1-row broadcast aggregates — ADVICE r7 items
-    # 2-3 — so those entries remain pure lazy plans)
-    # r9 addition whose construction runs a driver job (the split-point
-    # min/max-day aggregate, 1 row) — pre-classified per ADVICE r8 so
-    # its first timed rep never absorbs construction jobs the protocol
-    # excludes for the other eager entries. events_gapfill_ffill and
-    # part_entity_resolution are pure lazy plans (no construction
-    # collect — verified, and the runtime _build_checked guard would
-    # promote them loudly if that ever changes). (merge_upsert_scd2
-    # retired r10 — see scd2_merge_apply in BENCH_QUERIES.)
 }
 
 
@@ -266,12 +213,12 @@ SELECT user_id, attr, eff_from_us, eff_to_us, is_current FROM rec
 
 def _prepare_scd2_merge_apply(spark):
     """Materialize the SCD2 dimension + change batch to parquet OUTSIDE
-    the timer (VERDICT r9 directive 6): the recurring production shape
-    is `scd2_merge(stored_dim, batch)`, not the dim rebuild the retired
-    merge_upsert_scd2 row timed. Returns (spark_plan, duckdb_views) —
-    the plan reads the materialized tables, so every rep times
-    analysis→execution of the APPLY alone; the same tables back the
-    DuckDB merge SQL (SCD2_APPLY_ORACLE) for a like-for-like ratio."""
+    the timer: the recurring production shape is
+    `scd2_merge(stored_dim, batch)`, not a rebuild of the dimension.
+    Returns (spark_plan, duckdb_views) — the plan reads the materialized
+    tables, so every rep times analysis→execution of the APPLY alone;
+    the same tables back the DuckDB merge SQL (SCD2_APPLY_ORACLE) for a
+    like-for-like ratio."""
     import tempfile
 
     from pyspark.sql import functions as F
@@ -317,12 +264,10 @@ def _prepare_scd2_merge_apply(spark):
 
 
 def main() -> None:
-    # quiet-host guard (VERDICT r8 item 1 / directive 2): the recorded
-    # convention is that bench runs ALONE — concurrent load poisons the
-    # Spark side of the ratio only (DuckDB's brackets straddle it). The
-    # r8 artifact was captured at loadavg 5.1 and had to be adjudicated
-    # by hand; enforce the convention in the tool instead. Measured
-    # BEFORE the SparkSession exists so our own warmup doesn't count.
+    # quiet-host guard: bench runs ALONE — concurrent load poisons the
+    # Spark side of the ratio only (DuckDB's brackets straddle it).
+    # Measured BEFORE the SparkSession exists so our own warmup doesn't
+    # count.
     # If the host is busy, WAIT (up to $SPARK_GRAFT_LOAD_WAIT sec,
     # default 300, poll 10s) for loadavg to fall under the threshold;
     # if it never does, proceed but stamp a loud "load_warning" into
@@ -404,15 +349,15 @@ def main() -> None:
 
     # first DuckDB bracket runs BEFORE the Spark loop (see the noise-
     # hardening note below); a missing duckdb module degrades to a
-    # Spark-only artifact instead of crashing (ADVICE r5)
+    # Spark-only artifact instead of crashing
     skip_duckdb = "--no-duckdb" in sys.argv
     sys_argv_skipped_reason = None
     try:  # host state at start — bursts poison the Spark side only
         load_start = round(os.getloadavg()[0], 2)
     except OSError:
         load_start = None
-    # prepared entries (directive 6): materialize outside the timer,
-    # BEFORE the DuckDB pre-pass so both engines see the same tables
+    # prepared entries: materialize outside the timer, BEFORE the
+    # DuckDB pre-pass so both engines see the same tables
     prepared_plans: dict = {}
     extra_views: dict = {}
     extra_oracles: dict = {}
@@ -432,7 +377,7 @@ def main() -> None:
             skip_duckdb = True
             sys_argv_skipped_reason = "duckdb not installed"
 
-    # runtime enforcement of the lazy/eager split (review r6): the
+    # runtime enforcement of the lazy/eager split: the
     # EAGER_ENTRIES list is empirical, so VERIFY it — a lazy build that
     # runs jobs or registers persists would otherwise mis-time reps 2+
     # (cache populated on rep 1, cleared, then recomputed-per-consumer).
@@ -462,7 +407,7 @@ def main() -> None:
         df = None
         if name in prepared_plans:
             # prepared entry: the plan reads pre-materialized parquet
-            # (built once, outside the timer, by design — directive 6);
+            # (built once, outside the timer, by design);
             # it is a pure lazy plan like any registered view
             df = prepared_plans[name]
         elif name not in EAGER_ENTRIES:
@@ -496,19 +441,19 @@ def main() -> None:
         samples = [time_once(run), time_once(run)]
         if max(samples) > 1.5 * min(samples):  # outlier: settle with a 3rd
             samples.append(time_once(run))
-        # host-noise guard (disclosed, min-estimator only, SYMMETRIC —
-        # VERDICT r6 item 3 / ADVICE r6): this machine shows bursty
-        # multi-second contention episodes (observed 2-6× inflation
-        # lasting minutes) that can swallow BOTH reps of a query. When
-        # the OTHER engine's timing of the same work says this engine's
-        # min looks poisoned (>3× and non-trivial), take up to two more
-        # samples — more samples of the same distribution, a strictly
-        # better estimate of the same MIN statistic both engines
-        # report. The IDENTICAL rule runs on the DuckDB side: the
-        # post-pass resamples any query whose DuckDB min exceeds 3× the
-        # recorded Spark min (_duckdb_reference_timings(spark_ref=...)),
-        # so the knob moves the ratio in BOTH directions and neither
-        # engine enjoys a retry the other is denied.
+        # host-noise guard (disclosed, min-estimator only, SYMMETRIC):
+        # this machine shows bursty multi-second contention episodes
+        # (observed 2-6× inflation lasting minutes) that can swallow BOTH
+        # reps of a query. When the OTHER engine's timing of the same work
+        # says this engine's min looks poisoned (>3× and non-trivial),
+        # take up to two more samples — more samples of the same
+        # distribution, a strictly better estimate of the same MIN
+        # statistic both engines report. The IDENTICAL rule runs on the
+        # DuckDB side: the post-pass resamples any query whose DuckDB min
+        # exceeds 3× the recorded Spark min
+        # (_duckdb_reference_timings(spark_ref=...)), so the knob moves
+        # the ratio in BOTH directions and neither engine enjoys a retry
+        # the other is denied.
         if dd_pre is not None:
             ref = dd_pre.get(name)
             extra = 0
@@ -533,11 +478,6 @@ def main() -> None:
         "unit": "sec",
         "queries": timings,
         "sf": sf_val,
-        # core count stamp (r11, VERDICT r10 what's-wrong #2): the
-        # driver also runs this bench at a lower core count; without
-        # the stamp a later same-SF run anchors its history-keyed
-        # outlier flag to the other core count's timings and flags
-        # garbage (the r10 8-core artifact clobbered the 32-core one)
         "cpus": CPUS,
     }
 
@@ -545,16 +485,16 @@ def main() -> None:
     # carries the bar number (total Spark sec / total DuckDB sec over
     # the shared oracle-bearing queries — the SURVEY §6 protocol number,
     # ≤2.0 = pass); --no-duckdb skips it for Spark-only iteration.
-    # Noise hardening (VERDICT r5 item 7): the DuckDB side runs as TWO
-    # full passes bracketing the Spark pass (one ran above, before the
-    # Spark loop; one here, after), per-query MIN across both — host-state
-    # noise (cache pressure from the co-resident JVM, CPU thermal state)
-    # hits whichever pass is unlucky, and the min of the brackets is what
-    # a fair same-host measurement looks like. Per-query ratios land in
-    # the artifact so a drift is attributable to a query, not the total.
-    try:  # mid-run stamp (directive 8): host state right after the
-        # Spark pass — a burst starting mid-run shows up here even
-        # when the pre-Spark probe was quiet
+    # Noise hardening: the DuckDB side runs as TWO full passes bracketing
+    # the Spark pass (one ran above, before the Spark loop; one here,
+    # after), per-query MIN across both — host-state noise (cache pressure
+    # from the co-resident JVM, CPU thermal state) hits whichever pass is
+    # unlucky, and the min of the brackets is what a fair same-host
+    # measurement looks like. Per-query ratios land in the artifact so a
+    # drift is attributable to a query, not the total.
+    try:  # mid-run stamp: host state right after the Spark pass — a
+        # burst starting mid-run shows up here even when the pre-Spark
+        # probe was quiet
         load_post_spark = round(os.getloadavg()[0], 2)
     except OSError:
         load_post_spark = None
@@ -573,15 +513,13 @@ def main() -> None:
             n: (round(timings[n] / dd[n], 2) if dd[n] > 0 else None)
             for n in shared
         }
-        # burst annotation (VERDICT r7 item 4 — the events_cusum case:
-        # a 40x row in a kept artifact with no in-artifact flag). A
-        # per-query ratio that moved >=3x in EITHER direction against
-        # the most recent recorded artifact is flagged with both values
-        # so the table is readable without the SURVEY narrative. The
-        # key is HISTORY, not the raw cross-engine ratio: sub-second
-        # scheduling-floor rows run 10-100x DuckDB every round by
-        # design and are not noise. Flags with spark-side times under
-        # 0.3s are suppressed (jitter at the scheduling floor).
+        # burst annotation: a per-query ratio that moved >=3x in EITHER
+        # direction against the previous run's anchor is flagged with both
+        # values so the table is readable without the SURVEY narrative.
+        # The key is HISTORY, not the raw cross-engine ratio: sub-second
+        # scheduling-floor rows run 10-100x DuckDB every round by design
+        # and are not noise. Flags with spark-side times under 0.3s are
+        # suppressed (jitter at the scheduling floor).
         hist = _latest_recorded_ratios(sf_val)
         if hist:
             flags = {}
@@ -595,16 +533,13 @@ def main() -> None:
                 out["ratio_outliers_vs_prev"] = flags
         if dd_suspects:
             out["duckdb_guard_exhausted"] = sorted(dd_suspects)
-        # the headline numbers go LAST: the driver's recorded artifact
-        # keeps only the TAIL of a too-long output line (observed in
-        # BENCH_r05.json, whose stored line starts mid-JSON), so the
-        # fields a reader must never lose sit at the end
-        # real-compute subset (directive 7): the full-set ratio carries
+        # the headline numbers go LAST: a recorder that keeps only the
+        # TAIL of a too-long output line still keeps them
+        # real-compute subset: the full-set ratio carries
         # an ever-growing scheduling floor (sub-0.2s DuckDB rows where
         # Spark pays per-query task scheduling that amortizes away at
         # scale); the subset where DuckDB itself does >=200ms of work
-        # is the apples-to-apples engine-throughput number, now a
-        # FIELD instead of a per-round narration
+        # is the apples-to-apples engine-throughput number
         real = [n for n in shared if dd[n] >= 0.2]
         dr_tot = sum(dd[n] for n in real)
         sr_tot = sum(timings[n] for n in real)
@@ -613,39 +548,27 @@ def main() -> None:
             round(sr_tot / dr_tot, 3) if dr_tot else None
         )
         out["duckdb_shared_queries"] = len(shared)
-        # r9→r10 like-for-like comparison (the standing round-over-round
-        # convention): the ratio over the queries shared with the
-        # BENCH_r09 set (= the refreshed shared set minus the r10
-        # additions), so the trend is read on a constant denominator
-        inter = [n for n in shared if n not in R10_ADDITIONS]
-        di_tot = sum(dd[n] for n in inter)
-        si_tot = sum(timings[n] for n in inter)
-        out["r9_intersection_queries"] = len(inter)
-        out["duckdb_ratio_r9_intersection"] = (
-            round(si_tot / di_tot, 3) if di_tot else None
-        )
         out["duckdb_ratio"] = round(s_tot / d_tot, 3) if d_tot else None
     elif skip_duckdb and sys_argv_skipped_reason:
         out["duckdb_skipped"] = sys_argv_skipped_reason
 
-    # host-state stamp (r8, unconditional since r9 — ADVICE r8 item 3:
-    # a Spark-only artifact is exactly the one with no cross-engine
-    # ratio to lean on for burst attribution, so it needs the stamp
-    # MOST): this machine shows multi-minute phantom-load episodes
-    # (loadavg ~4 with zero owned processes) that inflate the Spark
-    # side 1.5-2x; a recorded artifact taken inside one says so itself.
-    # loadavg_pre_spark is the HOST state before our own JVM existed —
-    # the number the quiet-host convention is about; loadavg_start_end
-    # brackets the timed section (includes our own load).
+    # host-state stamp (unconditional: a Spark-only artifact has no
+    # cross-engine ratio to lean on for burst attribution): this machine
+    # shows multi-minute phantom-load episodes (loadavg ~4 with zero owned
+    # processes) that inflate the Spark side 1.5-2x; a recorded artifact
+    # taken inside one says so itself. loadavg_pre_spark is the HOST state
+    # before our own JVM existed — the number the quiet-host convention is
+    # about; loadavg_start_end brackets the timed section (includes our
+    # own load).
     try:
         out["loadavg_pre_spark"] = pre_spark_load
         out["loadavg_start_end"] = [
             load_start,
             round(os.getloadavg()[0], 2),
         ]
-        # per-stage stamps (directive 8): pre-Spark / after the Spark
-        # pass / after the DuckDB post-pass — a burst that starts
-        # mid-run is visible in the artifact without judge forensics
+        # per-stage stamps: pre-Spark / after the Spark pass / after the
+        # DuckDB post-pass — a burst that starts mid-run is visible in the
+        # artifact itself
         out["loadavg_stages"] = {
             "pre_spark": pre_spark_load,
             "post_spark_pass": load_post_spark,
@@ -653,21 +576,6 @@ def main() -> None:
         }
     except OSError:
         pass
-    # telltale-query disclosure (directive 8): the two queries whose
-    # clean-host bands are pinned in SURVEY §6 flag themselves when
-    # they exceed 1.5x the band top — the in-artifact version of the
-    # burst-detection the judge previously did by hand
-    telltales = {
-        "graph_triangles": (1.8, 2.0),
-        "embed_kmeans_stats": (0.55, 0.65),
-    }
-    t_flags = {}
-    for n, (blo, bhi) in telltales.items():
-        t = timings.get(n)
-        if t is not None and t > 1.5 * bhi:
-            t_flags[n] = {"sec": t, "clean_band": [blo, bhi]}
-    if t_flags:
-        out["telltale_deviations"] = t_flags
     if pre_spark_load is not None and pre_spark_load > load_thresh:
         out["load_warning"] = (
             f"host loadavg {pre_spark_load} exceeded {load_thresh} after "
@@ -676,110 +584,36 @@ def main() -> None:
         )
 
     print(json.dumps(out))
-    # persist the FULL artifact next to this file (directive 5): the
-    # driver's recorded BENCH_r*.json keeps only a 2000-char tail that
-    # the grown ratio table no longer fits in, so the history-keyed
-    # outlier flag was silently anchoring to BENCH_r07 — this local
-    # copy is complete, committed with the round, and preferred by
-    # _latest_recorded_ratios
+    # the complete artifact is the next run's outlier anchor; the core
+    # count is in its name because ratios only compare at one width
     try:
-        here = os.path.dirname(os.path.abspath(__file__))
-        with open(os.path.join(here, "BENCH_local_latest.json"), "w") as f:
+        with open(_anchor_path(), "w") as f:
             json.dump(out, f, indent=1)
     except OSError:
         pass
 
 
+def _anchor_path() -> str:
+    return os.path.join(HERE, f"BENCH_local_c{CPUS}.json")
+
+
 def _latest_recorded_ratios(sf_val: float | None = None) -> dict[str, float]:
-    """Per-query ratio table of the newest driver-recorded BENCH_r*.json
-    next to this file (empty when none parse — e.g. a fresh clone).
-    Artifacts recorded at a DIFFERENT scale factor are skipped: ratios
-    are only history-comparable at the same SF (a tiny-SF smoke run is
-    scheduling-floor-dominated and every query would flag).
-
-    The driver's record is a wrapper {n, rc, ..., tail} keeping only the
-    LAST 2000 chars of the output line; the ratio table sits near the
-    end by design, so when its '"duckdb_ratio_per_query": {' marker
-    survives in the tail the whole table does (everything before the
-    marker is truncated duckdb_sec and is ignored)."""
-    import glob
-    import re
-
-    marker = '"duckdb_ratio_per_query": {'
-    best: tuple[int, dict] | None = None
-    here = os.path.dirname(os.path.abspath(__file__))
-    # preferred anchor (directive 5): the complete locally-persisted
-    # artifact of the most recent run — it always carries the whole
-    # ratio table and its sf, so the comparison provably targets the
-    # immediately previous run instead of whatever recorded tail last
-    # happened to fit the marker (BENCH_r08/r09 truncated MID-TABLE
-    # and silently fell back to r7)
-    local = os.path.join(here, "BENCH_local_latest.json")
+    """Per-query ratio table of the previous run at this core count
+    (`_anchor_path`); empty when there is none, or when it was recorded
+    at a different scale factor — ratios only compare at one SF (a
+    tiny-SF smoke run is scheduling-floor-dominated and every query
+    would flag)."""
     try:
-        with open(local) as f:
+        with open(_anchor_path()) as f:
             data = json.load(f)
-        # cpus mismatch skip (r11): an anchor recorded at a different
-        # core count is not ratio-comparable (the driver's 8-core
-        # scaling run must not anchor the next 32-core run's outlier
-        # flags). Artifacts predating the stamp carry no "cpus" key
-        # and stay comparable (they were all recorded at full width).
-        rec_cpus = data.get("cpus")
-        if (rec_cpus is None or int(rec_cpus) == CPUS) and (
-            sf_val is None
-            or (
-                data.get("sf") is not None
-                and float(data["sf"]) == float(sf_val)
-            )
-        ):
-            table = {
-                k: v
-                for k, v in (
-                    data.get("duckdb_ratio_per_query") or {}
-                ).items()
-                if v is not None
-            }
-            if table:
-                return table
     except (OSError, ValueError):
-        pass
-    for path in glob.glob(os.path.join(here, "BENCH_r*.json")):
-        m = re.search(r"BENCH_r(\d+)\.json$", path)
-        if not m:
-            continue
-        try:
-            with open(path) as f:
-                data = json.load(f)
-            rec_sf = data.get("sf")
-            # a recorded artifact whose sf was truncated out of the
-            # tail (the BENCH_r05-style wrapper) is NOT known to be
-            # same-scale — treat missing rec_sf as not comparable
-            # rather than comparable (ADVICE r8 item 4: cross-SF ratio
-            # comparison produces spurious ratio_outliers_vs_prev)
-            if sf_val is not None and (
-                rec_sf is None or float(rec_sf) != float(sf_val)
-            ):
-                continue
-            # same cpus rule as the local anchor (the driver wrapper
-            # stamps "cpus"; a different-width record is skipped)
-            rec_cpus = data.get("cpus")
-            if rec_cpus is not None and int(rec_cpus) != CPUS:
-                continue
-            table = data.get("duckdb_ratio_per_query")
-            if table is None:
-                tail = data.get("tail", "")
-                at = tail.find(marker)
-                end = tail.find("}", at)
-                if at < 0 or end < 0:
-                    continue
-                table = json.loads(tail[at + len(marker) - 1 : end + 1])
-        except (OSError, ValueError):
-            continue
-        table = {
-            k: v for k, v in (table or {}).items() if v is not None
-        }
-        if table and (best is None or int(m.group(1)) > best[0]):
-            best = (int(m.group(1)), table)
-    return best[1] if best else {}
+        return {}
+    if sf_val is not None and (
+        data.get("sf") is None or float(data["sf"]) != float(sf_val)
+    ):
+        return {}
+    table = data.get("duckdb_ratio_per_query") or {}
+    return {k: v for k, v in table.items() if v is not None}
 
 
 def _duckdb_reference_timings(
@@ -812,7 +646,7 @@ def _duckdb_reference_timings(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"
         )
     for v, path in (extra_views or {}).items():
-        # prepared-entry tables (directive 6): the pre-materialized
+        # prepared-entry tables: the pre-materialized
         # parquet the Spark side also reads — same bytes, both engines
         con.execute(
             f"CREATE VIEW {v} AS SELECT * FROM read_parquet('{path}/*.parquet')"

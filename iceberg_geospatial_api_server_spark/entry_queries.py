@@ -9,6 +9,10 @@ Conventions keeping the driver's hash-compare green:
 
 from __future__ import annotations
 
+import glob
+import json
+import os
+
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -75,7 +79,8 @@ def q1(spark, sf_dir):
     "q3_shipping_priority",
     """
     SELECT l_orderkey,
-           ROUND(SUM(l_extendedprice * (1 - l_discount)), 2) AS revenue,
+           FLOOR(SUM(l_extendedprice * (1 - l_discount)) * 100.0 + 0.5) / 100.0
+             AS revenue,
            STRFTIME(o_orderdate, '%Y-%m-%d') AS o_orderdate
     FROM customer, orders, lineitem
     WHERE c_mktsegment = 'BUILDING'
@@ -7379,7 +7384,6 @@ def versioned_expire_gc_q(spark, sf_dir):
     expire_snapshots; tests/test_fs_versioned.py pins the shared-file
     retention case this layout deliberately avoids)."""
     import hashlib
-    import os
     import shutil
 
     from iceberg_geospatial_api_server_spark.operators.dedup import (
@@ -9914,7 +9918,6 @@ def streaming_cusum_state_q(spark, sf_dir):
     user's FINAL state row must equal the batch events_cusum oracle —
     stream ≡ batch graded externally, not just pytest-asserted. State is
     5 longs per user; nothing here is batch-mode fallback."""
-    import os
     import shutil
     import tempfile
     import uuid
@@ -9976,7 +9979,6 @@ def streaming_window_counts_q(spark, sf_dir):
     Value sums quantize to cents BEFORE the stateful accumulation, so
     cross-batch state merge order cannot move a double (the
     events_cusum convention)."""
-    import os
     import shutil
     import tempfile
     import uuid
@@ -10058,7 +10060,6 @@ def streaming_dedup_state_q(spark, sf_dir):
     predicates drop them from the stream, and event-time dedup on a
     NULL watermark column is undefined anyway (review finding —
     mirrored guard, the events_theta_retention convention)."""
-    import os
     import shutil
     import tempfile
     import uuid
@@ -10145,7 +10146,6 @@ def streaming_scd2_cdc_q(spark, sf_dir):
     (tests/test_streaming.py)
     (streaming/windows.py scd2_cdc_stream; ref api/main.py:492-604 —
     the MERGE INTO surface this keeps runnable jar-less)."""
-    import os
     import shutil
     import tempfile
 
@@ -10235,7 +10235,6 @@ def streaming_attribution_pairs_q(spark, sf_dir):
     post-cut outcome (≥ cut − 1h). Emitted columns are key/value-derived
     only (ids + pre-quantized cents), so within-batch row order cannot
     move the hash."""
-    import os
     import shutil
     import tempfile
     import uuid
@@ -11350,1534 +11349,60 @@ def geo_clip_rects_q(spark, sf_dir):
 # ===========================================================================
 # Registration order
 # ===========================================================================
-# The driver grades only the first 50 registered entries, so ordering is
-# load-bearing: oracle-bearing (hash-comparable) queries must register before
-# rows-only ones.  With 63 oracle-bearing entries and a 50-slot window, 13
-# must overflow.  Round 3 ROTATES the window (VERDICT r2 directive #1): the 13
-# entries the driver had never independently observed (the round-2 overflow)
-# now register first, and 13 entries that passed the driver's
-# rows+schema+hash check in BOTH round 1 and round 2 — each a thin facet or
-# single-row aggregate whose machinery is still covered by a graded sibling,
-# and each still value-asserted locally by tests/test_oracle_parity.py —
-# rotate out.  Next round the sets can swap again if new entries displace.
-_ORACLED_OVERFLOW = [
-    "q4_order_priority",  # driver-green r1+r2; exists-semi-join also in q21
-    "q6_forecast_revenue",  # driver-green r1+r2; scan-agg pinned by plan test
-    "q12_shipmode_priority",  # driver-green r1+r2; CASE-agg also in q14
-    "q14_promo_revenue",  # driver-green r1+r2; single-row part-join agg
-    "q17_small_qty_revenue",  # driver-green r1+r2; correlated-avg also in q2-style
-    "q19_disjunctive",  # driver-green r1+r2; single-row disjunctive filter
-    "top3_orders_per_priority",  # driver-green r1+r2; window-rank also in q15
-    "events_pivot",  # driver-green r1+r2; pivot over graded events_user_stats base
-    "orders_rollup",  # driver-green r1+r2; ROLLUP over graded q1 agg machinery
-    "events_user_stats",  # driver-green r1+r2; per-user agg under events_sessionize
-    "catalog_row_counts",  # driver-green r1+r2; COUNT(*) per table
-    "catalog_table_files",  # driver-green r1+r2; file-listing projection
-    "dedup_keep_first_prefix",  # driver-green r1+r2; min-id semi-join on dedup_exact
-    # r3: two more proven entries rotate out so the NEW oracle-bearing
-    # operators (corpus_split, corpus_decontaminate) are driver-graded
-    # in the round they land (ADVICE r2: don't park new ops ungraded)
-    "q10_returned_items",  # driver-green r1+r2; join+agg shape shared with q3/q5
-    "events_windowed_agg",  # driver-green r1+r2; window agg also stream-equiv-tested
-    "q13_customer_distribution",  # driver-green r1+r2; outer-join plan-asserted
-    # r3 (cont.): five more proven entries rotate out so the newly
-    # registered TPC-H analogs (q2/q9/q11/q16/q20) are driver-graded in
-    # the round they land
-    "q18_large_volume",  # driver-green r1+r2; agg-threshold join shape also in q20
-    "mm_frame_sample",  # driver-green r1+r2; sequence-explode also in graded doc_chunks
-    "text_ngram_topk",  # driver-green r1+r2; explode→agg→topk under graded ngram_jaccard
-    "sample_per_lang",  # driver-green r1+r2; id_hash sampling machinery graded via corpus_split
-    "geo_grid_aggregate",  # driver-green r1+r2; grid binning also in graded fq_aggregate_mode
-    # r3 (cont.): three more rotate out for the new pipeline operators
-    # (pack_sequences, embed_quantize_int8, events_outliers)
-    "q7_volume_shipping",  # driver-green r2; dims-broadcast fact join also in new q9
-    "q8_market_share",  # driver-green r2; scalar-share agg shape under q14/q15
-    "embed_neardup_cosine",  # driver-green r1+r2; cosine kernel graded via ann_bruteforce_topk
-    # r3 (cont.): two more rotate out for corpus_source_stats and
-    # cross_source_overlap
-    "events_sessionize",  # driver-green r1+r2; also stream≡batch equivalence-tested
-    "geo_dwithin",  # driver-green r1+r2; distance kernel graded via geo_knn/geo_nearest_join
-    # r3 (cont.): one more rotates out for events_distinct_salted
-    "corpus_mixture",  # driver-green r1+r2; id_hash-threshold filter graded via corpus_split
-    # r4: five driver-green r3 entries rotate out so (a) the new
-    # geo_albers oracle lands graded and (b) the four never-observed
-    # rows-only entries (below) finally get driver rows+schema rows
-    "part_type_stats",  # driver-green r3; plain groupBy-agg shape under q1/q16
-    "doc_length_histogram",  # driver-green r3; width_bucket binning under text_profile
-    "fq_count_only",  # driver-green r3; count facet of graded fq_attribute_filter
-    "fq_ids_only",  # driver-green r3; projection facet of graded fq_object_ids
-    "geo_mercator",  # driver-green r3; kernel also under api outSR + extent tests
-    # r4 (cont.): two more rotate out so the second conic oracle
-    # (geo_lcc) and the PII scrub are graded in the round they land
-    "events_funnel",  # driver-green r3; sequence-match also stream-equiv-tested
-    "corpus_split",  # driver-green r3; id_hash CASE split pinned by hash property tests
-    "events_retention",  # driver-green r3; cohort self-join also under funnel tests
-    "events_props_stats",  # driver-green r3; map/array props agg under events_user_stats
-    # r4 (cont.): two more rotate out so the new oracled entries
-    # (text_gopher_rules, embed_dim_stats) are graded in the round they
-    # land while all four never-observed rows-only entries keep their slots
-    "text_language_id",  # driver-green r1-r3; lang_pred also inside graded text_profile
-    "q22_lapsed_customers",  # driver-green r3; NOT-EXISTS anti-join shape also in graded q21
-    # r5: geo_ps / ann_ivf_exhaustive / ann_lsh_exhaustive leave the
-    # overflow — they carry oracles the driver has never graded, so the
-    # recorded r5 rotation puts them first in the window (they re-enter
-    # the overflow once they carry a driver-green row).
-    # r4 (cont.): two multi-round-green entries rotate out so the new
-    # dedup-pipeline oracles (corpus_segment_dedup, text_dup_spans) are
-    # graded in the round they land
-    "text_profile",  # driver-green r1-r3; quality/lang/token machinery also
-    # graded via text_gopher_rules, corpus_token_budget, text_language_id
-    "dedup_exact",  # driver-green r2+r3; md5 groupBy shape also graded via
-    # dedup_keep_first_prefix and corpus_clean's shared md5 shuffle
-    # r4 (cont.): two more rotate out so the training-mixture and
-    # model-quality-filter oracles (corpus_temperature_mixture,
-    # corpus_quality_classifier) are graded in the round they land
-    "q3_shipping_priority",  # driver-green r1+r3; join+agg+topk shape also
-    # graded via q5/q10 and the q15/q21 top-k family
-    "mm_media_stats",  # driver-green r2+r3; map-side explode stats shape
-    # also graded via doc_chunks and overflow mm_frame_sample
-    # r4 (cont.): one more rotates out so the CCNet perplexity oracle
-    # (corpus_perplexity) is graded in the round it lands
-    "ngram_jaccard_pairs",  # driver-green r1; trigram-hash machinery also
-    # graded via corpus_decontaminate and dedup_simhash_stats
-    # r4 (cont.): two more rotate out so the data-lineage and
-    # distribution oracles (corpus_diff, doc_length_quantiles) are
-    # graded in the round they land
-    "q5_local_supplier",  # driver-green r1+r2+r3; multi-dim join-agg shape
-    # also graded via q9/q21
-    "geo_knn",  # driver-green r1+r2+r3; distance kernel + TakeOrdered
-    # top-k also graded via geo_nearest_join and plan-asserted
-    # r4 (cont.): one more rotates out so the salted-top-k oracle
-    # (events_topk_salted) is graded in the round it lands
-    "asof_join_events_orders",  # driver-green r1+r2+r3; as-of kernel also
-    # stream-equiv-tested and exercised every round in bench
-    # r4 (cont.): one more rotates out so the composed-pipeline oracle
-    # (corpus_curate) is graded in the round it lands
-    "fq_bbox_filter",  # driver-green r1+r2+r3; the bbox decode+prefilter
-    # path is also graded via fq_geometry_filter(_rects) and geo_extent
-    # r4 (cont.): one more rotates out so the semantic-decontamination
-    # oracle (embed_semantic_decontaminate) is graded in the round it
-    # lands
-    "corpus_clean",  # driver-green r2+r3; its filter+md5-keep-first
-    # machinery is a strict subset of the graded corpus_curate
-    # r4 (cont.): one more rotates out so the shard-sink materialization
-    # oracle (pack_materialize — md5-of-pack-contents) is graded in the
-    # round it lands
-    "doc_chunks",  # driver-green r2+r3; sequence→slice→explode shape
-    # also graded via corpus_segment_dedup, and pack_materialize now
-    # grades the stronger token-stream contract
-    # r4 (cont.): one more rotates out so the connected-components
-    # closure oracle (dedup_cluster_assign — recursive-CTE cross-check)
-    # is graded in the round it lands
-    "q15_top_supplier",  # driver-green r2+r3; view-over-agg top-1 shape
-    # also graded via the q2/q21 top-k family and rev-share windows
-    # r4 (cont.): two more rotate out so the epoch-shuffle and TF-IDF
-    # oracles (corpus_epoch_order, text_tfidf_topk) are graded in the
-    # round they land
-    "geo_utm",  # driver-green r3; the projection-family machinery is now
-    # also graded via the geo_lcc + geo_albers conic oracles
-    "events_distinct_salted",  # driver-green r3; the salting
-    # decomposition is also graded via events_topk_salted
-    # r4 (cont.): dedup_keep_best STRICTLY SUBSUMES the cluster-assign
-    # grading (cluster_id is one of its projected columns) and adds the
-    # cluster_size + keep-decision contract, so the assign entry cedes
-    # its slot with zero machinery left ungraded
-    "dedup_cluster_assign",
-    # r4 (cont.): one more rotates out so the minhash band-census oracle
-    # (dedup_minhash_stats — the dedup_simhash_stats grading pattern
-    # applied to minhash) is graded in the round it lands
-    "q20_excess_suppliers",  # driver-green r3; agg-threshold semi-join
-    # shape also graded via q21 (in window) and overflow q18
-    # r4 (cont.): one more rotates out so the market-basket affinity
-    # oracle (orders_brand_affinity) is graded in the round it lands
-    "text_repetition_profile",  # driver-green r3; its duplicate-gram
-    # list accounting is also value-graded via text_dup_spans and
-    # corpus_segment_dedup (stronger contracts over the same machinery)
-    # r4 (cont.): lands with LOCAL grading only — every remaining
-    # in-window entry carries distinct machinery, so no slot donor with
-    # an honest rationale; rotate into the driver window in r5 alongside
-    # geo_ps / ann_ivf_exhaustive / ann_lsh_exhaustive
-    "events_outliers_mad",
-    # r4 (cont.): same story — interval-overlap join entry lands with
-    # LOCAL grading, queued for the r5 rotation
-    "events_session_overlap",
-    # r4 (cont. 2): web-map binning entries land with LOCAL grading
-    # (window full, no honest donor left), queued for the r5 rotation
-    "geo_tile_aggregate",
-    "geo_hex_aggregate",
-    # r4 (cont. 2): sequential-analytics entries, same local-grading +
-    # r5-rotation story
-    "events_cusum",
-    "events_hopping_agg",
-    # r4 (cont. 2): winnowing fingerprints, same story
-    "text_winnow_fingerprints",
-    # r4 (cont. 2): Sutherland–Hodgman viewport clip + geodesic kNN,
-    # same story
-    "geo_clip_rects",
-    "geo_haversine_knn",
-    # r4 (cont. 2): pyramid rollup ≡ direct-binning equivalence entry,
-    # same story
-    "geo_tile_pyramid",
-    # r4 (cont. 2): KDE heat grid + Markov transition matrix, same story
-    "geo_heatmap",
-    "events_transitions",
-    # r4 (cont. 2): deterministic winnowing pair generation, same story
-    "text_winnow_pairs",
-    # r4 (cont. 2): DBSCAN neighbor-kernel oracle, same story
-    "geo_dbscan_core",
-    # r4 (cont. 2): kNN join + RFM segmentation, same story
-    "geo_knn_join",
-    "events_rfm",
-    # r4 (cont. 2): within-distance join + Gi* hotspots, same story
-    "geo_dwithin_join",
-    "geo_hotspot_gi",
-    # r4 (cont. 2): Moran's I + Zipf fit, same story
-    "geo_moran_i",
-    "text_zipf_fit",
-    # r4 (cont. 2): volume ACF + Pareto curve, same story
-    "events_autocorr",
-    "customer_pareto",
-    # r4 (cont. 2): OD flow matrix, same story
-    "geo_od_flows",
-    # r4 (cont. 2): span-level decontamination + dedup materialization,
-    # same story
-    "corpus_decontaminate_spans",
-    "dedup_spans_scrub",
-    # r4 (cont. 2): classifier confusion + rolling-distinct DAU/WAU,
-    # same story
-    "text_lang_confusion",
-    "events_dau_rolling",
-    # r4 (cont. 2): novelty curve, same story
-    "text_ngram_novelty",
-    # r4 (cont. 3): one more rotates out so the Wilson-bound error-rate
-    # oracle (events_error_rate) is graded in the round it lands while
-    # all four never-observed rows-only entries keep their slots:
-    # driver-green r3; its exact-median machinery is graded in-window by
-    # doc_length_quantiles and its per-source agg shape by
-    # cross_source_overlap
-    "corpus_source_stats",
-    # r4 (cont. 3): two more rotate out so the cohort-LTV and
-    # seasonal-anomaly oracles (orders_cohort_ltv,
-    # events_seasonal_anomaly) are graded in the round they land:
-    "q1_pricing_summary",  # driver-green r1+r2+r3; ALSO exercised every
-    # round as the entry() smoke query, in bench, and by the q1 pushdown
-    # plan assertion — the scan-agg CASE shape is further graded via
-    # q9/q16 in window
-    "ann_bruteforce_topk",  # driver-green r1+r2+r3; the cosine-top-k
-    # kernel is graded in-window by ann_ivfpq_exhaustive's exact
-    # re-rank contract and locally by the ANN recall suite
-    # r4 (cont. 3): two more rotate out so the containment-dedup and
-    # user-journey oracles (text_containment_pairs, events_session_paths)
-    # are graded in the round they land:
-    "geo_extent",  # driver-green r1+r3; the WKB bbox decode + min/max
-    # extent machinery is graded in-window by fq_geometry_filter(_rects)
-    # and locally by the api returnExtentOnly/outSR-corner tests
-    "q16_supplier_part_count",  # driver-green r3; the distinct-count agg
-    # shape is graded in-window by cross_source_overlap and the NOT-IN
-    # anti-join by q21
-    # r4 (cont. 3): one more rotates out so the centroid-drift oracle
-    # (embed_centroid_drift) is graded in the round it lands:
-    "fq_attribute_filter",  # driver-green r1+r2+r3; the WHERE-sanitizer
-    # + filter path is graded in-window by fq_object_ids and
-    # fq_geometry_filter, and locally by the sanitizer matrix tests
-    # r4 (cont. 3): two more rotate out so the vocabulary-entropy and
-    # purchase-cadence oracles (corpus_entropy,
-    # orders_purchase_intervals) are graded in the round they land:
-    "fq_aggregate_mode",  # driver-green r1+r2+r3; the bbox-decode path
-    # is graded in-window by fq_geometry_filter(_rects) and the grid
-    # binning by overflow geo_grid_aggregate (driver-green r1+r2)
-    "geo_pip_join_count",  # driver-green r1+r2+r3 and perf-audited in
-    # bench every round; the ray-cast intersects kernel is graded
-    # in-window by fq_geometry_filter and the grid equi-join shape is
-    # plan-asserted (test_plans.py)
-    # r4 (cont. 3): one more rotates out so the expectation-suite
-    # oracle (data_quality_report) is graded in the round it lands:
-    "geo_nearest_join",  # driver-green r1+r2+r3 and perf-audited in
-    # bench every round; the ring-search nearest kernel is graded via
-    # overflow geo_knn/geo_haversine_knn (r5 queue) and recall tests
-    # r4 (cont. 3): circular-statistics entry lands with LOCAL 3-SF
-    # grading only — the remaining in-window multi-round-green entries
-    # each back a donor rationale already spent this round, so no
-    # honest donor is left; queued for the r5 rotation
-    "geo_flow_bearings",
-    # r4 (cont. 3): same story — daily bounce rate lands with LOCAL
-    # 3-SF grading, queued for the r5 rotation (its sessionize
-    # machinery carries events_sessionize's r1+r2 driver greens and
-    # the stream≡batch session-window tests)
-    "events_bounce_rate",
-    # r4 (cont. 3): same story — filtered vector search lands with
-    # LOCAL 3-SF grading, queued for the r5 rotation (its cosine
-    # kernel is graded in-window via ann_ivfpq_exhaustive)
-    "ann_filtered_topk",
-    # r4 (cont. 3): same story — integer-exact PageRank lands with
-    # LOCAL 3-SF grading (160 / 1600 / 15999 node-rows MATCH), queued
-    # for the r5 rotation
-    "graph_pagerank",
-    # r4 (cont. 3): same story — multi-touch attribution lands with
-    # LOCAL 3-SF grading, queued for the r5 rotation (its range-join
-    # kernel carries the stream≡batch attribution equivalence test)
-    "events_attribution_lag",
-    # r4 (cont. 3): same story — supplier-concentration HHI lands with
-    # LOCAL 3-SF grading, queued for the r5 rotation
-    "brand_supplier_hhi",
-    # r4 (cont. 3): same story — per-tile net flow lands with LOCAL
-    # 3-SF grading, queued for the r5 rotation
-    "geo_tile_netflow",
-    # r5 (late): the MULTIPOLYGON codec entry lands with LOCAL 3-SF
-    # grading — the window's donor rationales are spent this round, so
-    # it queues for r6 first alongside the eight r6-queued donors (its
-    # single-polygon sibling geo_polygon_areas is in-window and grades
-    # the same ring_q kernel)
-    "geo_multipolygon_areas",
-    # ----- r5 rotation: the 46 r4-green window entries retire to the
-    # overflow (every one carries a fresh CORRECTNESS_r04 hash-MATCH, so
-    # each cedes its slot with a driver-verified row on record), making
-    # room for the 38 never-driver-graded oracles promoted below plus
-    # this round's new entries. Alphabetical; the donor rationale is
-    # uniform: "driver-green r4" -----
-    "ann_ivfpq_exhaustive",
-    "corpus_curate",
-    "corpus_decontaminate",
-    "corpus_diff",
-    "corpus_entropy",
-    "corpus_epoch_order",
-    "corpus_perplexity",
-    "corpus_pii_scrub",
-    "corpus_quality_classifier",
-    "corpus_segment_dedup",
-    "corpus_temperature_mixture",
-    "corpus_token_budget",
-    "cross_source_overlap",
-    "data_quality_report",
-    "dedup_keep_best",
-    "dedup_minhash_stats",
-    "dedup_simhash_stats",
-    "doc_length_quantiles",
-    "embed_centroid_drift",
-    "embed_dim_stats",
-    "embed_quantize_int8",
-    "embed_semantic_decontaminate",
-    "events_error_rate",
-    "events_outliers",
-    "events_seasonal_anomaly",
-    "events_session_paths",
-    "events_topk_salted",
-    "fq_geometry_filter",
-    "fq_geometry_filter_rects",
-    "fq_object_ids",
-    "geo_albers",
-    "geo_lcc",
-    "mm_features_stats",
-    "orders_brand_affinity",
-    "orders_cohort_ltv",
-    "orders_purchase_intervals",
-    "pack_materialize",
-    "pack_sequences",
-    "q2_min_cost_supplier",
-    "q9_product_type_profit",
-    "q11_important_stock",
-    "q21_waiting_suppliers",
-    "text_containment_pairs",
-    "text_dup_spans",
-    "text_gopher_rules",
-    "text_tfidf_topk",
-]
+# The driver grades the first 50 entries of queries(), so the order re-grades
+# the oracles it saw pass least recently: the jump queue first, then every
+# oracle by the newest CORRECTNESS_r<N>.json round that hash-matched it
+# (never-matched first), then by name; rows-only entries follow in
+# registration order. tools/window_check.py checks the result independently.
 
-# r5 rotation, part 2 (executing the plan recorded in r4 and VERDICT r4
-# item 2): every oracled entry still in the overflow that has NEVER
-# carried a driver-green row is promoted into the window this round —
-# the 35 locally-3-SF-verified continuation entries below (their
-# rationale comments above are left in place as the historical ledger;
-# membership in this list overrides them) joining
-# geo_ps / ann_ivf_exhaustive / ann_lsh_exhaustive (removed from the
-# list above). Expected green: all 38 passed tools/drive.py at
-# sf0.001 + sf0.01 + sf0.1 and the r4 judge independently verified the
-# 39-entry never-graded set.
-_R5_PROMOTED = [
-    "events_outliers_mad",
-    "events_session_overlap",
-    # geo_tile_aggregate stays queued (r6): this round's 7 NEW oracled
-    # entries (mm_extract_features/mm_decode_parity/embed_kmeans_stats/
-    # embed_label_outliers/streaming_cusum_state/graph_triangles/
-    # text_readability) take window slots, and tile_aggregate is the
-    # honest donor — in-window geo_tile_pyramid's oracle re-bins
-    # DIRECTLY at every zoom with the identical assignment expression,
-    # so the tile-binning math is externally graded either way
-    "geo_hex_aggregate",
-    "events_cusum",
-    # events_hopping_agg stays queued (r6): orders_forecast_linreg (new
-    # this round, in window) takes its slot, and hopping_agg is the
-    # honest donor — in-window events_dau_rolling grades the identical
-    # map-side hopping fan-out trick (explode to the window-end keys a
-    # row serves) over the same events table
-    "text_winnow_fingerprints",
-    "geo_clip_rects",
-    "geo_haversine_knn",
-    "geo_tile_pyramid",
-    "geo_heatmap",
-    "events_transitions",
-    # text_winnow_pairs stays queued (r6): geo_line_lengths (new this
-    # round, in window) takes its slot — winnowing's selection rule is
-    # graded in-window by text_winnow_fingerprints and its
-    # fingerprint-bucket pair join by the graded dedup-pair family
-    "geo_dbscan_core",
-    "geo_knn_join",
-    "events_rfm",
-    # geo_dwithin_join stays queued (r6): geo_multiline_lengths (new
-    # this round, in window) takes its slot — the 3×3 grid equi-join +
-    # exact d² predicate is graded in-window by geo_dbscan_core, which
-    # runs the same kernel and grades core flags on top
-    "geo_hotspot_gi",
-    "geo_moran_i",
-    "text_zipf_fit",
-    "events_autocorr",
-    # customer_pareto stays queued (r6): mm_resize_parity (new this
-    # round, in window) takes its slot — pareto's NTILE cut-point
-    # machinery is graded in-window by events_rfm and its DECIMAL-exact
-    # revenue accumulation by the graded TPC-H family
-    # geo_od_flows stays queued (r6): geo_polygon_areas (new this round,
-    # in window) takes its slot — the OD fact-fact orderkey exchange and
-    # tile arithmetic are graded in-window by geo_tile_netflow and
-    # geo_flow_bearings, both derived from the SAME od join
-    "corpus_decontaminate_spans",
-    # dedup_spans_scrub stays queued (r6): corpus_dedup_materialize (new
-    # this round, in window) takes its slot, and scrub is the honest
-    # donor — in-window corpus_decontaminate_spans grades the shared
-    # _mask_hit_spans island/mask machinery reconstruction-md5-level,
-    # and scrub's keep-first census carries its own crafted pin tests
-    "text_lang_confusion",
-    "events_dau_rolling",
-    "text_ngram_novelty",
-    "geo_flow_bearings",
-    # events_bounce_rate stays queued (r6): streaming_window_counts (new
-    # this round, in window) takes its slot — bounce rate rides the
-    # sessionize exchange that carried events_sessionize's r1+r2 driver
-    # greens, and its exact-integer day census shape is graded in-window
-    # by events_dau_rolling
-    "ann_filtered_topk",
-    "graph_pagerank",
-    "events_attribution_lag",
-    "brand_supplier_hhi",
-    "geo_tile_netflow",
-]
-_ORACLED_OVERFLOW = [
-    n for n in _ORACLED_OVERFLOW if n not in set(_R5_PROMOTED)
-]
-
-# ----- r6 rotation (executing the plan recorded below in r5 and in
-# VERDICT r5 item 2): the 44 r5-green window entries retire to the
-# overflow — every one carries a fresh CORRECTNESS_r05 hash-MATCH (or,
-# for streaming_cusum_state/streaming_window_counts, a driver MATCH of
-# the real micro-batch run), so each cedes its slot with a
-# driver-verified row on record. Donor rationale uniform:
-# "driver-green r5". -----
-_ORACLED_OVERFLOW += [
-    "ann_filtered_topk",
-    "ann_ivf_exhaustive",
-    "ann_lsh_exhaustive",
-    "brand_supplier_hhi",
-    "corpus_decontaminate_spans",
-    "corpus_dedup_materialize",
-    "embed_kmeans_stats",
-    "embed_label_outliers",
-    "events_attribution_lag",
-    "events_autocorr",
-    "events_cusum",
-    "events_dau_rolling",
-    "events_outliers_mad",
-    "events_rfm",
-    "events_session_overlap",
-    "events_transitions",
-    "geo_clip_rects",
-    "geo_dbscan_core",
-    "geo_flow_bearings",
-    "geo_haversine_knn",
-    "geo_heatmap",
-    "geo_hex_aggregate",
-    "geo_hotspot_gi",
-    "geo_knn_join",
-    "geo_line_lengths",
-    "geo_moran_i",
-    "geo_multiline_lengths",
-    "geo_polygon_areas",
-    "geo_ps",
-    "geo_tile_netflow",
-    "geo_tile_pyramid",
-    "graph_pagerank",
-    "graph_triangles",
-    "mm_decode_parity",
-    "mm_extract_features",
-    "mm_resize_parity",
-    "orders_forecast_linreg",
-    "streaming_cusum_state",
-    "streaming_window_counts",
-    "text_lang_confusion",
-    "text_ngram_novelty",
-    "text_readability",
-    "text_winnow_fingerprints",
-    "text_zipf_fit",
-]
-
-# r6 window refill, per the recorded plan: (1) the nine r6-queued
-# oracles — each locally 3-SF-verified in r5 AND independently MATCHed
-# by the r5 judge's own drive.py runs, so expect green; (2) this
-# round's new oracled entries in the round they land (registered
-# outside the overflow, so they enter the window automatically — each
-# new landing displaces one name from the r3-vintage TAIL of the
-# re-grade block below back into the overflow, keeping the window at
-# exactly 50); (3) the remaining slots re-grade the LEAST-recently-
-# green oracles, r1/r2 vintage first, so every oracle's green row
-# stays fresh round-over-round.
-_R6_PROMOTED = [
-    # (1) the nine r6-queued oracles
-    "geo_tile_aggregate",
-    "dedup_spans_scrub",
-    "events_hopping_agg",
-    "text_winnow_pairs",
-    "geo_od_flows",
-    "customer_pareto",
-    "events_bounce_rate",
-    "geo_dwithin_join",
-    "geo_multipolygon_areas",
-    # (3) stale re-grades: r1/r2-vintage greens first (last driver row
-    # is two-plus rounds old), then r2-only, then the oldest r3s
-    "q4_order_priority",
-    "q6_forecast_revenue",
-    "q12_shipmode_priority",
-    "q14_promo_revenue",
-    "q17_small_qty_revenue",
-    "q19_disjunctive",
-    "top3_orders_per_priority",
-    "events_pivot",
-    "orders_rollup",
-    "events_user_stats",
-    "catalog_row_counts",
-    "catalog_table_files",
-    "dedup_keep_first_prefix",
-    "q10_returned_items",
-    "events_windowed_agg",
-    "q13_customer_distribution",
-    "q18_large_volume",
-    "mm_frame_sample",
-    "text_ngram_topk",
-    "sample_per_lang",
-    "geo_grid_aggregate",
-    "embed_neardup_cosine",
-    "events_sessionize",
-    "geo_dwithin",
-    "corpus_mixture",
-    "q7_volume_shipping",
-    "q8_market_share",
-    # ngram_jaccard_pairs displaced (r6): geo_line_join_parity (new
-    # this round, in window) takes its slot — the trigram-hash blocked-
-    # pair machinery is graded in-window via corpus_decontaminate's r6
-    # re-grade slot (same _GRAMS kernel) and it keeps its r1 green;
-    # r7-queued
-    # r3-vintage tail — displaced first (in reverse order) as new r6
-    # oracled entries land
-    # part_type_stats displaced (r6): geo_buffer_parity (new this
-    # round, in window) takes its slot — the plain groupBy-agg shape is
-    # graded in-window by q1/q16-family machinery and it keeps its r3
-    # driver green
-    # doc_length_histogram displaced (r6): geo_simplify_parity (new
-    # this round, in window) takes its slot — the width_bucket binning
-    # is graded in-window under text_profile's machinery and it keeps
-    # its r3 driver green
-    # fq_count_only displaced (r6): mm_phash_parity (new this round, in
-    # window) takes its slot — the count facet rides graded
-    # fq_attribute_filter machinery (r7-queued) and keeps its r3 green
-    # geo_mercator displaced (r6): geo_hull_parity (new this round, in
-    # window) takes its slot — mercator's kernel is graded via the
-    # conic/polar family's r4-r5 greens and the api outSR tests, and it
-    # keeps its r3 driver green
-    # fq_ids_only displaced (r6): mm_scene_cuts_parity (new this round,
-    # in window) takes its slot — the OID projection facet is graded
-    # in-window by fq_object_ids' machinery (same path) via
-    # fq_count_only, and it keeps its r3 driver green
-    # events_funnel displaced (r6): mm_audio_fp_parity (new this round,
-    # in window) takes its slot — funnel's sequence-match machinery is
-    # stream-equiv-tested and keeps its r3 driver green
-    # corpus_split displaced (r6): embed_pca_moments (new this round,
-    # in window) takes its slot — split's id_hash CASE machinery is
-    # pinned by the hash property tests and graded in-window by
-    # corpus_mixture's shared threshold arithmetic
-    # events_retention displaced (r6): geo_multipoint_checksums (new
-    # this round, in window) takes its slot — retention keeps its r3
-    # driver green and is queued FIRST for the r7 window alongside
-    # funnel (both displaced this round; see the recorded r7 plan —
-    # no in-window sibling covers the cohort self-join this round,
-    # which is why both head the r7 queue)
-    # events_props_stats displaced (r6): geo_knn_join_grid (new this
-    # round, in window) takes its slot per the recorded convention —
-    # props_stats' map/array agg machinery is graded in-window by
-    # events_user_stats and keeps its r3 driver green
-]
-_ORACLED_OVERFLOW = [
-    n for n in _ORACLED_OVERFLOW if n not in set(_R6_PROMOTED)
-]
-
-# r7 ROTATION PLAN (recorded now, the r4→r5→r6 convention): after this
-# round every rows-only entry has a driver observation and the freshest
-# greens are the r6 window's 46. The r7 window should be: (1) any
-# r7-new oracled entries in the round they land; (2) the four
-# r3-vintage re-grades displaced by this round's new entries —
-# events_funnel, corpus_split, events_retention, events_props_stats —
-# plus the rest of the r3-vintage stale set (text_language_id,
-# q22_lapsed_customers, text_profile, dedup_exact, q3_shipping_priority,
-# mm_media_stats, q5_local_supplier, geo_knn, asof_join_events_orders,
-# fq_bbox_filter, corpus_clean, doc_chunks, q15_top_supplier, geo_utm,
-# events_distinct_salted, q20_excess_suppliers, text_repetition_profile,
-# dedup_cluster_assign, q1_pricing_summary, ann_bruteforce_topk,
-# geo_extent, q16_supplier_part_count, fq_attribute_filter,
-# fq_aggregate_mode, geo_pip_join_count, geo_nearest_join); (3) the
-# remaining slots start re-greening the r4-vintage block
-# (alphabetical from ann_ivfpq_exhaustive). The r6 window's 46 retire
-# to the overflow with "driver-green r6" rationale once
-# CORRECTNESS_r06 lands.
-
-# rows-only entries the driver has NEVER observed (r3 VERDICT item 4):
-# placed directly after the active oracled block so they enter the
-# 50-slot window this round for at least a rows+schema check.
-# (The r4-recorded r5 plan EXECUTED this round: the four r4-priority
-# entries got their rows, the 46 r4-green oracles retired, the
-# never-graded overflow promoted, and these six never-observed
-# rows-only entries took the priority slots.)
-#
-# r6 ROTATION PLAN (recorded now, the r4→r5 convention): after this
-# round every rows-only entry has at least one driver observation and
-# every oracle EXCEPT the eight r6-queued donors below has a
-# driver-green row. The r6 window should therefore be: (1) the eight
-# queued oracles first — geo_tile_aggregate, dedup_spans_scrub,
-# events_hopping_agg, text_winnow_pairs, geo_od_flows, customer_pareto,
-# events_bounce_rate, geo_dwithin_join (each locally 3-SF-verified;
-# their r5 donors' rationales are inline above); (2) any r6-new
-# oracled entries in the round they land; (3) the remaining ~36 slots
-# re-grade the LEAST-recently-green oracles (r1/r2 vintage first:
-# q4/q6/q12/q14/q17/q19, top3, events_pivot, orders_rollup,
-# events_user_stats, catalog_*, dedup_keep_first_prefix, ...) so every
-# oracle's green row stays fresh round-over-round.
-_ROWS_ONLY_PRIORITY = [
-    # r7: the r6 priority entries got their driver observations
-    # (events_hll_dau 30 rows, mm_audio_fp_pairs 1715, mm_scene_cuts 40)
-    # EXCEPT embed_pca_project, which ERRed in the driver canonicalizer
-    # on its raw array column (VERDICT r6 item 1 — the only red row).
-    # The entry now explodes to (vec_id, component, value) scalar rows
-    # (the r4 mm_extract_features fix pattern), so it takes the single
-    # priority slot this round for its clean rows+schema observation.
-    "embed_pca_project",
-]
-
-# ----- r7 rotation (executing the plan recorded in r6 and VERDICT r6
-# items 2-3): the 46 r6-green window oracles retire to the overflow —
-# every one carries a fresh CORRECTNESS_r06 hash-MATCH (46/46, 0 FAIL),
-# so each cedes its slot with a driver-verified row on record. Donor
-# rationale uniform: "driver-green r6". -----
-_ORACLED_OVERFLOW += [
-    "top3_orders_per_priority",
-    "events_windowed_agg",
-    "events_sessionize",
-    "events_pivot",
-    "orders_rollup",
-    "events_user_stats",
-    "geo_dwithin",
-    "geo_grid_aggregate",
-    "geo_hull_parity",
-    "q4_order_priority",
-    "q10_returned_items",
-    "q12_shipmode_priority",
-    "q14_promo_revenue",
-    "q18_large_volume",
-    "q19_disjunctive",
-    "q6_forecast_revenue",
-    "geo_buffer_parity",
-    "geo_line_join_parity",
-    "geo_multipoint_checksums",
-    "geo_multipolygon_areas",
-    "geo_simplify_parity",
-    "dedup_keep_first_prefix",
-    "text_ngram_topk",
-    "embed_neardup_cosine",
-    "mm_frame_sample",
-    "catalog_row_counts",
-    "catalog_table_files",
-    "q7_volume_shipping",
-    "q8_market_share",
-    "q13_customer_distribution",
-    "q17_small_qty_revenue",
-    "sample_per_lang",
-    "corpus_mixture",
-    "embed_pca_moments",
-    "mm_phash_parity",
-    "mm_audio_fp_parity",
-    "events_bounce_rate",
-    "dedup_spans_scrub",
-    "mm_scene_cuts_parity",
-    "geo_tile_aggregate",
-    "events_hopping_agg",
-    "text_winnow_pairs",
-    "geo_knn_join_grid",
-    "geo_dwithin_join",
-    "geo_od_flows",
-    "customer_pareto",
-]
-
-# r7 window refill. VERDICT r6 item 2's rule — "kernel changed since
-# last green" outranks "least recently green" — so the order is:
-# (1) JUMP-QUEUE: the five entries whose kernels were structurally
-#     reworked in r6 AFTER their last external green (judge re-drove
-#     all five this round, 5/5 MATCH, but the recorded grades predate
-#     the rework) plus dedup_cluster_assign, the one oracle never
-#     driver-windowed (judge-MATCH r6);
-# (2) the FULL r3-vintage stale set — every oracle whose freshest
-#     driver green is CORRECTNESS_r03 (36 names, computed from the
-#     artifacts: includes the four displaced in r6 — events_funnel,
-#     corpus_split, events_retention, events_props_stats — and the
-#     r6-displaced donors fq_count_only/fq_ids_only/geo_mercator/
-#     ngram_jaccard_pairs/part_type_stats/doc_length_histogram/
-#     corpus_source_stats);
-# (3) the first 6 of the r4-vintage block, alphabetical from
-#     ann_ivfpq_exhaustive (skipping jump-queue members).
-# 44 promoted + the five r7-new oracles (corpus_bpe_merges,
-# events_hll_contract, events_approx_contract, ann_recall_contract,
-# streaming_attribution_pairs — new entries register outside the
-# overflow) + 1 rows-only priority slot = exactly 50.
-_R7_PROMOTED = [
-    # (1) jump-queue: reworked-kernel re-grades + the never-windowed
-    "dedup_cluster_assign",
-    "dedup_minhash_stats",
-    "embed_kmeans_stats",
-    "geo_tile_pyramid",
-    "corpus_perplexity",
-    "orders_brand_affinity",
-    # (2) the full r3-vintage stale set
-    "ann_bruteforce_topk",
-    "asof_join_events_orders",
-    "corpus_clean",
-    "corpus_source_stats",
-    "corpus_split",
-    "dedup_exact",
-    "doc_chunks",
-    "doc_length_histogram",
-    "events_distinct_salted",
-    "events_funnel",
-    "events_props_stats",
-    "events_retention",
-    "fq_aggregate_mode",
-    "fq_attribute_filter",
-    "fq_bbox_filter",
-    "fq_count_only",
-    "fq_ids_only",
-    "geo_extent",
-    "geo_knn",
-    "geo_mercator",
-    "geo_nearest_join",
-    "geo_pip_join_count",
-    "geo_utm",
-    "mm_media_stats",
-    "ngram_jaccard_pairs",
-    "part_type_stats",
-    "q15_top_supplier",
-    "q16_supplier_part_count",
-    "q1_pricing_summary",
-    "q20_excess_suppliers",
-    "q22_lapsed_customers",
-    "q3_shipping_priority",
-    "q5_local_supplier",
-    "text_language_id",
-    "text_profile",
-    "text_repetition_profile",
-    # (3) late-r7 swap (the never-graded-outranks-least-recently-green
-    # convention): the two r4-vintage block starters below were BONUS
-    # progress into the r4 block — directive 3 ("no oracle older than
-    # r4") is already satisfied for them — so they cede to two of the
-    # late-r7 never-observed oracles and head the r8 r4-vintage block
-    # instead (ann_ivfpq_exhaustive's exhaustive-config machinery is
-    # graded in-window this round by ann_recall_contract's production
-    # configs + the ivf/lsh exhaustive siblings' r5 greens;
-    # corpus_decontaminate keeps its r4 green and its gram machinery is
-    # graded in-window by corpus_bpe_merges' word-table kernel this
-    # round).
-    "dedup_recall_contract",  # late r7: production LSH recall contract
-    "graph_common_neighbors",  # late r7: link-prediction CN/Jaccard
-    # corpus_curate displaced (r7, same convention): the slot goes to
-    # streaming_attribution_pairs (new r7 oracle — the stream-stream
-    # range join under a real two-micro-batch file stream, the third
-    # driver-graded streaming entry); curate keeps its r4 driver green
-    # and joins the displaced r4-vintage group at the head of the r8
-    # block. Its composed gates are each graded in-window this round
-    # (perplexity, decontaminate, split — the same kernels curate
-    # chains).
-    # corpus_diff displaced (r7, same convention): the slot goes to
-    # ann_recall_contract (new r7 oracle — aggregate recall@10 of the
-    # production IVF/LSH configs vs exact, the events_hll_contract
-    # pattern applied to retrieval quality); diff keeps its r4 driver
-    # green and joins the displaced pair at the head of the r8 block.
-    # corpus_epoch_order displaced (r7): corpus_bpe_merges (new this
-    # round, in window) takes its slot per the recorded convention —
-    # epoch_order keeps its r4 driver green and heads the r8 r4-vintage
-    # block; its scan-stage hash-threshold machinery is graded
-    # in-window by corpus_split this round (same id_hash kernel)
-    # corpus_entropy displaced (r7, same convention): the slot goes to
-    # events_approx_contract (new r7 oracle — the approx-sketch accuracy
-    # contract, VERDICT r6 missing-item 3); entropy keeps its r4 driver
-    # green and joins epoch_order at the head of the r8 r4-vintage block.
-]
-_ORACLED_OVERFLOW = [
-    n for n in _ORACLED_OVERFLOW if n not in set(_R7_PROMOTED)
-]
-
-# LATE-r7 oracled additions (landed after the r7 window was sealed):
-# the r7 window executes VERDICT r6's directives verbatim — the six
-# jump-queued re-grades plus the complete r3-vintage stale block — and
-# displacing any of those donors would break directive 3 ("no oracle's
-# freshest green older than r4") for the displaced entry. The ONLY
-# ceding-eligible window members were the two bonus r4-vintage block
-# starters (directive 3 already holds for them), which ceded to
-# dedup_recall_contract + graph_common_neighbors above; the remaining
-# six late additions register in the overflow and HEAD the r8 window
-# per plan item (1) below. Each is locally verified MATCH at sf0.001 +
-# sf0.01 + sf0.1 through tools/drive.py on landing.
-_ORACLED_OVERFLOW = [
-    # (dedup_recall_contract and graph_common_neighbors took the two
-    # ceded window slots above; the rest head the r8 window)
-    "geo_zorder_keys",  # late-r7: Morton key machinery value-graded
-    "streaming_dedup_state",  # late-r7: 4th driver-graded stream op
-    "embed_hard_negatives",  # late-r7: contrastive mining reference
-    "events_theta_retention",  # late-r7: theta-intersection contract
-    "lineitem_key_skew",  # late-r7: the skew-measurement diagnostic
-    "events_topk_sketch",  # late-r7: mergeable heavy-hitters exact-mode
-    "corpus_split_leakage",  # late-r7: train/eval contamination audit
-    "embed_matryoshka_recall",  # late-r7: truncation-recall full oracle
-    # (the displaced r4-vintage starters ann_ivfpq_exhaustive /
-    # corpus_decontaminate remain in the base overflow list below now
-    # that they are no longer promoted; they head the r8 r4-vintage
-    # block)
-] + _ORACLED_OVERFLOW
-
-# r8 ROTATION PLAN (recorded now, the r4→…→r7 convention): after this
-# round no oracle's freshest green is older than r4. The r8 window
-# should be: (1) any r8-new oracled entries in the round they land,
-# PLUS the six late-r7 overflow-registered entries above
-# (geo_zorder_keys, streaming_dedup_state, embed_hard_negatives,
-# events_theta_retention, lineitem_key_skew, events_topk_sketch;
-# dedup_recall_contract and graph_common_neighbors took the two ceded
-# r7 slots and grade this round) — new oracles the driver has never
-# observed always head the window;
-# (2) any entry whose kernel changes in r7 after its last green —
-# "kernel changed" always outranks "least recently green" — four known
-# members already: text_winnow_fingerprints, text_winnow_pairs,
-# events_sessionize, text_tfidf_topk (the r7 final-sort-removal sweep —
-# a presentational orderBy's RangePartitioning sampling re-executes the
-# window+agg stage — landed AFTER their last greens; each locally MATCH
-# at 3 SFs post-change); (3) the
-# four r7-displaced r4-vintage entries first — corpus_epoch_order,
-# corpus_entropy, corpus_diff, corpus_curate (each ceded its slot to
-# an r7-new oracle) — then the remaining r4-vintage block,
-# alphabetical from corpus_pii_scrub
-# (corpus_quality_classifier, corpus_segment_dedup,
-# corpus_temperature_mixture, corpus_token_budget, cross_source_overlap,
-# data_quality_report, dedup_keep_best, dedup_simhash_stats,
-# doc_length_quantiles, embed_centroid_drift, embed_dim_stats,
-# embed_quantize_int8, embed_semantic_decontaminate, events_error_rate,
-# events_outliers, events_seasonal_anomaly, events_session_paths,
-# events_topk_salted, fq_geometry_filter, fq_geometry_filter_rects,
-# fq_object_ids, geo_albers, geo_lcc, mm_features_stats,
-# orders_cohort_ltv, orders_purchase_intervals, pack_materialize,
-# pack_sequences, q11_important_stock, q21_waiting_suppliers,
-# q2_min_cost_supplier, q9_product_type_profit, text_containment_pairs,
-# text_dup_spans, text_gopher_rules, text_tfidf_topk — 36 names + 2
-# spillover, fits the window with room); (4) leftover slots start the
-# r5-vintage block alphabetically. The r7 window's greens retire to the
-# overflow with "driver-green r7" rationale once CORRECTNESS_r07 lands.
-
-# ----- r8 rotation (executing the plan above + VERDICT r7 items 1/5):
-# CORRECTNESS_r07 landed 49/49 hash-MATCH, 0 FAIL — every r7 window
-# oracle retires to the overflow with a fresh driver-verified row on
-# record (rationale uniform: "driver-green r7"). The 50th slot's
-# embed_pca_project got its clean rows+schema observation (4000 rows),
-# so NO rows-only entry is observation-less anymore and the priority
-# slot retires too: the r8 window is 50 oracles (the first all-oracle
-# window). -----
-_ORACLED_OVERFLOW += [
-    # driver-green r7 (CORRECTNESS_r07 hash-MATCH), each cedes its slot
-    "q1_pricing_summary",
-    "q3_shipping_priority",
-    "q5_local_supplier",
-    "asof_join_events_orders",
-    "geo_knn",
-    "geo_extent",
-    "geo_pip_join_count",
-    "geo_nearest_join",
-    "geo_mercator",
-    "geo_utm",
-    "fq_attribute_filter",
-    "fq_ids_only",
-    "fq_count_only",
-    "fq_bbox_filter",
-    "part_type_stats",
-    "events_approx_contract",
-    "fq_aggregate_mode",
-    "text_profile",
-    "text_language_id",
-    "dedup_exact",
-    "ngram_jaccard_pairs",
-    "dedup_recall_contract",
-    "doc_length_histogram",
-    "ann_bruteforce_topk",
-    "ann_recall_contract",
-    "mm_media_stats",
-    "q15_top_supplier",
-    "q22_lapsed_customers",
-    "corpus_bpe_merges",
-    "dedup_cluster_assign",
-    "orders_brand_affinity",
-    "dedup_minhash_stats",
-    "doc_chunks",
-    "corpus_clean",
-    "embed_kmeans_stats",
-    # corpus_split is r7-green but NOT retired: its ORACLE text changed
-    # this round (ADVICE r7 item 1 — the split-boundary literals were
-    # pinned to hash_split's truncated ints), and "changed since last
-    # green" outranks vintage, so it re-grades in the r8 window.
-    "corpus_perplexity",
-    "text_repetition_profile",
-    "events_funnel",
-    "events_props_stats",
-    "events_retention",
-    "q16_supplier_part_count",
-    "q20_excess_suppliers",
-    "corpus_source_stats",
-    "events_distinct_salted",
-    "events_hll_contract",
-    "graph_common_neighbors",
-    "geo_tile_pyramid",
-    "streaming_attribution_pairs",
-]
-
-# r8 window refill, executing the recorded plan verbatim. Order of
-# precedence (the r7 convention): never-driver-observed first, then
-# kernel-or-oracle-changed-since-last-green, then the stale-vintage
-# rotation (r4 block). 46 promoted + 4 r8-new oracles
-# (embed_pca_checksums — VERDICT r7 item 6 — merge_upsert_scd2,
-# part_entity_resolution, events_gapfill_ffill, all registering
-# outside the overflow) = exactly 50, all oracled.
-_R8_PROMOTED = [
-    # (1) the EIGHT late-r7 oracles the driver has never observed
-    # (VERDICT r7 directive 1 — judge-MATCH only; external green is the
-    # standard)
-    "geo_zorder_keys",
-    "streaming_dedup_state",
-    "embed_hard_negatives",
-    "events_theta_retention",
-    "lineitem_key_skew",
-    "events_topk_sketch",
-    "corpus_split_leakage",
-    "embed_matryoshka_recall",
-    # (2) jump-queue: kernel or oracle changed AFTER the last external
-    # green. The four r7 final-sort-sweep kernels (directive 1's second
-    # half)...
-    "text_winnow_fingerprints",
-    "text_winnow_pairs",
-    "events_sessionize",
-    "text_tfidf_topk",
-    # ...plus corpus_split, whose ORACLE text changed this round
-    # (ADVICE r7 item 1 boundary-literal pin; kernel unchanged, but the
-    # graded PAIR changed — re-driven MATCH at 3 SFs post-change)...
-    "corpus_split",
-    # ...plus graph_triangles, whose KERNEL was reworked this round
-    # (VERDICT r7 item 3: wedge-stream equi-joins → degree-oriented
-    # adjacency intersection) after its r5 green — re-driven MATCH at
-    # 3 SFs post-rework; pack_sequences cedes its block slot (joins
-    # the r9 r4-vintage head)...
-    "graph_triangles",
-    # ...plus corpus_perplexity, whose final presentational sort was
-    # removed this round (the r7 final-sort class) after its r7 green
-    # — re-driven MATCH at 3 SFs post-change; orders_cohort_ltv cedes
-    # its block slot (joins the r9 r4-vintage head). corpus_segment_
-    # dedup got the same sort removal but already sits in the window's
-    # r4 block, so it re-grades this round with no extra slot.
-    "corpus_perplexity",
-    # (3) the four r7-displaced r4-vintage entries (each ceded its r7
-    # slot to an r7-new oracle; recorded plan item 3)
-    "corpus_epoch_order",
-    "corpus_entropy",
-    "corpus_diff",
-    "corpus_curate",
-    # (4) the r4-vintage block starters displaced by the late-r7 swaps
-    "ann_ivfpq_exhaustive",
-    "corpus_decontaminate",
-    # (5) the r4-vintage block, alphabetical from corpus_pii_scrub
-    # (text_tfidf_topk already in the jump queue) — first 28 fit; the
-    # leftover eight (q11_important_stock — ceded to the r8-new
-    # merge_upsert_scd2 oracle — pack_sequences — ceded to the
-    # graph_triangles kernel re-grade — q21_waiting_suppliers,
-    # q2_min_cost_supplier, q9_product_type_profit,
-    # text_containment_pairs, text_dup_spans, text_gopher_rules) head
-    # the r9 r4-vintage block
-    "corpus_pii_scrub",
-    "corpus_quality_classifier",
-    "corpus_segment_dedup",
-    "corpus_temperature_mixture",
-    "corpus_token_budget",
-    "cross_source_overlap",
-    "data_quality_report",
-    "dedup_keep_best",
-    "dedup_simhash_stats",
-    "doc_length_quantiles",
-    "embed_centroid_drift",
-    "embed_dim_stats",
-    "embed_quantize_int8",
-    "embed_semantic_decontaminate",
-    "events_error_rate",
-    "events_outliers",
-    "events_seasonal_anomaly",
-    "events_session_paths",
-    "events_topk_salted",
-    "fq_geometry_filter",
-    "fq_geometry_filter_rects",
-    "fq_object_ids",
-    "geo_albers",
-    "geo_lcc",
-    # (orders_cohort_ltv ceded its block slot to the corpus_perplexity
-    # kernel re-grade; orders_purchase_intervals, pack_materialize,
-    # and mm_features_stats ceded theirs to the three further r8-new
-    # oracles — part_entity_resolution, events_gapfill_ffill, and
-    # ann_ivf_incremental — per the new-outranks-vintage convention;
-    # all four join the r9 r4-vintage head with q11_important_stock
-    # and pack_sequences)
-]
-_ORACLED_OVERFLOW = [
-    n for n in _ORACLED_OVERFLOW if n not in set(_R8_PROMOTED)
-]
-
-# the rows-only priority slot retires this round (see the r8 rotation
-# note above): every rows-only entry now has a driver observation, so
-# the window carries 50 oracles
-_ROWS_ONLY_PRIORITY = []
-
-# r9 ROTATION (executing the plan recorded in r8, with VERDICT r8
-# item 4's correction): the recorded plan enumerated "ELEVEN
-# r4-vintage leftovers" but the artifacts count TWELVE — it silently
-# dropped mm_features_stats (hash-green r4 only); the twelve are
-# graded below. The plan's "(3) the r5-vintage block (42 entries)"
-# also overcounted: recomputing freshest-green per oracle from
-# CORRECTNESS_r01..r08 gives FORTY r5-vintage oracles (two of the 42
-# were re-greened since). tools/window_check.py now recomputes both
-# numbers from the artifacts each run instead of trusting prose.
-# ----- the 50 r8-green window oracles retire to the overflow — every
-# one carries a fresh CORRECTNESS_r08 hash-MATCH (50/50, 0 FAIL).
-# Donor rationale uniform: "driver-green r8". -----
-_ORACLED_OVERFLOW += [
-    "events_sessionize",
-    "geo_albers",
-    "geo_lcc",
-    "fq_object_ids",
-    "fq_geometry_filter",
-    "fq_geometry_filter_rects",
-    "ann_ivf_incremental",
-    "embed_hard_negatives",
-    "embed_matryoshka_recall",
-    "ann_ivfpq_exhaustive",
-    "events_topk_salted",
-    "embed_semantic_decontaminate",
-    "dedup_keep_best",
-    "corpus_split_leakage",
-    "corpus_split",
-    "corpus_pii_scrub",
-    "corpus_decontaminate",
-    "dedup_simhash_stats",
-    "corpus_segment_dedup",
-    "corpus_temperature_mixture",
-    "corpus_quality_classifier",
-    "doc_length_quantiles",
-    "corpus_diff",
-    "corpus_perplexity",
-    "corpus_curate",
-    "corpus_token_budget",
-    "embed_quantize_int8",
-    "events_outliers",
-    "cross_source_overlap",
-    "embed_dim_stats",
-    "embed_centroid_drift",
-    "events_theta_retention",
-    "events_topk_sketch",
-    "embed_pca_checksums",
-    "merge_upsert_scd2",
-    "part_entity_resolution",
-    "events_gapfill_ffill",
-    "corpus_epoch_order",
-    "text_tfidf_topk",
-    "events_error_rate",
-    "events_seasonal_anomaly",
-    "events_session_paths",
-    "graph_triangles",
-    "lineitem_key_skew",
-    "geo_zorder_keys",
-    "corpus_entropy",
-    "data_quality_report",
-    "streaming_dedup_state",
-    "text_winnow_fingerprints",
-    "text_winnow_pairs",
-]
-
-# the r9 jump queue — entries whose kernel or oracle changed in r9
-# AFTER their last green, plus the r9-new oracles. Exported so
-# tools/window_check.py can exempt exactly these from the
-# oldest-vintage-first invariant (a jump-queue member re-grades out
-# of turn BY DESIGN).
-_R9_JUMP_QUEUE = [
-    # oracle changed: gained the null/empty-embedding filter on both
-    # subqueries (ADVICE r8 item 1) — text differs from the r8-graded
-    # oracle, so it re-grades
-    "ann_ivf_incremental",
-    # kernel changed: scd2_merge gained the default-on in-plan
-    # append-order guard (VERDICT r8 directive 6's fast-path raise) —
-    # the entry's plan differs from the r8-graded one
-    "merge_upsert_scd2",
-    # r9-new oracles (register outside the overflow; named here only
-    # for the window_check exemption)
-    "ann_ivfpq_incremental",
-    "scd2_merge_late",
-    "versioned_read_asof",
-    # late-r9 fourth new oracle (the streaming CDC→SCD2 upsert sink;
-    # new-outranks-vintage: mm_resize_parity — the r5 block's
-    # alphabetical tail member — cedes its slot and heads the r10
-    # r5-leftover list, see _R9_PROMOTED)
-    "streaming_scd2_cdc",
-    # late-r9 fifth new oracle (snapshot expiry + reference-counted GC
-    # — closes §2.A's last pytest-only contract; mm_extract_features,
-    # now the in-window r5 block's alphabetical tail, cedes per the
-    # same convention and joins the r10 r5-leftover list)
-    "versioned_expire_gc",
-    # late-r9 sixth new oracle (schema evolution on the snapshot store
-    # — the Iceberg add-column behavior, previously jar-gated-only;
-    # mm_decode_parity cedes per the same convention)
-    "versioned_schema_evolution",
-]
-
-# r9 window refill: 8 jump-queue (the 5 below + the late-r9
-# streaming_scd2_cdc, versioned_expire_gc, and
-# versioned_schema_evolution) + 12 r4-vintage + the first 30 of the
-# 40-member r5-vintage block = exactly 50.
-_R9_PROMOTED = [
-    # (1) jump-queue members sitting in the overflow (the r9-new three
-    # never enter it)
-    "ann_ivf_incremental",
-    "merge_upsert_scd2",
-    # (2) the TWELVE r4-vintage oracles: the plan's eleven (six
-    # alphabetical-tail members + the five that ceded r8 slots
-    # mid-round, rationale inline at the r8 swap sites) PLUS
-    # mm_features_stats (VERDICT r8 item 4's silent omission — its
-    # freshest green is CORRECTNESS_r04 like the others; the judge
-    # re-drove it MATCH at sf0.1 in r8 but judge drives don't retire
-    # vintage, driver greens do)
-    "mm_features_stats",
-    "orders_cohort_ltv",
-    "orders_purchase_intervals",
-    "pack_materialize",
-    "pack_sequences",
-    "q11_important_stock",
-    "q21_waiting_suppliers",
-    "q2_min_cost_supplier",
-    "q9_product_type_profit",
-    "text_containment_pairs",
-    "text_dup_spans",
-    "text_gopher_rules",
-    # (3) the r5-vintage block, alphabetical from ann_filtered_topk —
-    # 30 fit after the three late-r9 oracles (streaming_scd2_cdc,
-    # versioned_expire_gc, versioned_schema_evolution) took jump-queue
-    # slots; the leftover TEN (mm_decode_parity, mm_extract_features,
-    # mm_resize_parity — each ceded to a late new oracle per
-    # new-outranks-vintage — plus orders_forecast_linreg,
-    # streaming_cusum_state, streaming_window_counts,
-    # text_lang_confusion, text_ngram_novelty, text_readability,
-    # text_zipf_fit) head the r10 plan
-    "ann_filtered_topk",
-    "ann_ivf_exhaustive",
-    "ann_lsh_exhaustive",
-    "brand_supplier_hhi",
-    "corpus_decontaminate_spans",
-    "corpus_dedup_materialize",
-    "embed_label_outliers",
-    "events_attribution_lag",
-    "events_autocorr",
-    "events_cusum",
-    "events_dau_rolling",
-    "events_outliers_mad",
-    "events_rfm",
-    "events_session_overlap",
-    "events_transitions",
-    "geo_clip_rects",
-    "geo_dbscan_core",
-    "geo_flow_bearings",
-    "geo_haversine_knn",
-    "geo_heatmap",
-    "geo_hex_aggregate",
-    "geo_hotspot_gi",
-    "geo_knn_join",
-    "geo_line_lengths",
-    "geo_moran_i",
-    "geo_multiline_lengths",
-    "geo_polygon_areas",
-    "geo_ps",
-    "geo_tile_netflow",
-    "graph_pagerank",
-]
-_ORACLED_OVERFLOW = [
-    n for n in _ORACLED_OVERFLOW if n not in set(_R9_PROMOTED)
-]
-
-# r10 ROTATION PLAN (recorded r9, the standing convention): (1) any
-# r10-new oracles plus any entry whose kernel/oracle changes in r9
-# after its last green; (2) the TEN r5-vintage leftovers named
-# above; (3) the r6-vintage block, alphabetical, until the window
-# fills (~40 of its 44 members; the remainder heads r11); (4) any
-# leftover slots continue the r6 block. Membership numbers are
-# VERIFIED against the CORRECTNESS artifacts by tools/window_check.py
-# --vintage (added r9), not trusted from this prose. The r9 window's
-# greens retire with "driver-green r9" rationale once CORRECTNESS_r09
-# lands.
-
-# ---- r10 ROTATION (executed at round start, CORRECTNESS_r09 landed
-# 50/50 green) -------------------------------------------------------
-# The jump queue carries EIGHT members, so 32 (not ~40) r6-vintage
-# members fit after the ten r5 leftovers — the r6 alphabetical tail
-# (q13_customer_distribution .. top3_orders_per_priority, 12 members)
-# heads the r11 plan below.
-_R10_JUMP_QUEUE = [
-    # r10-new oracles (VERDICT r9 directives 2 and 3)
-    "scd2_delete_cdc",
-    "versioned_cow_partitions",
-    # kernel changed: fs_versioned gained O(batch) footer-count
-    # commits (directive 4), partition-scoped CoW manifests, and the
-    # recursive expiry-dir walk — every entry whose plan touches the
-    # store re-grades
-    "versioned_read_asof",
-    "versioned_expire_gc",
-    "versioned_schema_evolution",
-    # kernel changed: the CDC sink now writes partition-scoped CoW
-    # snapshots with stream-identity batch refs (directive 2 + ADVICE
-    # r9 medium)
-    "streaming_scd2_cdc",
-    # kernel changed: scd2_from_changelog/scd2_merge/scd2_merge_late
-    # gained the op_col CDC-delete path (directive 3) — the op_col=None
-    # plans are unchanged by construction, but the conservative
-    # kernel-changed-since-last-green rule re-grades both consumers
-    "merge_upsert_scd2",
-    "scd2_merge_late",
-    # late-r10 third new oracle (the scd2_merge_late × partitioned-CoW
-    # composition; new-outranks-vintage: q12_shipmode_priority — the
-    # in-window r6 block's alphabetical tail member — cedes its slot
-    # and heads the r11 r6-leftover list, see _R10_PROMOTED)
-    "scd2_late_cow",
-    # late-r10 fourth new oracle (the incremental changes-since read —
-    # the consume side of the CDC loop; q10_returned_items, now the
-    # in-window r6 block's alphabetical tail, cedes per the same
-    # convention and joins the r11 r6-leftover list)
-    "versioned_incremental_read",
-]
-
-# retire the r9 window's 44 non-re-jumping members (all driver-green
-# in CORRECTNESS_r09 — the 2 r9 jump-queue ANN members whose kernels
-# are untouched in r10, the 12 r4-vintage block, and the 30 r5-vintage
-# block)
-_R9_RETIRED = [
-    "events_session_overlap",
-    "geo_ps",
-    "geo_line_lengths",
-    "geo_multiline_lengths",
-    "geo_polygon_areas",
-    "ann_ivf_incremental",
-    "ann_ivfpq_incremental",
-    "ann_filtered_topk",
-    "ann_ivf_exhaustive",
-    "ann_lsh_exhaustive",
-    "mm_features_stats",
-    "q21_waiting_suppliers",
-    "corpus_dedup_materialize",
-    "events_outliers_mad",
-    "embed_label_outliers",
-    "text_dup_spans",
-    "q2_min_cost_supplier",
-    "q9_product_type_profit",
-    "q11_important_stock",
-    "pack_sequences",
-    "pack_materialize",
-    "text_gopher_rules",
-    "corpus_decontaminate_spans",
-    "events_dau_rolling",
-    "orders_cohort_ltv",
-    "text_containment_pairs",
-    "events_attribution_lag",
-    "brand_supplier_hhi",
-    "graph_pagerank",
-    "orders_purchase_intervals",
-    "geo_hex_aggregate",
-    "events_cusum",
-    "geo_heatmap",
-    "events_transitions",
-    "geo_knn_join",
-    "events_rfm",
-    "geo_hotspot_gi",
-    "geo_tile_netflow",
-    "geo_flow_bearings",
-    "geo_moran_i",
-    "events_autocorr",
-    "geo_dbscan_core",
-    "geo_haversine_knn",
-    "geo_clip_rects",
-]
-_ORACLED_OVERFLOW += [
-    n for n in _R9_RETIRED if n not in _ORACLED_OVERFLOW
-]
-
-# promote the r10 window's vintage members: the TEN r5 leftovers
-# (freshest green CORRECTNESS_r05 — verified by window_check's
-# artifact-derived histogram) + the first 32 of the 44-member
-# r6-vintage block, alphabetical
-_R10_PROMOTED = [
-    # (1) the r5-vintage leftovers (the whole class — r5 clears)
-    "mm_decode_parity",
-    "mm_extract_features",
-    "mm_resize_parity",
-    "orders_forecast_linreg",
-    "streaming_cusum_state",
-    "streaming_window_counts",
-    "text_lang_confusion",
-    "text_ngram_novelty",
-    "text_readability",
-    "text_zipf_fit",
-    # (2) the r6-vintage block, alphabetical prefix (32 of 44 fit
-    # behind the 8 jump-queue members; the tail 12 head r11)
-    "catalog_row_counts",
-    "catalog_table_files",
-    "corpus_mixture",
-    "customer_pareto",
-    "dedup_keep_first_prefix",
-    "dedup_spans_scrub",
-    "embed_neardup_cosine",
-    "embed_pca_moments",
-    "events_bounce_rate",
-    "events_hopping_agg",
-    "events_pivot",
-    "events_user_stats",
-    "events_windowed_agg",
-    "geo_buffer_parity",
-    "geo_dwithin",
-    "geo_dwithin_join",
-    "geo_grid_aggregate",
-    "geo_hull_parity",
-    "geo_knn_join_grid",
-    "geo_line_join_parity",
-    "geo_multipoint_checksums",
-    "geo_multipolygon_areas",
-    "geo_od_flows",
-    "geo_simplify_parity",
-    "geo_tile_aggregate",
-    "mm_audio_fp_parity",
-    "mm_frame_sample",
-    "mm_phash_parity",
-    "mm_scene_cuts_parity",
-    "orders_rollup",
-    # (q12_shipmode_priority then q10_returned_items — the
-    # alphabetical tail of the planned 32 — each ceded its slot to a
-    # late-r10 oracle (scd2_late_cow, versioned_incremental_read) per
-    # new-outranks-vintage and they head the r11 r6-leftover list)
-]
-_ORACLED_OVERFLOW = [
-    n for n in _ORACLED_OVERFLOW if n not in set(_R10_PROMOTED)
-]
-
-# r11 ROTATION PLAN (recorded now): (1) any r11-new/kernel-changed
-# jump queue; (2) the FOURTEEN r6-vintage leftovers
-# (q10_returned_items and q12_shipmode_priority — ceded late-r10 — plus
-# q13_customer_distribution, q14_promo_revenue, q17_small_qty_revenue,
-# q18_large_volume, q19_disjunctive, q4_order_priority,
-# q6_forecast_revenue, q7_volume_shipping, q8_market_share,
-# sample_per_lang, text_ngram_topk, top3_orders_per_priority);
-# (3) the r7-vintage block, alphabetical, until the window fills.
-# Verify with tools/window_check.py, never this prose.
-#
-# r10-OPT jump-queue adds (kernels changed in the optimization round
-# AFTER their last external green; every one locally re-driven MATCH
-# at sf0.01 — and sf0.1 where values could shift — this round, see
-# OPTIMIZATION_r10.md): graph_triangles, graph_common_neighbors,
-# text_dup_spans, events_cusum, events_outliers_mad, corpus_clean,
-# corpus_epoch_order, corpus_source_stats, embed_quantize_int8,
-# asof_join_events_orders, ann_filtered_topk, ann_ivf_exhaustive,
-# ann_lsh_exhaustive, ann_ivf_incremental, ann_ivfpq_incremental
-# (assign-kernel dedup + fused quantizer sampling; byte-identical
-# outputs proven), mm_phash_parity + mm_audio_fp_parity (bucket-agg
-# pair join; both ALREADY in the r10 window and green at every SF
-# locally).
-
-# ---- r11 ROTATION (executed at round start, CORRECTNESS_r10 landed
-# 50/50 green) -------------------------------------------------------
-# Window composition: 15 jump-queue + the 14 r6-vintage leftovers +
-# the first 21 of the 43-member non-jump r7-vintage block,
-# alphabetical (the r7 tail heads any future plan). Verified by
-# tools/window_check.py against the artifacts, never this prose.
-_R11_JUMP_QUEUE = [
-    # the r10-OPT kernel-changed re-grades recorded above (every one
-    # locally re-driven MATCH at sf0.01 — and sf0.1 where values could
-    # shift — in r10, see OPTIMIZATION_r10.md)
-    "graph_triangles",
-    "graph_common_neighbors",
-    "text_dup_spans",
-    "events_cusum",
-    "events_outliers_mad",
-    "corpus_clean",
-    "corpus_epoch_order",
-    "corpus_source_stats",
-    "embed_quantize_int8",
-    "asof_join_events_orders",
-    "ann_filtered_topk",
-    "ann_ivf_exhaustive",
-    "ann_lsh_exhaustive",
-    "ann_ivf_incremental",
-    "ann_ivfpq_incremental",
-    # r11-OPT kernel-changed adds (each locally re-driven MATCH at
-    # sf0.01 AND sf0.1 this round, see OPTIMIZATION_r11.md):
-    # phash_dedup_pairs gained the hot-bucket cap + two-level pair
-    # emission
-    "mm_phash_parity",
-    # line_join's bbox kernel is single-evaluation now (§4.4 clone fix)
-    "geo_line_join_parity",
-    # ivfpq_topk's quantizer sampling dropped its sizing count()
-    # (byte-identical selection proven + pytest-pinned)
-    "ann_ivfpq_exhaustive",
-    # segment_dedup_stats' count branch collapses onto one hash-keyed
-    # exchange (plan changed; output verified identical)
-    "corpus_segment_dedup",
-    # the entry dropped its spread() — filter pushdown made it a pure
-    # full-text shuffle (plan changed; output verified identical)
-    "corpus_curate",
-    # the simhash vote aggregates now build as SQL text (identical
-    # parsed expressions — fingerprints verified value-identical; the
-    # conservative kernel-changed rule still re-grades)
-    "dedup_simhash_stats",
-]
-
-# retire the r10 window's 50 members (all driver-green in
-# CORRECTNESS_r10 — rows+schema+hash 50/50)
-_R10_RETIRED = [
-    "events_windowed_agg",
-    "events_pivot",
-    "orders_rollup",
-    "events_user_stats",
-    "geo_dwithin",
-    "geo_grid_aggregate",
-    "geo_hull_parity",
-    "geo_buffer_parity",
-    "geo_line_join_parity",
-    "geo_multipoint_checksums",
-    "geo_multipolygon_areas",
-    "geo_simplify_parity",
-    "dedup_keep_first_prefix",
-    "embed_neardup_cosine",
-    "mm_frame_sample",
-    "mm_extract_features",
-    "mm_resize_parity",
-    "mm_decode_parity",
-    "catalog_row_counts",
-    "catalog_table_files",
-    "orders_forecast_linreg",
-    "corpus_mixture",
-    "text_readability",
-    "embed_pca_moments",
-    "merge_upsert_scd2",
-    "scd2_merge_late",
-    "versioned_read_asof",
-    "versioned_schema_evolution",
-    "versioned_expire_gc",
-    "scd2_delete_cdc",
-    "versioned_cow_partitions",
-    "scd2_late_cow",
-    "versioned_incremental_read",
-    "mm_phash_parity",
-    "mm_audio_fp_parity",
-    "text_lang_confusion",
-    "events_bounce_rate",
-    "text_ngram_novelty",
-    "dedup_spans_scrub",
-    "mm_scene_cuts_parity",
-    "geo_tile_aggregate",
-    "streaming_cusum_state",
-    "streaming_window_counts",
-    "streaming_scd2_cdc",
-    "events_hopping_agg",
-    "geo_knn_join_grid",
-    "geo_dwithin_join",
-    "geo_od_flows",
-    "text_zipf_fit",
-    "customer_pareto",
-]
-_ORACLED_OVERFLOW += [
-    n for n in _R10_RETIRED if n not in _ORACLED_OVERFLOW
-]
-
-_R11_PROMOTED = [
-    # (1) jump-queue members sitting in the overflow
-    *_R11_JUMP_QUEUE,
-    # (2) the FOURTEEN r6-vintage leftovers (freshest green
-    # CORRECTNESS_r06 — the whole class; r6 clears)
-    "q10_returned_items",
-    "q12_shipmode_priority",
-    "q13_customer_distribution",
-    "q14_promo_revenue",
-    "q17_small_qty_revenue",
-    "q18_large_volume",
-    "q19_disjunctive",
-    "q4_order_priority",
-    "q6_forecast_revenue",
-    "q7_volume_shipping",
-    "q8_market_share",
-    "sample_per_lang",
-    "text_ngram_topk",
-    "top3_orders_per_priority",
-    # (3) the r7-vintage block minus its 4 jump-queue members
-    # (graph_common_neighbors, corpus_clean, corpus_source_stats,
-    # asof_join_events_orders re-grade via the queue), alphabetical
-    # prefix — 15 fit after the 6 r11-OPT kernel-changed jump-queue
-    # adds took their slots (new-outranks-vintage); the tail
-    # (events_retention ..) heads the next plan
-    "ann_bruteforce_topk",
-    "ann_recall_contract",
-    "corpus_bpe_merges",
-    "dedup_cluster_assign",
-    "dedup_exact",
-    "dedup_minhash_stats",
-    "dedup_recall_contract",
-    "doc_chunks",
-    "doc_length_histogram",
-    "embed_kmeans_stats",
-    "events_approx_contract",
-    "events_distinct_salted",
-    "events_funnel",
-    "events_hll_contract",
-    "events_props_stats",
-]
-_ORACLED_OVERFLOW = [
-    n for n in _ORACLED_OVERFLOW if n not in set(_R11_PROMOTED)
+# oracled entries whose code changed after their newest green round
+# (CORRECTNESS_r11): each re-grades out of turn. A newer artifact that
+# greens them makes the list stale; empty it then.
+JUMP_QUEUE = [
+    "fq_aggregate_mode",  # with_bbox: the default st_bbox is deterministic again
+    "fq_attribute_filter",  # query_features: persisted-OID page, SQL-text select
+    "fq_bbox_filter",  # query_features: bbox_intersects is SQL text
+    "fq_count_only",  # query_features: count in one aggregate pass
+    "fq_geometry_filter",  # query_features: declared types, SQL bbox text
+    "fq_geometry_filter_rects",  # query_features: declared types, SQL bbox text
+    "fq_ids_only",  # query_features: persisted-OID projection
+    "fq_object_ids",  # query_features: persisted-OID selection
+    "geo_clip_rects",  # clip_features reuses __bbox_*, SQL bbox prefilter
+    "geo_extent",  # lineitem_bbox_layer persists __oid and geometry types
+    "geo_simplify_parity",  # st_simplify's kernel moved into simplify_wkb
+    "q3_shipping_priority",  # revenue rounds half-free, FLOOR(x*100 + 0.5)/100
 ]
 
 
-def _reorder_registry() -> None:
-    oracled = [
-        n for n in QUERIES if n in ORACLES and n not in _ORACLED_OVERFLOW
-    ]
-    priority = [n for n in _ROWS_ONLY_PRIORITY if n in QUERIES]
-    overflow = [n for n in _ORACLED_OVERFLOW if n in QUERIES]
-    rows_only = [
-        n
-        for n in QUERIES
-        if n not in ORACLES and n not in _ROWS_ONLY_PRIORITY
-    ]
-    ordered = oracled + priority + overflow + rows_only
-    assert len(ordered) == len(QUERIES)
-    reordered = {n: QUERIES[n] for n in ordered}
+def _freshest_green() -> dict[str, int]:
+    """Name → the newest CORRECTNESS_r<N>.json round (N) whose row for it
+    hash-matched; the artifacts sit at the repository root, next to the
+    package (none found: every name reads as never matched)."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    fresh: dict[str, int] = {}
+    for path in glob.glob(os.path.join(root, "CORRECTNESS_r*.json")):
+        try:
+            rnd = int(path.rsplit("_r", 1)[1].split(".")[0])
+            with open(path) as f:
+                rows = json.load(f)
+        except (OSError, ValueError):
+            continue
+        for name, row in rows.items():
+            if isinstance(row, dict) and row.get("hash_match"):
+                fresh[name] = max(fresh.get(name, 0), rnd)
+    return fresh
+
+
+def _order_registry() -> None:
+    fresh = _freshest_green()
+    oracled = sorted(
+        (n for n in QUERIES if n in ORACLES),
+        key=lambda n: (n not in JUMP_QUEUE, fresh.get(n, 0), n),
+    )
+    rows_only = [n for n in QUERIES if n not in ORACLES]
+    ordered = {n: QUERIES[n] for n in oracled + rows_only}
     QUERIES.clear()
-    QUERIES.update(reordered)
+    QUERIES.update(ordered)
 
 
-_reorder_registry()
+_order_registry()

@@ -77,8 +77,16 @@ def q3_shipping_priority(
         .join(F.broadcast(cust), ords.o_custkey == cust.c_custkey)
         .groupBy("l_orderkey", "o_orderdate")
         .agg(
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
+            # half-free cents: a sum can land on a binary half cent, where
+            # the engines' ROUND half modes split; FLOOR(x*100 + 0.5)/100
+            # is the same IEEE sequence in Spark and DuckDB
+            (
+                F.floor(
+                    F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount")))
+                    * F.lit(100.0)
+                    + F.lit(0.5)
+                )
+                / F.lit(100.0)
             ).alias("revenue")
         )
         .select(

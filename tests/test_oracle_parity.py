@@ -74,3 +74,50 @@ def test_query_matches_oracle(name, spark, sf_dir, duck):
         (a, b) for a, b in zip(s_norm, d_norm) if a != b
     ]
     assert not mismatches, f"{name}: first mismatches {mismatches[:3]}"
+
+
+def test_q3_revenue_on_a_binary_half_cent(spark):
+    """An order whose revenue sum is the double just below x.835 (printed
+    408802.83499999996): Spark's ROUND works on that decimal rendering and
+    gives .83, DuckDB's on the binary value scaled by 100 (exactly
+    40880283.5) and gives .84. The row and its oracle must agree."""
+    import datetime as dt
+
+    import pandas as pd
+
+    from iceberg_geospatial_api_server_spark.operators.relational import (
+        q3_shipping_priority,
+    )
+
+    tables = {
+        "customer": (
+            ["c_custkey", "c_mktsegment"],
+            "c_custkey long, c_mktsegment string",
+            [(1, "BUILDING")],
+        ),
+        "orders": (
+            ["o_orderkey", "o_custkey", "o_orderdate"],
+            "o_orderkey long, o_custkey long, o_orderdate timestamp",
+            [(11376, 1, dt.datetime(1995, 1, 10))],
+        ),
+        "lineitem": (
+            ["l_orderkey", "l_extendedprice", "l_discount", "l_shipdate"],
+            "l_orderkey long, l_extendedprice double, l_discount double, "
+            "l_shipdate timestamp",
+            [(11376, 408802.834999999962, 0.0, dt.datetime(1995, 6, 1))],
+        ),
+    }
+    con = duckdb.connect()
+    frames = {}
+    for t, (cols, ddl, rows) in tables.items():
+        frames[t] = spark.createDataFrame(rows, ddl)
+        con.register(t, pd.DataFrame(rows, columns=cols))
+
+    (spark_row,) = q3_shipping_priority(
+        frames["customer"], frames["orders"], frames["lineitem"]
+    ).collect()
+    (duck_rev,) = con.execute(
+        f"SELECT revenue FROM ({entry_mod.oracle_sql()['q3_shipping_priority']})"
+    ).fetchone()
+
+    assert spark_row["revenue"] == duck_rev == 408802.84

@@ -19,16 +19,12 @@ LEAST-recently-green oracles first, so
     must be the alphabetical prefix (the recorded block convention —
     a silent mid-block omission is exactly the r8 bug).
 
-Jump-queue members (entry_queries._R<N>_JUMP_QUEUE, highest N —
-kernel/oracle changed since last green, or new this round) are
-exempt: they re-grade out of turn by design.
+Jump-queue members (entry_queries.JUMP_QUEUE — code changed since
+their last green) are exempt: they re-grade out of turn by design.
 
-Mid-cycle note (ADVICE r9): immediately after a round's CORRECTNESS
-artifact lands, the registry still holds the JUST-GRADED window, so
-every freshly-greened member reads as boundary-vintage and the tool
-exits 1 until the next rotation executes. That state is ROTATION
-PENDING, not an omission — the tool detects it (every violating
-member greened in the newest artifact) and says so explicitly.
+entry_queries orders the registry from the same artifacts on import, so
+a new CORRECTNESS artifact rotates the window by itself; this tool reads
+the artifacts on its own and is the independent test of that sort.
 
 Run after ANY registry change:
 
@@ -76,15 +72,7 @@ for path in sorted(glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json"))):
         if isinstance(row, dict) and row.get("hash_match"):
             fresh[name] = max(fresh.get(name, 0), rnd)
 
-# highest-numbered _R<N>_JUMP_QUEUE is the current round's exemption
-# list (the r9 name stays importable for history; the tool must not
-# pin a round number that every rotation would have to edit here)
-_jq_names = sorted(
-    (n for n in dir(entry_queries) if n.startswith("_R") and n.endswith("_JUMP_QUEUE")),
-    key=lambda n: int(n[2:].split("_")[0]),
-)
-jump = set(getattr(entry_queries, _jq_names[-1], []) if _jq_names else [])
-newest_round = max(fresh.values(), default=0)
+jump = set(entry_queries.JUMP_QUEUE)
 never = [n for n in o if n not in fresh]
 never_out = [n for n in never if n not in w]
 if never_out:
@@ -102,21 +90,10 @@ if regular:
         n for n in o if n in fresh and fresh[n] < v and n not in w
     ]
     if older_out:
-        if v == newest_round:
-            # rotation-pending, not an omission (ADVICE r9): the
-            # newest regular member greened in the newest artifact,
-            # i.e. the registry still holds the just-graded window
-            print(
-                f"ROTATION PENDING: the window's newest regular member "
-                f"greened in the newest artifact (r{v}) — execute the "
-                f"recorded r{v + 1} rotation; older oracles waiting: "
-                f"{older_out}"
-            )
-        else:
-            print(
-                f"VIOLATION: oracles with vintage older than the window's "
-                f"newest regular member (r{v}) left outside: {older_out}"
-            )
+        print(
+            f"VIOLATION: oracles with vintage older than the window's "
+            f"newest regular member (r{v}) left outside: {older_out}"
+        )
         rc = 1
     # boundary class: window picks must be the alphabetical prefix
     # (the recorded block convention)
