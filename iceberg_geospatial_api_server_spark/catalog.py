@@ -272,13 +272,13 @@ def feature_schema(df: DataFrame, table_identifier: str = "table") -> FeatureSch
     """Build a FeatureSchema from a DataFrame (ref get_table_schema).
 
     A geometry column that declares exactly one type in its field metadata
-    (`{"geometry_types": [...]}`, as `sources.geo_layer` writes at ingest)
-    runs no Spark job: the type comes from the schema. Otherwise the only
-    job is the geometry-type probe (one non-null geometry). The extent is
-    an aggregate over the whole table, computed on the first read of
-    `FeatureSchema.extent`. Fields omit the geometry and the engine's
-    internal columns. max_record_count follows the reference's adaptive
-    policy (engine.py:172-174: 500 for polygons else 10000).
+    (`{"geometry_types": [...]}`, as `sources.ingest.write_geoparquet`
+    writes) runs no Spark job: the type comes from the schema. Otherwise
+    the only job is the geometry-type probe (one non-null geometry). The
+    extent is an aggregate over the whole table, computed on the first
+    read of `FeatureSchema.extent`. Fields omit the geometry and the
+    engine's internal columns. max_record_count follows the reference's
+    adaptive policy (engine.py:172-174: 500 for polygons else 10000).
     """
     geom_col = detect_geometry_column(df.schema)
     fields = []

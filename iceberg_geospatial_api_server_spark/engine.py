@@ -235,7 +235,7 @@ def with_oid(df: DataFrame, order_cols: list[str] | None = None) -> DataFrame:
 
     A frame that already carries ``__oid`` is returned unchanged and runs
     no job: persisted layers store it at ingest
-    (``sources.geo_layer.lineitem_bbox_layer`` ranks by this function's
+    (``sources.ingest.write_geoparquet`` ranks by this function's
     default order before writing), so served requests never rank.
     """
     if "__oid" in df.columns:

@@ -435,7 +435,7 @@ def geo_grid_agg(spark, sf_dir):
 def geo_extent(spark, sf_dir):
     """Table extent off the PERSISTED bbox layer (VERDICT r4 item 5):
     ingest runs the WKB encode+decode once and materializes __bbox_*
-    doubles z-order clustered (sources/geo_layer.py — the ref
+    doubles z-order clustered (sources/ingest.write_geoparquet — the ref
     engine.py:232-279 persisted-pre-filter-column design); the extent
     query itself is a MIN/MAX over plain parquet doubles, answered from
     footer stats: the layer is read through the DSv2 parquet source
@@ -11368,7 +11368,7 @@ JUMP_QUEUE = [
     "fq_ids_only",  # query_features: persisted-OID projection
     "fq_object_ids",  # query_features: persisted-OID selection
     "geo_clip_rects",  # clip_features reuses __bbox_*, SQL bbox prefilter
-    "geo_extent",  # lineitem_bbox_layer persists __oid and geometry types
+    "geo_extent",  # lineitem_bbox_layer publishes through write_geoparquet
     "geo_simplify_parity",  # st_simplify's kernel moved into simplify_wkb
     "q3_shipping_priority",  # revenue rounds half-free, FLOOR(x*100 + 0.5)/100
 ]

@@ -294,17 +294,15 @@ def declared_geometry_types(df: DataFrame, geom_col: str = "geometry") -> list[s
     return list(df.schema[geom_col].metadata.get("geometry_types", []))
 
 
-def extent(df: DataFrame, geom_col: str = "geometry", *also: Column) -> DataFrame:
+def extent(df: DataFrame, geom_col: str = "geometry") -> DataFrame:
     """Aggregate extent = MIN/MAX over per-geometry bboxes
-    (ref api/main.py:206-222 _compute_bbox), plus the aggregates `also`
-    in the same pass."""
+    (ref api/main.py:206-222 _compute_bbox)."""
     src = df if "__bbox_xmin" in df.columns else with_bbox(df, geom_col)
     return src.agg(
         F.min("__bbox_xmin").alias("xmin"),
         F.min("__bbox_ymin").alias("ymin"),
         F.max("__bbox_xmax").alias("xmax"),
         F.max("__bbox_ymax").alias("ymax"),
-        *also,
     )
 
 

@@ -4,14 +4,18 @@
 Normalized form = `geometry` WKB binary first, all other columns
 preserved — identical to the reference's Arrow normalization, so every
 downstream operator (bbox prefilter, engine, serializers) takes ingested
-data unchanged. GeoParquet *write* emits the standard `geo` file metadata
-so external readers (DuckDB, geopandas, WASM) see valid GeoParquet.
+data unchanged. GeoParquet *write* (`write_geoparquet`) publishes a
+served layer, the one write path of every layer the package serves, and
+stamps the standard `geo` file metadata so external readers (DuckDB,
+geopandas, WASM) see valid GeoParquet.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
+import tempfile
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -125,10 +129,12 @@ def read_geoparquet(spark: SparkSession, path: str) -> DataFrame:
     main.py:517-533 _detect_geom_column_geoparquet); WKB passes through,
     WKT converts. The column's `geometry_types` become the `geometry`
     field's declared types (`geo.functions.declare_geometry_types`), so
-    serving the upload probes no row for its type. A list naming anything
-    but the 2D types this package decodes (`wkb._TYPE_NAMES`; e.g. GeoPandas'
-    "Point Z", or an unknown name) declares nothing, and serving probes the
-    data as for an undeclared upload."""
+    serving the upload probes no row for its type. The `geo` list is the
+    only source: it replaces the field metadata a Spark writer left in the
+    file. A list naming anything but the 2D types this package decodes
+    (`wkb._TYPE_NAMES`; e.g. GeoPandas' "Point Z", or an unknown name)
+    declares nothing, and serving probes the data as for an undeclared
+    upload."""
     from iceberg_geospatial_api_server_spark.geo import functions as G
 
     geom_col, meta = geoparquet_geometry_column(path)
@@ -147,8 +153,9 @@ def read_geoparquet(spark: SparkSession, path: str) -> DataFrame:
         others = [c for c in df.columns if c != geom_col]
         df = df.select(F.col(geom_col).alias("geometry"), *others)
         types, names = meta.get("geometry_types"), list(W._TYPE_NAMES.values())
-        if isinstance(types, list) and types and all(t in names for t in types):
-            df = G.declare_geometry_types(df, sorted(set(types)))
+        if not (isinstance(types, list) and all(t in names for t in types)):
+            types = []
+        df = G.declare_geometry_types(df, sorted(set(types)))
     return df
 
 
@@ -169,48 +176,101 @@ def geoparquet_geometry_column(path: str) -> tuple[str, dict]:
     return geom_col, geo.get("columns", {}).get(geom_col, {})
 
 
-def write_geoparquet(
-    df: DataFrame, path: str, geom_col: str = "geometry", mode: str = "overwrite"
-) -> None:
-    """Write GeoParquet: parquet + standard `geo` metadata (ref
-    main.py:455-469 uses DuckDB COPY; we stamp the metadata with pyarrow
-    after a distributed parquet write). The column's `bbox` and
-    `geometry_types` come from one aggregate."""
+def write_geoparquet(df: DataFrame, path: str) -> None:
+    """Publish `df` at `path` as a served GeoParquet layer: the one write
+    path of every layer the package serves (ref main.py:455-469 uses
+    DuckDB COPY). An existing `path` is replaced once the new layer is
+    built, so `df` may read that layer itself.
+
+    Pay the WKB decode once at ingest, never per query (ref
+    engine.py:232-279 keeps the bbox pre-filter columns in the table). The
+    layer persists `__bbox_*` (`with_bbox`: extent is a footer-stats
+    min/max, bbox filters prune row groups) and `__oid` (`engine.with_oid`
+    in its default order, so requests never rank), each unless `df` has
+    it; the geometry field declares its types (`declare_geometry_types`,
+    kept in the parquet footer, so requests never probe); rows are
+    z-ordered on (`__bbox_xmin`, `__bbox_ymin`) (`sources.zorder`); and
+    every part carries the standard `geo` metadata, stamped with pyarrow
+    on the driver. One aggregate gives the z-order bounds, the extent and
+    the WKB headers. The layer lands in a sibling temp dir and moves onto
+    `path` by an atomic rename; when a concurrent writer's rename lands
+    first, its copy wins."""
+    from iceberg_geospatial_api_server_spark.engine import with_oid
     from iceberg_geospatial_api_server_spark.geo import functions as G
+    from iceberg_geospatial_api_server_spark.sources.zorder import zorder_write
 
-    ext, types = None, []
-    if geom_col in df.columns:
-        row = G.extent(df, geom_col, G.wkb_headers(geom_col).alias("heads")).head(1)
-        if row and row[0]["xmin"] is not None:
-            d = row[0].asDict()
-            ext = [d["xmin"], d["ymin"], d["xmax"], d["ymax"]]
-        if row:
-            types = G.header_types(row[0]["heads"])
+    if "geometry" not in df.columns:
+        raise ValueError(f"no `geometry` column to publish in {df.columns}")
+    parent = os.path.dirname(os.path.abspath(path))
+    os.makedirs(parent, exist_ok=True)
+    if "__bbox_xmin" not in df.columns:
+        df = G.with_bbox(df)
+    df = with_oid(df)
+    xmin, ymin, xmax, ymax, xmin_hi, ymin_hi, heads = df.agg(
+        F.min("__bbox_xmin"), F.min("__bbox_ymin"),
+        F.max("__bbox_xmax"), F.max("__bbox_ymax"),
+        F.max("__bbox_xmin"), F.max("__bbox_ymin"), G.wkb_headers(),
+    ).first()
+    types = G.header_types(heads)
+    df = G.declare_geometry_types(df, types)
+    column = {"encoding": "WKB", "geometry_types": types}
+    if xmin is not None:
+        column["bbox"] = [xmin, ymin, xmax, ymax]
+    geo = json.dumps(
+        {"version": "1.0.0", "primary_column": "geometry",
+         "columns": {"geometry": column}}
+    ).encode()
 
-    df.write.mode(mode).parquet(path)
+    build = tempfile.mkdtemp(prefix=f".{os.path.basename(path)}_", dir=parent)
+    try:
+        bounds = {"__bbox_xmin": (xmin, xmin_hi), "__bbox_ymin": (ymin, ymin_hi)}
+        zorder_write(df, list(bounds), build, n_files=8, bounds=bounds)
+        _stamp_geo(build, geo)
+        # `df` may read the layer at `path` itself (republished in place, or
+        # appended to), so the old layer moves aside only after every job
+        try:
+            os.rename(path, f"{build}.old")
+        except FileNotFoundError:
+            pass
+        try:
+            os.rename(build, path)
+        except OSError:
+            # a concurrent writer's layer landed at `path` meanwhile
+            if not os.path.isdir(path):
+                raise
+    finally:
+        for d in (build, f"{build}.old"):
+            shutil.rmtree(d, ignore_errors=True)
 
-    geo_meta = {
-        "version": "1.0.0",
-        "primary_column": geom_col,
-        "columns": {
-            geom_col: {
-                "encoding": "WKB",
-                "geometry_types": types,
-                **({"bbox": ext} if ext else {}),
-            }
-        },
-    }
+
+def _stamp_geo(path: str, geo: bytes) -> None:
+    """Set the `geo` file metadata of every parquet part under `path`. Each
+    part is rewritten one row group at a time: it keeps Spark's row groups
+    (bbox filters prune on their footer stats), the driver holds one row
+    group, and INT96 timestamps stay INT96, which Spark reads as
+    `timestamp`."""
     import pyarrow.parquet as pq
 
     for fname in os.listdir(path):
         if not fname.endswith(".parquet"):
             continue
-        fpath = os.path.join(path, fname)
-        table = pq.read_table(fpath)
-        meta = dict(table.schema.metadata or {})
-        meta[b"geo"] = json.dumps(geo_meta).encode()
-        pq.write_table(table.replace_schema_metadata(meta), fpath)
-        # the in-place rewrite invalidates Hadoop's checksum sidecar
+        fpath, tmp = os.path.join(path, fname), os.path.join(path, f".{fname}.geo")
+        with pq.ParquetFile(fpath, coerce_int96_timestamp_unit="us") as src:
+            schema = src.schema_arrow
+            int96 = any(
+                src.schema.column(i).physical_type == "INT96"
+                for i in range(len(src.schema))
+            )
+            meta = {**(schema.metadata or {}), b"geo": geo}
+            with pq.ParquetWriter(
+                tmp, schema.with_metadata(meta),
+                use_deprecated_int96_timestamps=int96,
+            ) as out:
+                for i in range(src.num_row_groups):
+                    group = src.read_row_group(i)
+                    out.write_table(group, row_group_size=max(group.num_rows, 1))
+        os.replace(tmp, fpath)
+        # the rewrite invalidates Hadoop's checksum sidecar
         crc = os.path.join(path, f".{fname}.crc")
         if os.path.exists(crc):
             os.unlink(crc)
@@ -227,7 +287,11 @@ def ingest(
     A union keeps the field metadata of its first input only, so the
     result's geometry field is declared afresh: the union of every input's
     declared types when each input declares some, else nothing (an
-    undeclared input may hold any type)."""
+    undeclared input may hold any type). One published layer's `__oid` and
+    `__bbox_*` are not valid in a union, so a union or an append drops
+    them from every input (`catalog.INTERNAL_COLS`); `write_geoparquet`
+    derives them again."""
+    from iceberg_geospatial_api_server_spark.catalog import INTERNAL_COLS
     from iceberg_geospatial_api_server_spark.geo import functions as G
 
     frames = []
@@ -239,12 +303,13 @@ def ingest(
             frames.append(read_geoparquet(spark, p))
         else:
             raise ValueError(f"Unsupported file: {p} (.geojson/.parquet only)")
+    if append_to is not None:
+        frames.insert(0, append_to)
+    if len(frames) > 1:
+        frames = [f.drop(*INTERNAL_COLS) for f in frames]
     out = frames[0]
     for f in frames[1:]:
         out = out.unionByName(f, allowMissingColumns=True)
-    if append_to is not None:
-        out = append_to.unionByName(out, allowMissingColumns=True)
-        frames.append(append_to)
     if "geometry" in out.columns:
         declared = [
             G.declared_geometry_types(f) if "geometry" in f.columns else []

@@ -32,10 +32,11 @@ from pyspark.sql import functions as F
 
 def _quantize(col: Column, mn: float, mx: float, bits: int) -> Column:
     """Scale a numeric column onto the [0, 2^bits) integer grid (linear
-    min/max scaling; constant columns collapse to 0 — harmless, they
-    contribute nothing to ordering anyway)."""
+    min/max scaling; constant, all-null or empty columns (bounds None)
+    collapse to 0 — harmless, they contribute nothing to ordering
+    anyway)."""
     top = (1 << bits) - 1
-    if mx <= mn:
+    if mn is None or mx <= mn:
         return F.lit(0).cast("long")
     scaled = (col.cast("double") - F.lit(float(mn))) / F.lit(float(mx - mn))
     return F.least(

@@ -246,6 +246,84 @@ def test_ingest_declares_only_what_every_input_declares(spark, tmp_path):
     assert declared_geometry_types(ingest.ingest(spark, [pts_pq, pts_pq])) == ["Point"]
 
 
+def test_append_of_published_uploads_renumbers(spark, tmp_path):
+    """Appending a published point upload to a published polygon upload
+    drops both files' persisted OIDs and bboxes: the result numbers its
+    rows 0..n-1, and a polygon filter counts the polygon by its shape."""
+    from iceberg_geospatial_api_server_spark import api
+
+    pts = spark.createDataFrame(
+        [(bytearray(W.encode_point(x, y)), i) for i, (x, y) in enumerate(
+            [(1.5, 2.5), (7.0, 7.0), (30.0, 30.0)])],
+        "geometry binary, k long",
+    )
+    square = [(0.0, 0.0), (10.0, 0.0), (10.0, 10.0), (0.0, 10.0), (0.0, 0.0)]
+    polys = spark.createDataFrame(
+        [(bytearray(W.encode_polygon([square])), 0)], "geometry binary, k long"
+    )
+    pts_pq, polys_pq = str(tmp_path / "pts.parquet"), str(tmp_path / "polys.parquet")
+    ingest.write_geoparquet(pts, pts_pq)
+    ingest.write_geoparquet(polys, polys_pq)
+    df = ingest.ingest(spark, [pts_pq], append_to=ingest.ingest(spark, [polys_pq]))
+
+    ring = [[5, 5], [20, 5], [20, 20], [5, 20], [5, 5]]
+    params = {"f": "json", "geometryType": "esriGeometryPolygon",
+              "geometry": json.dumps({"rings": [ring]})}
+    ids = api.query_layer(df, {"f": "json", "returnIdsOnly": "true"})[0]["objectIds"]
+    assert ids == [0, 1, 2, 3]
+    assert api.query_layer(df, {**params, "returnCountOnly": "true"})[0]["count"] == 2
+
+
+def test_write_geoparquet_rejects_no_geometry_and_publishes_empty(spark, tmp_path):
+    """A frame without a `geometry` column is refused; an empty one is
+    published with no declared type and no `bbox`, and reads back empty."""
+    with pytest.raises(ValueError):
+        ingest.write_geoparquet(spark.range(3), str(tmp_path / "plain.parquet"))
+    out = str(tmp_path / "empty.parquet")
+    ingest.write_geoparquet(spark.createDataFrame([], "geometry binary, k long"), out)
+    assert ingest.geoparquet_geometry_column(out) == (
+        "geometry", {"encoding": "WKB", "geometry_types": []}
+    )
+    assert ingest.read_geoparquet(spark, out).count() == 0
+
+
+def test_republish_in_place_and_append_onto_a_published_layer(spark, tmp_path):
+    """A layer republished onto its own path, or appended to and written
+    back, is read before the old files go: both publishes succeed, and
+    the result numbers every row once. A `timestamp` column survives the
+    `geo` stamp as a Spark-readable timestamp."""
+    import datetime
+
+    import pyarrow.parquet as pq
+
+    P = str(tmp_path / "layer.parquet")
+    ts = datetime.datetime(2024, 5, 6, 7, 8, 9, 123456)
+    pts = spark.createDataFrame(
+        [(bytearray(W.encode_point(float(i), 1.0)), i, ts) for i in range(3)],
+        "geometry binary, k long, ts timestamp",
+    )
+    ingest.write_geoparquet(pts, P)
+    rows = sorted(ingest.read_geoparquet(spark, P).select("__oid", "k", "ts").collect())
+    assert [r["__oid"] for r in rows] == [0, 1, 2] and {r["ts"] for r in rows} == {ts}
+    ingest.write_geoparquet(ingest.read_geoparquet(spark, P), P)
+    got = ingest.read_geoparquet(spark, P)
+    assert sorted(got.select("__oid", "k", "ts").collect()) == rows
+    # as Spark wrote it: INT96, an instant in any session time zone
+    part = next(f for f in os.listdir(P) if f.endswith(".parquet"))
+    schema = pq.ParquetFile(os.path.join(P, part)).schema
+    assert schema.column(schema.names.index("ts")).physical_type == "INT96"
+
+    new = str(tmp_path / "new.parquet")
+    ingest.write_geoparquet(pts.limit(2), new)
+    ingest.write_geoparquet(
+        ingest.ingest(spark, [new], append_to=ingest.read_geoparquet(spark, P)), P
+    )
+    got = ingest.read_geoparquet(spark, P)
+    assert sorted(r["__oid"] for r in got.collect()) == list(range(5))
+    assert sorted(r["k"] for r in got.collect()) == [0, 0, 1, 1, 2]
+    assert [f for f in os.listdir(tmp_path) if f.startswith(".")] == []
+
+
 def test_ingest_union_and_append(spark, geojson_file):
     df1 = ingest.ingest(spark, [geojson_file])
     df2 = ingest.ingest(spark, [geojson_file], append_to=df1)

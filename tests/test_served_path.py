@@ -173,17 +173,64 @@ def test_served_requests_run_one_spark_job(spark, layer, points):
         finally:
             sc.setJobGroup("served_jobs_done", "")
         assert len(jobs) <= 1, (kind, len(jobs))
-        # no vacuous answers
-        if kind.startswith("tile"):
-            assert decode_tile(payload)[0]["features"], kind
-        elif kind == "page_pbf_bbox":
-            assert _pbf_page(payload)[0] > 0
-        elif kind in ("count_where_polygon", "extent_bbox"):
-            assert payload["count"] > 0, kind
-        elif kind == "ids_bbox":
-            assert payload["objectIds"] == sorted(payload["objectIds"]) != []
-        else:
-            assert payload["features"], kind
+        _assert_answered(kind, payload)
+
+
+def _assert_answered(kind, payload):
+    """A `_map_requests` payload of `kind` is not vacuous."""
+    if kind.startswith("tile"):
+        assert decode_tile(payload)[0]["features"], kind
+    elif kind == "page_pbf_bbox":
+        assert _pbf_page(payload)[0] > 0
+    elif kind in ("count_where_polygon", "extent_bbox"):
+        assert payload["count"] > 0, kind
+    elif kind == "ids_bbox":
+        assert payload["objectIds"] == sorted(payload["objectIds"]) != []
+    else:
+        assert payload["features"], kind
+
+
+def test_published_upload_serves_like_the_layer(spark, sf_dir, layer, points, tmp_path):
+    """A point GeoParquet upload published by `write_geoparquet` and read
+    once by `read_geoparquet` carries persisted __oid and __bbox_*:
+    `engine.with_oid` runs no job, a bbox page, a polygon count, ids-only
+    and a tile each run at most one, and a polygon page's plan has no
+    Python node. The upload and the layer number rows as `with_oid` does
+    over `with_bbox` of the source layer."""
+    from iceberg_geospatial_api_server_spark.engine import query_features, with_oid
+    from iceberg_geospatial_api_server_spark.geo.functions import with_bbox
+    from iceberg_geospatial_api_server_spark.sources import ingest
+
+    src = _source_layer(spark, sf_dir).select(
+        "geometry", "l_orderkey", "l_linenumber", "l_quantity"
+    )
+    out = str(tmp_path / "upload.parquet")
+    ingest.write_geoparquet(src, out)
+    df = ingest.read_geoparquet(spark, out)
+
+    ranked, jobs = _jobs_of(spark, "upload_with_oid", lambda: with_oid(df))
+    assert ranked is df and jobs == []
+    reqs = _map_requests(points, len(points) // 2)
+    for kind in ("page_pbf_bbox", "count_where_polygon", "ids_bbox", "tile_z9"):
+        _serve(df, reqs[kind])  # warm
+        payload, jobs = _jobs_of(
+            spark, f"upload_{kind}", lambda: _serve(df, reqs[kind])
+        )
+        assert len(jobs) <= 1, (kind, len(jobs))
+        _assert_answered(kind, payload)
+
+    polygon = {**reqs["count_where_polygon"], "returnCountOnly": "false"}
+    page = query_features(df, api.parse_geoservices_params(polygon))
+    assert "ArrowEvalPython" not in page.features._jdf.queryExecution().executedPlan().toString()
+
+    def numbered(frame):
+        return sorted(
+            tuple(r) for r in frame.select("__oid", "l_orderkey", "l_linenumber").collect()
+        )
+
+    want = numbered(with_oid(with_bbox(src)))
+    assert numbered(df) == want
+    assert numbered(layer()) == want
 
 
 def _compiles(spark) -> int:

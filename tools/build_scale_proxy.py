@@ -1,8 +1,9 @@
 """Build a ~sf1 proxy (SCALE_r04.json provenance — run me, then tools/scale_measure.py): 10x sf0.1 with referentially-consistent key
 offsets per replica (joins stay valid; dims and facts grow together).
 Writes /tmp/sfx/*.parquet. Timestamps/payloads untouched."""
+import os
 import sys
-sys.path.insert(0, '/root/repo')
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F
 from iceberg_geospatial_api_server_spark.session import get_spark
 

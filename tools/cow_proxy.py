@@ -22,12 +22,13 @@ time, not recomputed from the fact table). Timed sections, best-of-2:
   buckets + manifest commit.
 """
 import json
+import os
 import shutil
 import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 

@@ -12,7 +12,7 @@ Canonicalization mirrors the driver's pandas-based one (r3 VERDICT):
 """
 import sys, math, time, os
 from decimal import Decimal
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import SparkSession
 
 spark = (SparkSession.builder.master(os.environ.get("DRIVE_MASTER", "local[8]"))

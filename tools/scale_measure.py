@@ -4,8 +4,8 @@ Build the proxy first with tools/build_scale_proxy.py; results are the
 SCALE_r04.json artifact discussed in SURVEY §6. Warms BOTH pandas-UDF
 execution kinds before timing (see the geo_pip warmup artifact note).
 """
-import json, sys, time
-sys.path.insert(0, '/root/repo')
+import json, os, sys, time
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from iceberg_geospatial_api_server_spark.session import get_spark
 
 QUERIES = [
